@@ -469,15 +469,18 @@ def ngram_jaccard_drop_stats(
     docs: DataFrame,
     n: int = 3,
     max_shingle_df: int = 1000,
-    id_unique: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
+    id_unique: bool = True,
 ) -> DataFrame:
     """One row (n_dropped_groups, n_dropped_rows): how many shingles (and
     (id, shingle) rows) the ``max_shingle_df`` guard in
-    ``ngram_jaccard_pairs`` discarded."""
+    ``ngram_jaccard_pairs`` discarded. ``id_unique=False`` counts the
+    distinct (id, shingle) rows of a non-unique id column, as
+    ``shingles_df`` does."""
     return group_drop_stats(
-        shingles_df(docs, n, id_col, text_col), ["shingle"], max_shingle_df
+        shingles_df(docs, n, id_col, text_col, id_unique=id_unique),
+        ["shingle"], max_shingle_df,
     )
 
 

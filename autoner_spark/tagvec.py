@@ -12,10 +12,17 @@ Python token at a time:
 * the trie walk runs breadth-parallel over every start position of every
   turn in the batch, one NumPy ``searchsorted`` per depth level against a
   sorted ``state*V + token`` transition-key table;
-* the DP runs in lockstep across all turns of the batch (turns sorted by
-  length so each position-column touches only still-active turns); scores
-  are float64 with the exact operation order of the scalar loop, so f[] is
-  bit-identical to ``tag_tokens_compiled``'s;
+* the DP runs in lockstep over the batch's match-connected runs: the
+  DP looks back only through matches, so it splits exactly at every
+  token boundary no match crosses, and each maximal run of crossing
+  matches is one DP row (gaps, "\\n" and unmatched turns take no cells).
+  Rows are sorted by length so each position-column touches only
+  still-active rows, and the tables are ragged (column c stores only the
+  rows of length >= c). Scores are float64 with the exact operation order
+  of the scalar loop, so f[] is bit-identical to
+  ``tag_tokens_compiled``'s; cutting at runs keeps that only when every
+  score delta is an integer (e.g. the default weight=1.0), so any other
+  weight cuts at turn boundaries alone — one row per turn with a match;
 * traceback runs as vectorized pointer-chasing rounds; surfaces are
   re-assembled with ``pyarrow.compute.binary_join`` over token slices (no
   per-mention Python string work).
@@ -24,9 +31,10 @@ Parity with the scalar path is pinned by tests/test_tagvec_parity.py (and
 transitively by the oracle/binary parity suite, which runs the Spark tagger
 through this engine).
 
-Scale note: everything here is per-batch, executor-side, allocation bounded
-by the Arrow batch size; the only task-lifetime state is the compiled
-transition table (built once per broadcast value).
+Scale note: everything here is per-batch and executor-side, and memory is
+O(tokens in the batch): the DP tables hold one cell per token of a DP row
+plus one per row, never rows x longest turn. The only task-lifetime state
+is the compiled transition table (built once per broadcast value).
 """
 
 from __future__ import annotations
@@ -251,11 +259,11 @@ def _dp_segments(
     order: np.ndarray,
     weight: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Lockstep DP + traceback over all turns (rows already sorted by
+    """Lockstep DP + traceback over all DP rows (rows already sorted by
     descending length via ``order``). Returns ENTITY segments as
     (sorted_row, begin, end, tsid) arrays (unordered).
 
-    Column pass: cell c of every active turn holds the max over its
+    Column pass: cell c of every active row holds the max over its
     candidates — matches of depth d (value f[c-d] + delta_d) plus the
     skip from c-1 — folded with one scatter-max; the traceback choice is
     the chronologically FIRST max-achiever of the scalar loop (iteration
@@ -263,6 +271,11 @@ def _dp_segments(
     precedes the d=1 match), reproduced by writing tie-achievers in
     d-ascending order with the skip>=d1 guard — so values AND traceback
     choices are bit-identical to ``tag_tokens_compiled``.
+
+    Tables are ragged and column-major: column c holds only the rows of
+    length >= c (a prefix, rows being sorted by descending length), so
+    cell (r, c) lives at ``colstart[c] + r`` and the three tables hold
+    sum(lengths) + rows cells instead of rows x longest row.
     """
     n = len(order)
     lens = counts[order]
@@ -271,10 +284,13 @@ def _dp_segments(
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy(), e.copy()
 
-    # active rows at column c: lens >= c (sorted desc -> a prefix);
-    # k_col[c-1] = #rows with len >= c
+    # rows stored in column c: lens >= c (sorted desc -> a prefix); all n
+    # rows hold column 0
     asc = lens[::-1]
-    k_col = n - np.searchsorted(asc, np.arange(1, maxlen + 1), side="left")
+    width = np.concatenate((
+        [n], n - np.searchsorted(asc, np.arange(1, maxlen + 1), side="left")
+    ))
+    colstart = np.concatenate(([0], np.cumsum(width)))
 
     D = int(m_d.max()) if m_d.size else 1
     if all(
@@ -290,16 +306,19 @@ def _dp_segments(
             (weight * m_d) * m_d,
         )
 
-    # group matches by (end column, depth ASC) — one narrow int32 key
-    # argsort (radix path); end and d are recovered from the key, and the
-    # traceback carries the MATCH INDEX so kind/ts are never permuted.
-    # The depth field is sized from D (a fixed 3-bit field silently
-    # corrupted groups for dictionaries with >7-token surfaces — BC5CDR).
+    # group matches by (end column, depth ASC) — one packed key argsort;
+    # end and d are recovered from the key, and the traceback carries
+    # the MATCH INDEX so kind/ts are never permuted. The depth field is
+    # sized from D (a fixed 3-bit field silently corrupted groups for
+    # dictionaries with >7-token surfaces — BC5CDR). The key is int64,
+    # as a row can be a whole turn of any length, narrowed to int16 when
+    # every key fits: numpy's stable argsort is a radix sort for 16-bit
+    # keys, and match-connected runs nearly always fit.
     shift = max(D, 1).bit_length()
-    mult = np.int64(1 << shift)
-    mask = np.int32((1 << shift) - 1)
-    m_end = m_i + m_d
-    key = (m_end * mult + m_d).astype(np.int32)
+    mask = (1 << shift) - 1
+    key = (m_i + m_d) * (1 << shift) + m_d
+    if (maxlen + 1) << shift <= np.iinfo(np.int16).max:
+        key = key.astype(np.int16)
     g = np.argsort(key, kind="stable")
     g_key = key[g]
     g_d = (g_key & mask).astype(np.int64)
@@ -317,30 +336,28 @@ def _dp_segments(
     col_ptr = 0
     ngroups = len(starts)
 
-    f = np.empty((n, maxlen + 1), order="F")
-    f[:, 0] = 0.0
+    ncells = int(colstart[-1])
+    f = np.empty(ncells)
+    f[:n] = 0.0
     # per-cell winner: tb_d = 0 for the skip / d for a match; tb_idx =
     # the winning MATCH INDEX, through which kind/ts resolve at
     # traceback time (no per-match kind/ts permutation in the setup).
     # Narrow dtypes (depth fits int8, match index int32) keep the three
     # per-cell tables at 13 bytes/cell instead of 24; the traceback
     # widens only its small gathered slices.
-    tb_d = np.empty(
-        (n, maxlen + 1),
-        dtype=np.int8 if D <= 127 else np.int16,
-        order="F",
-    )
-    tb_idx = np.empty((n, maxlen + 1), dtype=np.int32, order="F")
+    tb_d = np.empty(ncells, dtype=np.int8 if D <= 127 else np.int16)
+    tb_idx = np.empty(ncells, dtype=np.int32)
 
-    f_flat = f.T.reshape(-1)  # view over f; flat index = col * n + row
     for c in range(1, maxlen + 1):
-        k = int(k_col[c - 1])
-        fcol = f[:, c]
-        selcol = tb_d[:, c]
-        skipv = f[:, c - 1]
+        k = int(width[c])
+        base = int(colstart[c])
+        prev = int(colstart[c - 1])
+        fcol = f[base:base + k]
+        selcol = tb_d[base:base + k]
+        skipv = f[prev:prev + k]
         # baseline: the skip candidate
-        fcol[:k] = skipv[:k]
-        selcol[:k] = 0
+        fcol[:] = skipv
+        selcol[:] = 0
         lo = col_ptr
         while col_ptr < ngroups and grp_end[col_ptr] == c:
             col_ptr += 1
@@ -351,7 +368,7 @@ def _dp_segments(
         # (max over skip and all candidates)
         sl = slice(int(starts[lo]), int(ends[col_ptr - 1]))
         rr = g_row[sl]
-        s = f_flat[(c - g_d[sl]) * n + rr] + g_delta[sl]
+        s = f[colstart[c - g_d[sl]] + rr] + g_delta[sl]
         np.maximum.at(fcol, rr, s)
         # traceback choice: the chronologically FIRST max-achiever wins
         # (d descending, then skip, then d=1). Writing tie-achievers in
@@ -370,7 +387,7 @@ def _dp_segments(
             if m.any():
                 ru = g_row[gsl][m]
                 selcol[ru] = d
-                tb_idx[ru, c] = g[gsl][m]
+                tb_idx[base + ru] = g[gsl][m]
 
     # vectorized traceback: pointer-chase c -> c - step, emitting ENTITY
     # segments along the way
@@ -382,19 +399,18 @@ def _dp_segments(
     rows = np.flatnonzero(j > 0)
     while rows.size:
         jr = j[rows]
-        dsel = tb_d[rows, jr].astype(np.int64)
+        cell = colstart[jr] + rows
+        dsel = tb_d[cell].astype(np.int64)
         step = np.maximum(dsel, 1)
         ii = jr - step
         em = np.flatnonzero(dsel > 0)
         if em.size:
-            er = rows[em]
-            je = jr[em]
-            idxs = tb_idx[er, je]
+            idxs = tb_idx[cell[em]]
             ent = m_kind[idxs] == _KIND_ENTITY
             if ent.any():
-                seg_r.append(er[ent])
+                seg_r.append(rows[em][ent])
                 seg_b.append(ii[em][ent])
-                seg_e.append(je[ent])
+                seg_e.append(jr[em][ent])
                 seg_t.append(m_ts[idxs[ent]])
         j[rows] = ii
         rows = rows[ii > 0]
@@ -457,35 +473,61 @@ def tag_record_batch(
         return empty
 
     t_of = np.repeat(np.arange(nrows, dtype=np.int64), counts)
-    m_t = t_of[m_sp]
-    m_i = m_sp - offs[m_t]
 
-    # the DP only needs turns that have at least one match (the others
-    # emit nothing — the all-skip segmentation); on sparse real corpora
-    # this collapses the DP to a fraction of the batch
-    has_match = np.zeros(nrows, dtype=bool)
-    has_match[m_t] = True
-    active = np.flatnonzero(has_match)
-    counts_a = counts[active]
-    turn_of_active = active
-    row_in_active = np.full(nrows, -1, dtype=np.int64)
-    row_in_active[active] = np.arange(active.size, dtype=np.int64)
-    m_t_a = row_in_active[m_t]
+    # Cut the batch into DP rows. The DP looks back only through matches,
+    # so a boundary b that no match strictly crosses (sp < b < sp + d)
+    # splits it exactly: f[b + x] = f[b] + g[x], where g is the DP of the
+    # part after b alone — exact in float64 whenever every delta is an
+    # integer and every sum stays below 2**53 (|f| is at most
+    # D * P * max(1, |weight|)). Then the cut intervals are the matches,
+    # and each maximal match-connected run is one row ("\n" and turn
+    # ends are always cuts, gaps and unmatched turns take no cells).
+    # Otherwise (a non-integral filtered weight) they are the turns with
+    # a match: one row per such turn.
+    D = int(m_d.max())
+    if all(float((weight * d) * d).is_integer() for d in range(1, D + 1)) \
+            and P * D * max(1.0, abs(weight)) < 2.0 ** 53:
+        lo, hi = m_sp, m_sp + m_d
+    else:
+        has_match = np.zeros(nrows, dtype=bool)
+        has_match[t_of[m_sp]] = True
+        active = np.flatnonzero(has_match)
+        lo, hi = offs[active], offs[active + 1]
+    # boundary t (before token t) is crossed when +1 over [lo + 1, hi)
+    # covers it; a row starts where an interval starts at an uncrossed
+    # boundary and stops where one ends at one
+    ends_n = np.bincount(hi, minlength=P + 1)
+    crossed = np.cumsum(np.bincount(lo + 1, minlength=P + 1) - ends_n) > 0
+    is_start = np.zeros(P + 1, dtype=bool)
+    is_start[lo] = True
+    is_start &= ~crossed
+    r_start = np.flatnonzero(is_start)
+    r_stop = np.flatnonzero((ends_n > 0) & ~crossed)
+    r_len = r_stop - r_start
+    m_row = np.cumsum(is_start)[m_sp] - 1
+    m_i = m_sp - r_start[m_row]
 
-    order = np.argsort(-counts_a, kind="stable")
-    row_of_turn = np.empty(active.size, dtype=np.int64)
-    row_of_turn[order] = np.arange(active.size, dtype=np.int64)
+    # rows by descending length; ties in any order (rows are independent
+    # and the output is re-sorted by turn and begin below)
+    order = np.argsort(-r_len)
+    row_of_run = np.empty(r_len.size, dtype=np.int64)
+    row_of_run[order] = np.arange(r_len.size, dtype=np.int64)
 
     kindv = vec["kind"][m_st].astype(np.int8, copy=False)
     tsv = vec["tsid"][m_st]
     s_r, s_b, s_e, s_t = _dp_segments(
-        counts_a, row_of_turn[m_t_a], m_i, m_d, kindv, tsv, order, weight
+        r_len, row_of_run[m_row], m_i, m_d, kindv, tsv, order, weight
     )
     if s_r.size == 0:
         return empty
 
-    # back to original turn indices; apply the separator-skip rule
-    t_orig = turn_of_active[order[s_r]]
+    # back to original turns and turn-local positions; apply the
+    # separator-skip rule
+    run_start = r_start[order[s_r]]
+    t_orig = t_of[run_start]
+    run_in_turn = run_start - offs[t_orig]
+    s_b = s_b + run_in_turn
+    s_e = s_e + run_in_turn
     flat_start = offs[t_orig] + s_b
     single = (s_e - s_b) == 1
     if single.any():
@@ -503,8 +545,9 @@ def tag_record_batch(
             if t_orig.size == 0:
                 return empty
 
-    # emit in the scalar order: batch row order, then ascending begin
-    ordm = np.lexsort((s_b, t_orig))
+    # emit in the scalar order: batch row order, then ascending begin —
+    # the order of the (unique) flat start positions
+    ordm = np.argsort(flat_start)
     t_orig = t_orig[ordm]
     s_b = s_b[ordm]
     s_e = s_e[ordm]

@@ -100,14 +100,19 @@ def triple_pair_array() -> "F.Column":
     has_type entry per comma-joined type plus one mentioned_in entry —
     shared by ``assemble_triples`` and the exact-match twin in
     queries.q_kg_triples_exact so the single-pass emission stays in one
-    place. Requires non-null entity_type/conv_id/turn_idx columns (the
-    mention contract)."""
+    place. Requires non-null conv_id/turn_idx columns (the mention
+    contract). A NULL entity_type yields no has_type entry but still its
+    mentioned_in entry (``F.concat`` with a NULL operand is NULL, which
+    the explode would drop whole)."""
     return F.concat(
-        F.transform(
-            F.split(F.col("entity_type"), ","),
-            lambda t: F.struct(
-                F.lit("has_type").alias("pred"), t.alias("obj")
+        F.coalesce(
+            F.transform(
+                F.split(F.col("entity_type"), ","),
+                lambda t: F.struct(
+                    F.lit("has_type").alias("pred"), t.alias("obj")
+                ),
             ),
+            F.array().cast("array<struct<pred:string,obj:string>>"),
         ),
         F.array(
             F.struct(

@@ -371,6 +371,23 @@ def test_guard_drop_stats_nonzero_on_skew(spark):
     assert zst.n_dropped_groups == 0 and zst.n_dropped_rows == 0
 
 
+def test_jaccard_drop_stats_honours_non_unique_id(spark):
+    """With a non-unique id column, id_unique=False counts each
+    (id, shingle) once: three rows of doc 1 sharing one trigram are one
+    member of that shingle's group, not three."""
+    from autoner_spark.dedup import ngram_jaccard_drop_stats
+
+    docs = spark.createDataFrame(
+        [(1, "common boiler plate")] * 3 + [(2, "common boiler plate")],
+        "doc_id long, text string",
+    )
+    per_row = ngram_jaccard_drop_stats(docs, n=3, max_shingle_df=2)
+    per_id = ngram_jaccard_drop_stats(docs, n=3, max_shingle_df=2,
+                                      id_unique=False)
+    assert tuple(per_row.collect()[0]) == (1, 4)
+    assert tuple(per_id.collect()[0]) == (0, 0)
+
+
 def test_ivf_multiprobe_improves_boundary_recall(spark, emb):
     """nprobe>1 must strictly improve recall@k vs nprobe=1 on the isotropic
     fixture (queries near cluster boundaries lose their true neighbors when

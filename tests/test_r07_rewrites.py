@@ -152,3 +152,24 @@ def test_assemble_triples_single_pass_multiset(spark, n_types):
             want.append((subj, "has_type", t, conv, turn))
         want.append((subj, "mentioned_in", f"{conv}#{turn}", conv, turn))
     assert rows == sorted(want)
+
+
+def test_assemble_triples_null_type_keeps_mentioned_in(spark):
+    """A mention whose entity_type is NULL emits no has_type triple but
+    still its mentioned_in triple."""
+    from autoner_spark.triples import assemble_triples
+
+    linked = spark.createDataFrame(
+        [("c0", 0, "a", None, "a"), ("c0", 1, "b", "T0", "b")],
+        "conv_id string, turn_idx int, surface string, "
+        "entity_type string, surface_norm string",
+    )
+    entities = spark.createDataFrame(
+        [("a", "ent:a")], "surface_norm string, entity_id string"
+    )
+    rows = sorted(map(tuple, assemble_triples(linked, entities).collect()))
+    assert rows == sorted([
+        ("ent:a", "mentioned_in", "c0#0", "c0", 0),
+        ("ent:b", "has_type", "T0", "c0", 1),
+        ("ent:b", "mentioned_in", "c0#1", "c0", 1),
+    ])

@@ -4,6 +4,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from autoner_spark import synth
 from autoner_spark.dictionary import build_trie
 from autoner_spark.labels import label_transcripts, write_ck
@@ -52,20 +54,34 @@ def test_parse_ck_unknown_and_gold_variants():
     assert s[1]["boundary"] == [1, -1] and s[1]["safe"] == [True, True]
 
 
+IOBES_LINES = [
+    "EU NNP B-ORG",  # actually S- in strict IOBES; exercise branches:
+    "rejects VBZ O",
+    "German JJ S-MISC",
+    "call NN O",
+    "",
+    "Peter NNP B-PER",
+    "Blackburn NNP E-PER",
+    "",
+    "BRUSSELS NNP S-LOC",
+    "1996-08-22 CD O",
+]
+
+
+def _ck_text(misc_label):
+    return (
+        "<s> O None\nEU I ORG\nrejects I None\n"
+        f"German I {misc_label}\ncall I None\n<eof> I None\n\n"
+        "<s> O None\nPeter I PER\nBlackburn O PER\n<eof> I None\n\n"
+        "<s> O None\nBRUSSELS I LOC\n1996-08-22 I None\n<eof> I None\n"
+    )
+
+
+@pytest.mark.skipif(not REF_SCRIPT.exists(),
+                    reason="reference bioes_chunking.py not available")
 def test_iobes_to_ck_matches_reference_script(tmp_path):
-    lines = [
-        "EU NNP B-ORG",  # actually S- in strict IOBES; exercise branches:
-        "rejects VBZ O",
-        "German JJ S-MISC",
-        "call NN O",
-        "",
-        "Peter NNP B-PER",
-        "Blackburn NNP E-PER",
-        "",
-        "BRUSSELS NNP S-LOC",
-        "1996-08-22 CD O",
-    ]
-    (tmp_path / "in.iobes").write_text("".join(ln + "\n" for ln in lines))
+    (tmp_path / "in.iobes").write_text(
+        "".join(ln + "\n" for ln in IOBES_LINES))
     for flag in ([], ["--ignore_misc"]):
         ref_out = tmp_path / f"ref{'_m' if flag else ''}.ck"
         subprocess.run(
@@ -73,5 +89,17 @@ def test_iobes_to_ck_matches_reference_script(tmp_path):
              str(tmp_path / "in.iobes"), "--output", str(ref_out), *flag],
             check=True, capture_output=True,
         )
-        ours = iobes_to_ck(lines, ignore_misc=bool(flag))
+        ours = iobes_to_ck(IOBES_LINES, ignore_misc=bool(flag))
         assert ours == ref_out.read_text(), f"flag={flag}"
+
+
+@pytest.mark.parametrize("ignore_misc,misc_label",
+                         [(False, "MISC"), (True, "None")])
+def test_iobes_to_ck_pinned_text(ignore_misc, misc_label):
+    """The reference script's .ck output for IOBES_LINES, pinned as a
+    literal so the converter stays checked where the script is absent:
+    the first token of a sentence is always 'I'; E- continues ('O');
+    --ignore_misc turns MISC into None; sentences close with
+    '<eof> I None' and a blank line, the last one without it."""
+    assert iobes_to_ck(IOBES_LINES, ignore_misc=ignore_misc) == _ck_text(
+        misc_label)

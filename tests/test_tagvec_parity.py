@@ -5,15 +5,20 @@ emission order — on the synthetic corpus (both dictionary profiles), on
 adversarial edge inputs, and on random token soup, for entity and filtered
 weights. Spark-level parity vs the oracle is covered by
 tests/test_tagger_spark.py and tests/test_bc5cdr.py, which now route
-through this engine."""
+through this engine. Turns of 1k to 100k tokens, alone and inside a batch
+of short turns, are checked against ``oracle.tag_turn`` directly, and the
+batch memory they take is bounded."""
 
+import functools
 import random
+import tracemalloc
 
 import pyarrow as pa
 import pytest
 
 from autoner_spark import synth
 from autoner_spark.dictionary import build_trie
+from autoner_spark.oracle import tag_turn
 from autoner_spark.tagger import TOKENIZERS, compile_trie, tag_tokens_compiled
 from autoner_spark.tagvec import compile_vec, tag_record_batch
 
@@ -174,3 +179,80 @@ def test_parity_deep_surfaces(force_sparse):
     b = vec_tag(rows, vec, 1.0)
     assert a == b
     assert any(m[3] - m[2] >= 9 for m in a), "deep surfaces must match"
+
+
+# ---------------------------------------------------------------------------
+# long turns: parity with the oracle and bounded memory
+# ---------------------------------------------------------------------------
+
+
+@functools.lru_cache(maxsize=None)
+def _bench_kb():
+    trie = build_trie(synth.bench_dict_spec())
+    return trie, compile_vec(compile_trie(trie))
+
+
+def _long_row(n_tok):
+    """One tool-output turn of exactly ``n_tok`` synth tokens."""
+    row = synth.turn_row(90_000, 0, min_frags=n_tok, rng_frags=1)
+    text = " ".join(row["text"].split(" ")[:n_tok])
+    return {"conv_id": "long", "turn_idx": n_tok, "text": text}
+
+
+@functools.lru_cache(maxsize=None)
+def _short_rows():
+    return tuple(
+        {"conv_id": f"s{c}", "turn_idx": 0,
+         "text": synth.turn_row(c, 0, min_frags=12, rng_frags=30)["text"]}
+        for c in range(2000)
+    )
+
+
+def _mixed_rows(n_tok):
+    rows = list(_short_rows())
+    rows.insert(len(rows) // 2, _long_row(n_tok))
+    return rows
+
+
+@functools.lru_cache(maxsize=None)
+def _oracle_row(conv_id, turn_idx, text, weight):
+    trie = _bench_kb()[0]
+    return tuple(
+        (conv_id, turn_idx, m.begin_tok, m.end_tok, m.surface, m.entity_type)
+        for m in tag_turn([t for t in text.split(" ") if t], trie, weight)
+    )
+
+
+def oracle_tag(rows, weight):
+    return [m for r in rows
+            for m in _oracle_row(r["conv_id"], r["turn_idx"], r["text"],
+                                 weight)]
+
+
+@pytest.mark.parametrize("mixed", [False, True], ids=["alone", "mixed"])
+@pytest.mark.parametrize("weight", [1.0, 0.7])
+@pytest.mark.parametrize("n_tok", [1_000, 20_000, 100_000])
+def test_long_turn_parity_with_oracle(n_tok, weight, mixed):
+    """A long turn, alone or inside 2,000 short turns, tags exactly as
+    ``oracle.tag_turn`` at the integral weight (DP rows are the
+    match-connected runs) and at a non-integral one (rows are whole
+    turns)."""
+    rows = _mixed_rows(n_tok) if mixed else [_long_row(n_tok)]
+    got = vec_tag(rows, _bench_kb()[1], weight)
+    assert got == oracle_tag(rows, weight)
+    assert any(m[0] == "long" for m in got)
+
+
+def test_long_turn_batch_memory_is_bounded():
+    """A 20k-token turn inside 2,000 short turns must not size the DP
+    tables by rows x longest turn (about 520 MB of tables); the batch
+    stays within 32 MB of traced allocations."""
+    batch_rows = _mixed_rows(20_000)
+    vec = _bench_kb()[1]
+    tracemalloc.start()
+    try:
+        vec_tag(batch_rows, vec, 1.0)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 * 2**20, f"peak traced memory {peak / 2**20:.0f} MiB"
