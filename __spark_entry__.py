@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship pipeline: derive the transcripts table
 (BASELINE.json input_hint shape) from sf0.001 documents, run the distributed
 distant-supervision tagger (broadcast trie + per-turn DP inside Arrow UDFs),
-entity-link, canonicalize via connected components, and return the
+entity-link, key each entity by its normalized surface, and return the
 (subj, pred, obj) triples DataFrame.
 
 ``queries()`` / ``oracle_sql()`` expose each implemented operator with its

@@ -1,8 +1,14 @@
 """Connected-components canonicalization (DataFrame-native, no GraphFrames).
 
-The north-star design canonicalizes detected mentions via connected
-components over a surface-equivalence graph. GraphFrames is not available in
-this environment, so CC is implemented as an iterative **hash-min label
+CC serves the queries whose edges do merge nodes: the shared-token
+surface graph (``queries.surface_components_df``) and near-duplicate
+clustering (``dedup.cluster_victims_from_pairs``). The main chain does not
+run it: ``triples.build_kg``'s entity id is ``'ent:' || surface_norm``,
+because every edge ``triples.link_mentions`` can produce (a mention's norm
+to the norm of the dictionary surface joined ON that norm) is a self-loop,
+so its components are single nodes (``triples.canonical_entities`` keeps
+the CC form as the reference). GraphFrames is not available in this
+environment, so CC is implemented as an iterative **hash-min label
 propagation** over DataFrames:
 
     label(v) <- min(label(v), min over neighbors u of label(u))

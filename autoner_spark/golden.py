@@ -112,13 +112,16 @@ def golden_markup_mentions(turns, trie: TrieKB) -> list[tuple]:
 def golden_triples(turns, trie: TrieKB) -> list[tuple]:
     """q_kg_triples_dp twin: oracle mentions -> link -> CC canonicalization
     -> (subj, pred, obj) triples, replaying triples.build_kg relationally in
-    Python (same min-label union-find as canonicalize._union_find_labels)."""
+    Python (same min-label union-find as canonicalize._union_find_labels).
+    build_kg skips the CC because every edge here is a self-loop; this
+    replay keeps it, so the golden table checks that shortcut."""
     from .queries import kg_dict_spec
 
     mentions = golden_tag_mentions(turns, trie)
 
     # dims: (surface_norm -> dict_surface), exploded-type table deduped —
-    # mirrors triples.dict_surfaces_df + the distinct() in link_mentions
+    # mirrors triples.dict_links_df (dict_surfaces_df + the distinct() in
+    # link_mentions)
     dims: dict[str, set[str]] = {}
     for _type_field, surface in kg_dict_spec().core:
         dims.setdefault(ascii_lower(surface), set()).add(surface)

@@ -208,8 +208,12 @@ def tag_transcripts(
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, text, ...) -> mentions DataFrame.
 
-    One narrow mapInPandas stage over Arrow batches; the compiled trie is
-    broadcast. Column pruning: only (conv_id, turn_idx, text) plus any
+    One narrow stage over Arrow batches; the compiled trie is broadcast.
+    The default (whitespace tokens, no passthrough) runs the vectorized
+    ``tagvec`` engine in a ``mapInArrow``; the ``charclass`` tokenizer
+    runs the scalar tagger in a ``mapInArrow``, and passthrough columns
+    the scalar tagger in a ``mapInPandas``. Column pruning: only
+    (conv_id, turn_idx, text) plus any
     ``passthrough`` columns are read, so a parquet/Iceberg scan prunes the
     rest at the source. ``passthrough`` columns (e.g. ``ts`` for streaming
     watermarks) are copied onto each emitted mention. Works on both batch

@@ -1,16 +1,19 @@
 """Entity linking + canonicalization + (subj, pred, obj) triple assembly.
 
 Pipeline position (SURVEY.md §3.4): mentions (from the distributed tagger)
--> link each mention to the dictionary's canonical types -> canonicalize
-surface variants into entity ids via connected components -> materialize
-triples. Replaces the reference's span-TSV sink (test_partial_ner.py:99-109)
-with graph tables.
+-> link each mention to the dictionary's canonical surfaces -> entity ids
+-> materialize triples. Replaces the reference's span-TSV sink
+(test_partial_ner.py:99-109) with graph tables.
 
 Spark-first choices:
 * the dictionary is tiny next to the corpus -> canonical-surface mapping is
   a **broadcast** join (never a shuffle of the mention stream);
-* canonical entity ids are defined order-free (min normalized surface of the
-  connected component) so results are independent of partitioning — no
+* the entity id is ``'ent:' || surface_norm``, with no connected
+  components: every edge ``link_mentions`` can produce is a self-loop (see
+  ``kg_from_mentions``), so ``build_kg`` is one lazy pass with nothing
+  cached. CC stays for queries whose edges merge nodes
+  (``queries.surface_components_df``, ``dedup.cluster_victims_from_pairs``);
+* ids are order-free, so results are independent of partitioning — no
   monotonically_increasing_id anywhere;
 * has_type triples follow the trie's type-SET semantics: one triple per
   type in the comma-joined set (SURVEY.md §7.3 decision), exploded JVM-side.
@@ -48,6 +51,20 @@ def dict_surfaces_df(spark, spec: DictionarySpec) -> DataFrame:
     )
 
 
+def dict_links_df(spark, spec: DictionarySpec) -> DataFrame:
+    """The distinct (surface_norm, dict_surface) pairs of dict_core — what
+    ``link_mentions`` derives from ``dict_surfaces_df`` — deduplicated on
+    the driver and handed to Spark as a local relation (Arrow), so
+    broadcasting it runs no shuffle job."""
+    import pyarrow as pa
+
+    pairs = sorted({(ascii_lower(s), s) for _, s in spec.core})
+    return spark.createDataFrame(pa.table({
+        "surface_norm": pa.array([n for n, _ in pairs], pa.string()),
+        "dict_surface": pa.array([s for _, s in pairs], pa.string()),
+    }))
+
+
 def link_mentions(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
     """Attach the dictionary's canonical surface to each mention.
 
@@ -56,7 +73,13 @@ def link_mentions(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
     case-variant path whose normalized form isn't a core surface — kept,
     since the trie type is already authoritative).
     """
-    dims = F.broadcast(dict_df.select("surface_norm", "dict_surface").distinct())
+    return _join_dims(
+        mentions, dict_df.select("surface_norm", "dict_surface").distinct())
+
+
+def _join_dims(mentions: DataFrame, dims: DataFrame) -> DataFrame:
+    """``link_mentions`` over an already distinct (surface_norm,
+    dict_surface) dimension."""
     m = mentions.withColumn("surface_norm", surface_norm_col(F.col("surface")))
     # mention score = the DP objective's span contribution len^2
     # (string_match.h:45) — the "scored mentions" of the north star; a
@@ -66,7 +89,7 @@ def link_mentions(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
         ((F.col("end_tok") - F.col("begin_tok"))
          * (F.col("end_tok") - F.col("begin_tok"))).cast("double"),
     )
-    return m.join(dims, "surface_norm", "left")
+    return m.join(F.broadcast(dims), "surface_norm", "left")
 
 
 def canonical_entities(linked: DataFrame) -> DataFrame:
@@ -78,6 +101,9 @@ def canonical_entities(linked: DataFrame) -> DataFrame:
     collapse under surface_norm already; multi-surface aliases collapse
     through the dict node) land in one component. entity_id = 'ent:' + min
     surface_norm in the component — order-free and deterministic.
+
+    Over ``link_mentions`` output every edge is a self-loop (identity
+    components); kept as the reference ``build_kg`` is tested against.
     """
     edges = (
         linked.select(
@@ -155,28 +181,39 @@ def assemble_triples(linked: DataFrame, entities: DataFrame) -> DataFrame:
     return explode_triple_pairs(m)
 
 
+def kg_from_mentions(spark, mentions: DataFrame,
+                     spec: DictionarySpec) -> dict[str, DataFrame]:
+    """mentions -> linked -> entities, triples: one lazy pass, no job runs
+    here. Shared by ``build_kg`` and tools/run_job.py.
+
+    subj = ``'ent:' || surface_norm`` is what
+    ``assemble_triples(linked, canonical_entities(linked))`` yields: every
+    CC edge ``link_mentions`` can produce is a self-loop (it joins the
+    dictionary ON ``surface_norm``). An edge source that can join two
+    different norms (an alias dictionary, say) must bring the CC back.
+
+    ``linked`` is ``link_mentions`` over ``dict_links_df``, so draining
+    the triples runs two jobs: the dimension's broadcast and the one pass
+    over the mentions."""
+    linked = _join_dims(mentions, dict_links_df(spark, spec))
+    keyed = linked.withColumn(
+        "subj", F.concat(F.lit("ent:"), F.col("surface_norm")))
+    entities = (
+        keyed.where(F.col("surface_norm").isNotNull())
+        .select("surface_norm", F.col("subj").alias("entity_id"))
+        .distinct()
+    )
+    return {"linked": linked, "entities": entities,
+            "triples": explode_triple_pairs(keyed)}
+
+
 def build_kg(spark, transcripts: DataFrame, spec: DictionarySpec,
              trie=None) -> dict[str, DataFrame]:
-    """Full pipeline: transcripts -> mentions -> linked -> entities ->
-    triples. Returns all intermediate DataFrames (lazy)."""
+    """Full pipeline: transcripts -> mentions -> linked -> entities,
+    triples. All lazy: no job runs here, and draining ``triples`` tags
+    each turn once (nothing is cached)."""
     from .dictionary import build_trie
     from .tagger import tag_transcripts
 
-    trie = trie or build_trie(spec)
-    mentions = tag_transcripts(transcripts, trie)
-    dict_df = dict_surfaces_df(spark, spec)
-    # linked has three consumers (CC edge set, has_type, mentioned_in);
-    # persist so the tagger's mapInArrow pass runs ONCE, not per consumer —
-    # the CC edge-count action populates the cache. Tracked: callers release
-    # with caching.release_caches() (or kg["linked"].unpersist()) when done.
-    from .caching import persist_tracked
-
-    linked = persist_tracked(link_mentions(mentions, dict_df))
-    entities = canonical_entities(linked)
-    triples = assemble_triples(linked, entities)
-    return {
-        "mentions": mentions,
-        "linked": linked,
-        "entities": entities,
-        "triples": triples,
-    }
+    mentions = tag_transcripts(transcripts, trie or build_trie(spec))
+    return {"mentions": mentions, **kg_from_mentions(spark, mentions, spec)}

@@ -14,7 +14,6 @@ PERSIST_BEARING = [
     "kg_eval_pr",
     "kg_eval_chunking",
     "kg_eval_typing",
-    "kg_triples_dp",        # build_kg's linked lineage
     "dedup_ngram_jaccard",  # grouped shingle relation
     "dedup_apply_ngram",
     "dedup_minhash_verified",  # shared shingle relation (verify pass)
@@ -67,6 +66,20 @@ def test_release_caches_empties_cache_manager(spark):
         released = release_caches()
         assert released >= 1
         assert _cache_empty(spark), f"{name} left a resident cache"
+
+
+def test_kg_triples_dp_leaves_no_cache(spark):
+    """build_kg is one lazy pass: draining kg_triples_dp caches nothing
+    and tracks nothing, so the CacheManager is empty WITHOUT a
+    release_caches() call."""
+    from autoner_spark.caching import release_caches
+    from autoner_spark.queries import QUERIES
+
+    spark.catalog.clearCache()
+    release_caches()
+    assert QUERIES["kg_triples_dp"](spark, SF).count() > 0
+    assert _cache_empty(spark)
+    assert release_caches() == 0
 
 
 def test_release_caches_idempotent_and_safe(spark):

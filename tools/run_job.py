@@ -46,12 +46,7 @@ def main() -> None:
         metrics_df,
         tag_resumable,
     )
-    from autoner_spark.triples import (
-        assemble_triples,
-        canonical_entities,
-        dict_surfaces_df,
-        link_mentions,
-    )
+    from autoner_spark.triples import kg_from_mentions
 
     n_docs_dropped = 0
     if args.sf_dir:
@@ -92,10 +87,8 @@ def main() -> None:
         bucketize_transcripts(transcripts, args.out, args.buckets)
     mentions = tag_resumable(spark, trie, args.out, args.buckets)
 
-    dict_df = dict_surfaces_df(spark, spec)
-    linked = link_mentions(mentions, dict_df)
-    entities = canonical_entities(linked)
-    triples = assemble_triples(linked, entities)
+    # build_kg's composition over the resumable mentions: one lazy pass
+    triples = kg_from_mentions(spark, mentions, spec)["triples"]
     # triples sink goes through the catalog layer: Iceberg writeTo when the
     # runtime jar is on the classpath (--packages org.apache.iceberg:...),
     # the partitioned-parquet layout otherwise
