@@ -2,8 +2,8 @@
 
 The reference is strictly batch (generate.cpp runs over a closed file). At
 transcript-firehose scale the same tagger runs as a streaming stage: the
-tagging `mapInPandas` is stateless, so it lifts onto a streaming DataFrame
-unchanged — readStream (file source here; Kafka/Iceberg CDC in production)
+tagging `mapInArrow` is stateless and copies ``ts`` onto each mention, so it
+lifts onto a streaming DataFrame unchanged — readStream (file source here; Kafka/Iceberg CDC in production)
 -> tag -> windowed, watermarked aggregation or append sink.
 
 Late data: mention_rate uses an event-time watermark on ``ts`` so state for

@@ -9,14 +9,15 @@ Iceberg/parquet transcripts table, Spark-first:
   shared in-memory trie, annotation.h:22);
 * tagging is embarrassingly parallel over turns (a turn = a sentence; the
   reference's "\\n" sentinel barrier at string_match.h:35-37 becomes
-  structural), so it runs as ONE narrow `mapInArrow` stage (`mapInPandas`
-  only for passthrough columns) — Arrow batches in, Arrow batches out, no
-  shuffle, no per-row Python UDF; the hot path is the vectorized
-  ``autoner_spark.tagvec`` engine;
-* the inner DP is a from-scratch optimized implementation, deliberately
-  independent from the readable oracle in ``autoner_spark.oracle`` so the
-  pytest parity suite cross-checks two implementations (plus the compiled
-  reference binary where a toolchain exists).
+  structural), so it runs as ONE narrow `mapInArrow` stage — Arrow batches
+  in, Arrow batches out, no shuffle, no per-row Python UDF — whose one
+  executor is the vectorized ``autoner_spark.tagvec`` engine, for every
+  tokenizer and passthrough column;
+* ``tag_tokens_compiled`` is the scalar reference that engine is pinned to:
+  a from-scratch DP, deliberately independent from the readable oracle in
+  ``autoner_spark.oracle`` so the pytest parity suite cross-checks the
+  implementations (plus the compiled reference binary where a toolchain
+  exists). No production path calls it.
 
 Scale notes (100 TB / 10^12 turns): the stage is map-only — throughput scales
 linearly with executors; the only broadcast is the compiled trie (MBs for
@@ -27,16 +28,13 @@ Every Python task also pays a fixed set-up cost before its first batch:
 PySpark flushes the import caches, which re-reads every zip archive on the
 worker's path (~0.25 s of CPU per task with zipped PySpark 4.1 on CPython
 3.11, 4-vCPU x86-64 VM).
-Each executor closure therefore calls ``pyworker.install()`` first, so the
+The executor closure therefore calls ``pyworker.install()`` first, so the
 reused worker re-reads only archives that changed.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -46,23 +44,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import pyworker
+from . import pyworker, tagvec
 from .dictionary import TrieKB
-from .textutil import (
-    FILTERED_TYPE,
-    is_separator_char,
-    simple_tokenize_non_sep,
-)
-
-# Turn-text tokenizers for the distributed tagger. "whitespace" is the
-# pre-tokenized input_hint path (generate.cpp:23-32 consumes one token per
-# line; per-turn text is space-joined tokens). "charclass" is the raw-text
-# ingestion path: the reference's simpleTokenizeNonSep (utils.h:195-247,
-# keepCapital so the trie's case-variant matching stays authoritative).
-TOKENIZERS = {
-    "whitespace": lambda x: [w for w in x.split(" ") if w],
-    "charclass": lambda x: simple_tokenize_non_sep(x, keep_capital=True),
-}
+from .textutil import FILTERED_TYPE, is_separator_char
 
 MENTIONS_SCHEMA = StructType(
     [
@@ -217,141 +201,32 @@ def tag_transcripts(
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, text, ...) -> mentions DataFrame.
 
-    One narrow stage over Arrow batches; the compiled trie is broadcast.
-    The default (whitespace tokens, no passthrough) runs the vectorized
-    ``tagvec`` engine in a ``mapInArrow``; the ``charclass`` tokenizer
-    runs the scalar tagger in a ``mapInArrow``, and passthrough columns
-    the scalar tagger in a ``mapInPandas``. Column pruning: only
-    (conv_id, turn_idx, text) plus any
+    One narrow ``mapInArrow`` stage over Arrow batches, run by
+    ``tagvec.tag_record_batch`` for every ``tokenizer`` (one of
+    ``tagvec.TOKENIZER_NAMES``; "whitespace" for pre-tokenized text,
+    "charclass" for raw text) and ``passthrough``; the compiled trie is
+    broadcast. Column pruning: only (conv_id, turn_idx, text) plus any
     ``passthrough`` columns are read, so a parquet/Iceberg scan prunes the
     rest at the source. ``passthrough`` columns (e.g. ``ts`` for streaming
-    watermarks) are copied onto each emitted mention. Works on both batch
-    and streaming DataFrames (the stage is stateless).
+    watermarks) are copied onto each emitted mention from its source row.
+    Works on both batch and streaming DataFrames (the stage is stateless).
     """
+    if tokenizer not in tagvec.TOKENIZER_NAMES:
+        raise ValueError(f"unknown tokenizer {tokenizer!r}")
     spark = spark or transcripts.sparkSession
-    compiled = compile_trie(trie)
-
-    if not passthrough and tokenizer == "whitespace":
-        # hottest path: fully vectorized batch engine (Arrow + NumPy, no
-        # per-token Python) — semantics pinned to tag_tokens_compiled by
-        # tests/test_tagvec_parity.py and the oracle/binary parity suite
-        from . import tagvec
-
-        bc_vec = spark.sparkContext.broadcast(tagvec.compile_vec(compiled))
-
-        def tag_arrow_vec(batches):
-            pyworker.install()
-            vec = bc_vec.value
-            for batch in batches:
-                yield tagvec.tag_record_batch(batch, vec, weight)
-
-        return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
-            tag_arrow_vec, MENTIONS_SCHEMA
-        )
-
-    bc = spark.sparkContext.broadcast(compiled)
-    tokenize = TOKENIZERS[tokenizer]
-
-    if not passthrough:
-        # hot path: mapInArrow skips the Arrow<->pandas conversions on both
-        # sides (~35% faster end-to-end than mapInPandas for this stage).
-        import pyarrow as pa
-
-        out_pa = pa.schema(
-            [
-                pa.field("conv_id", pa.string()),
-                pa.field("turn_idx", pa.int32()),
-                pa.field("begin_tok", pa.int32()),
-                pa.field("end_tok", pa.int32()),
-                pa.field("surface", pa.string()),
-                pa.field("entity_type", pa.string()),
-            ]
-        )
-
-        def tag_arrow(batches):
-            pyworker.install()
-            comp = bc.value
-            for batch in batches:
-                conv = batch.column(0).to_pylist()
-                turn = batch.column(1).to_pylist()
-                text = batch.column(2).to_pylist()
-                cc: list[str] = []
-                tt: list[int] = []
-                bb: list[int] = []
-                ee: list[int] = []
-                ss: list[str] = []
-                yy: list[str] = []
-                for c, t, x in zip(conv, turn, text):
-                    if not x:
-                        continue
-                    tokens = tokenize(x)
-                    for b, e, surf, ts in tag_tokens_compiled(tokens, comp, weight):
-                        cc.append(c)
-                        tt.append(t)
-                        bb.append(b)
-                        ee.append(e)
-                        ss.append(surf)
-                        yy.append(ts)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cc, pa.string()),
-                        pa.array(tt, pa.int32()),
-                        pa.array(bb, pa.int32()),
-                        pa.array(ee, pa.int32()),
-                        pa.array(ss, pa.string()),
-                        pa.array(yy, pa.string()),
-                    ],
-                    schema=out_pa,
-                )
-
-        return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
-            tag_arrow, MENTIONS_SCHEMA
-        )
-
-    in_cols = ["conv_id", "turn_idx", "text", *passthrough]
+    bc_vec = spark.sparkContext.broadcast(
+        tagvec.compile_vec(compile_trie(trie)))
     out_schema = StructType(
         list(MENTIONS_SCHEMA.fields)
         + [transcripts.schema[c] for c in passthrough]
     )
 
-    def tag_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def tag_arrow(batches):
         pyworker.install()
-        compiled = bc.value
-        for pdf in batches:
-            conv_ids: list[str] = []
-            turn_idxs: list[int] = []
-            begins: list[int] = []
-            ends: list[int] = []
-            surfaces: list[str] = []
-            etypes: list[str] = []
-            extra: dict[str, list] = {c: [] for c in passthrough}
-            pass_vals = [pdf[c].values for c in passthrough]
-            for i, (conv_id, turn_idx, text) in enumerate(
-                zip(pdf["conv_id"].values, pdf["turn_idx"].values,
-                    pdf["text"].values)
-            ):
-                if not text:
-                    continue
-                tokens = tokenize(text)
-                for b, e, surf, ts in tag_tokens_compiled(tokens, compiled, weight):
-                    conv_ids.append(conv_id)
-                    turn_idxs.append(int(turn_idx))
-                    begins.append(b)
-                    ends.append(e)
-                    surfaces.append(surf)
-                    etypes.append(ts)
-                    for c, vals in zip(passthrough, pass_vals):
-                        extra[c].append(vals[i])
-            data = {
-                "conv_id": pd.Series(conv_ids, dtype="object"),
-                "turn_idx": pd.Series(turn_idxs, dtype="int32"),
-                "begin_tok": pd.Series(begins, dtype="int32"),
-                "end_tok": pd.Series(ends, dtype="int32"),
-                "surface": pd.Series(surfaces, dtype="object"),
-                "entity_type": pd.Series(etypes, dtype="object"),
-            }
-            for c in passthrough:
-                data[c] = pd.Series(extra[c])
-            yield pd.DataFrame(data)
+        vec = bc_vec.value
+        for batch in batches:
+            yield tagvec.tag_record_batch(batch, vec, weight, tokenizer)
 
-    return transcripts.select(*in_cols).mapInPandas(tag_batches, out_schema)
+    return transcripts.select(
+        "conv_id", "turn_idx", "text", *passthrough
+    ).mapInArrow(tag_arrow, out_schema)

@@ -1,12 +1,16 @@
 """Vectorized (Arrow + NumPy) engine for the distributed DP tagger.
 
-Semantics-identical batch engine for ``tagger.tag_tokens_compiled``: the
-same segmentDP recurrence (string_match.h:21-89 strict-improvement updates,
-len^2 core score, weight*len^2 filtered score, "\\n" barrier checked before
+The only executor of ``tagger.tag_transcripts``. It is semantics-identical
+to ``tagger.tag_tokens_compiled``, the scalar reference: the same segmentDP
+recurrence (string_match.h:21-89 strict-improvement updates, len^2 core
+score, weight*len^2 filtered score, "\\n" barrier checked before
 descending) and the same span-extraction rules (annotation.h:267-317
 separator-skip), executed over a whole Arrow batch at once instead of one
 Python token at a time:
 
+* both tokenizers run as Arrow string kernels: ``whitespace`` splits on
+  " " and ``charclass`` first rewrites every separator char to " " and
+  "\\n" to " \\n ", so the two share the split and everything after it;
 * token -> id mapping runs through ``pyarrow.compute.index_in`` (one C++
   hash probe per token instead of a Python dict lookup);
 * the trie walk runs breadth-parallel over every start position of every
@@ -25,7 +29,8 @@ Python token at a time:
   weight cuts at turn boundaries alone — one row per turn with a match;
 * traceback runs as vectorized pointer-chasing rounds; surfaces are
   re-assembled with ``pyarrow.compute.binary_join`` over token slices (no
-  per-mention Python string work).
+  per-mention Python string work), and passthrough columns are copied
+  onto each mention with one ``take`` by its source row.
 
 Parity with the scalar path is pinned by tests/test_tagvec_parity.py (and
 transitively by the oracle/binary parity suite, which runs the Spark tagger
@@ -52,6 +57,16 @@ _KIND_ENTITY = 1
 # Single-char tokens whose spans are separator-skipped (annotation.h:272-274):
 # C-isspace chars plus SEPARATORS, minus "\n" (explicitly exempted there).
 _SKIP_CHARS = sorted((set(" \t\v\f\r") | set(SEPARATORS)) - {"\n"})
+
+# Turn-text tokenizers. "whitespace" is the pre-tokenized input_hint path
+# (generate.cpp:23-32 consumes one token per line; per-turn text is
+# space-joined tokens). "charclass" is the raw-text ingestion path: the
+# reference's simpleTokenizeNonSep (utils.h:195-247, keepCapital so the
+# trie's case-variant matching stays authoritative). It drops every
+# separator token but "\n", i.e. exactly the chars in _SKIP_CHARS.
+TOKENIZER_NAMES = ("whitespace", "charclass")
+_CHARCLASS_SEP_RE = "[" + "".join(
+    "\\" + c if c in "[]\\^-" else c for c in _SKIP_CHARS) + "]"
 
 OUT_SCHEMA = pa.schema(
     [
@@ -426,24 +441,36 @@ def _dp_segments(
 
 
 def tag_record_batch(
-    batch: pa.RecordBatch, vec: dict[str, Any], weight: float = 1.0
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    weight: float = 1.0,
+    tokenizer: str = "whitespace",
 ) -> pa.RecordBatch:
-    """(conv_id, turn_idx, text) record batch -> mentions record batch.
+    """(conv_id, turn_idx, text, *passthrough) record batch -> mentions
+    record batch (OUT_SCHEMA, then the passthrough columns).
 
-    Whitespace tokenization (x.split(" ") minus empty tokens) and the full
-    DP + extraction, all batch-at-a-time.
+    Tokenization (``tokenizer``, one of TOKENIZER_NAMES; empty tokens
+    dropped), the full DP + extraction, all batch-at-a-time. NULL or empty
+    text tags nothing. Every column after ``text`` is copied onto each
+    mention from its source row.
     """
     conv_col = batch.column(0)
     turn_col = batch.column(1)
-    text = batch.column(2)
+    text = pc.coalesce(batch.column(2), pa.scalar("", pa.string()))
+    if tokenizer == "charclass":
+        text = pc.replace_substring(
+            pc.replace_substring_regex(text, _CHARCLASS_SEP_RE, " "),
+            "\n", " \n ")
+    elif tokenizer != "whitespace":
+        raise ValueError(f"unknown tokenizer {tokenizer!r}")
     nrows = len(text)
-    empty = _empty_batch()
+    schema = OUT_SCHEMA if batch.num_columns == 3 else pa.schema(
+        [*OUT_SCHEMA, *list(batch.schema)[3:]])
+    empty = _empty_batch(schema)
     if nrows == 0:
         return empty
 
-    toks_list = pc.split_pattern(
-        pc.coalesce(text, pa.scalar("", pa.string())), " "
-    )
+    toks_list = pc.split_pattern(text, " ")
     counts_raw = pc.list_value_length(toks_list).to_numpy(
         zero_copy_only=False
     ).astype(np.int64, copy=False)
@@ -579,20 +606,13 @@ def tag_record_batch(
             pa.array(s_e.astype(np.int32), pa.int32()),
             surface,
             etype,
+            *(batch.column(i).take(t_idx)
+              for i in range(3, batch.num_columns)),
         ],
-        schema=OUT_SCHEMA,
+        schema=schema,
     )
 
 
-def _empty_batch() -> pa.RecordBatch:
+def _empty_batch(schema: pa.Schema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array([], pa.string()),
-            pa.array([], pa.int32()),
-            pa.array([], pa.int32()),
-            pa.array([], pa.int32()),
-            pa.array([], pa.string()),
-            pa.array([], pa.string()),
-        ],
-        schema=OUT_SCHEMA,
-    )
+        [pa.array([], f.type) for f in schema], schema=schema)

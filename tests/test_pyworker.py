@@ -107,9 +107,9 @@ def test_install_is_idempotent(stock_flush):
 
 
 @pytest.mark.parametrize("tokenizer,passthrough", [
-    ("whitespace", ()),       # tagvec mapInArrow
-    ("charclass", ()),        # scalar mapInArrow
-    ("whitespace", ("ts",)),  # scalar mapInPandas
+    ("whitespace", ()),       # pre-tokenized text, the hot path
+    ("charclass", ()),        # raw-text tokenizer
+    ("whitespace", ("ts",)),  # passthrough column (streaming)
 ])
 def test_tagger_workers_carry_the_install(spark, tokenizer, passthrough):
     """Every Python worker that ran a tagging task has the install. A

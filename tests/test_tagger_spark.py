@@ -80,3 +80,75 @@ def test_per_turn_text_equality_invariant(spark):
         F.array_join(F.split(F.col("text"), " "), " ") != F.col("text")
     ).count()
     assert bad == 0
+
+
+def _passthrough_transcripts(spark):
+    """Turns carrying ts and a string note: (conv_id, turn_idx) pairs
+    repeat with different ts/note, and some notes and texts are NULL."""
+    import datetime
+
+    base = datetime.datetime(2025, 3, 9, 1, 30)  # spans a DST change
+    rows = []
+    for i, r in enumerate(synth.local_rows(n_convs=8)):
+        for k in range(1 + (i % 3 == 0)):
+            rows.append((r["conv_id"], r["turn_idx"],
+                         None if i % 11 == 5 else r["text"],
+                         base + datetime.timedelta(hours=i, minutes=7 * k),
+                         None if (i + k) % 4 == 0 else f"note {i}.{k}"))
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string, ts timestamp, "
+              "note string").repartition(3)
+
+
+def test_passthrough_carries_source_row_values(spark, trie):
+    """Every mention carries exactly its own source row's ``ts`` and
+    ``note``, also when (conv_id, turn_idx) repeats with other values and
+    under a non-UTC session time zone; the output multiset equals a
+    per-row scalar reference."""
+    from collections import Counter
+
+    conf = "spark.sql.session.timeZone"
+    old_tz = spark.conf.get(conf)
+    spark.conf.set(conf, "America/Los_Angeles")
+    try:
+        transcripts = _passthrough_transcripts(spark)
+        src = transcripts.collect()
+        got = Counter(tuple(r) for r in tag_transcripts(
+            transcripts, trie, passthrough=("ts", "note")).collect())
+    finally:
+        spark.conf.set(conf, old_tz)
+    compiled = compile_trie(trie)
+    want = Counter(
+        (r.conv_id, r.turn_idx, *m, r.ts, r.note)
+        for r in src if r.text
+        for m in tag_tokens_compiled(tokenize_turn(r.text), compiled))
+    assert got == want
+    keys = Counter((r.conv_id, r.turn_idx) for r in src if r.text)
+    assert any(keys[m[:2]] > 1 for m in got), "fixture must repeat turns"
+    assert any(m[7] is None for m in got), "fixture must carry NULL notes"
+
+
+@pytest.mark.parametrize("passthrough", [(), ("ts",), ("ts", "note")])
+@pytest.mark.parametrize("tokenizer", ["whitespace", "charclass"])
+def test_one_arrow_executor_for_every_shape(spark, trie, tokenizer,
+                                            passthrough):
+    """Every tokenizer and passthrough runs through one MapInArrow; no
+    pandas or row-at-a-time Python stage."""
+    mentions = tag_transcripts(_passthrough_transcripts(spark), trie,
+                               passthrough=passthrough, tokenizer=tokenizer)
+    plan = mentions._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_unknown_tokenizer_fails_on_the_driver(spark, trie):
+    sc = spark.sparkContext
+    group = "unknown-tokenizer"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="tokenizer"):
+            tag_transcripts(synth.synth_transcripts(spark, 2), trie,
+                            tokenizer="unicode")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -2,10 +2,10 @@
 
 The batch engine must be output-identical — same spans, same types, same
 emission order — on the synthetic corpus (both dictionary profiles), on
-adversarial edge inputs, and on random token soup, for entity and filtered
-weights. Spark-level parity vs the oracle is covered by
-tests/test_tagger_spark.py and tests/test_bc5cdr.py, which now route
-through this engine. Turns of 1k to 100k tokens, alone and inside a batch
+adversarial edge inputs, on random token soup, and on raw text through the
+charclass tokenizer, for entity and filtered weights. Spark-level parity
+vs the oracle is covered by tests/test_tagger_spark.py and
+tests/test_bc5cdr.py, which now route through this engine. Turns of 1k to 100k tokens, alone and inside a batch
 of short turns, are checked against ``oracle.tag_turn`` directly, and the
 batch memory they take is bounded."""
 
@@ -19,10 +19,9 @@ import pytest
 from autoner_spark import synth
 from autoner_spark.dictionary import build_trie
 from autoner_spark.oracle import tag_turn
-from autoner_spark.tagger import TOKENIZERS, compile_trie, tag_tokens_compiled
+from autoner_spark.tagger import compile_trie, tag_tokens_compiled
 from autoner_spark.tagvec import compile_vec, tag_record_batch
-
-tokenize = TOKENIZERS["whitespace"]
+from autoner_spark.textutil import simple_tokenize_non_sep, tokenize_turn
 
 EDGE_ROWS = [
     {"conv_id": "e", "turn_idx": 0, "text": ""},
@@ -38,7 +37,7 @@ EDGE_ROWS = [
 ]
 
 
-def scalar_tag(rows, comp, weight):
+def scalar_tag(rows, comp, weight, tokenize=tokenize_turn):
     out = []
     for r in rows:
         x = r["text"]
@@ -49,7 +48,7 @@ def scalar_tag(rows, comp, weight):
     return out
 
 
-def vec_tag(rows, vec, weight):
+def vec_tag(rows, vec, weight, tokenizer="whitespace"):
     batch = pa.RecordBatch.from_arrays(
         [
             pa.array([r["conv_id"] for r in rows], pa.string()),
@@ -58,7 +57,7 @@ def vec_tag(rows, vec, weight):
         ],
         names=["conv_id", "turn_idx", "text"],
     )
-    out = tag_record_batch(batch, vec, weight)
+    out = tag_record_batch(batch, vec, weight, tokenizer)
     return list(
         zip(
             out.column(0).to_pylist(),
@@ -179,6 +178,54 @@ def test_parity_deep_surfaces(force_sparse):
     b = vec_tag(rows, vec, 1.0)
     assert a == b
     assert any(m[3] - m[2] >= 9 for m in a), "deep surfaces must match"
+
+
+def _charclass_tokenize(x):
+    return simple_tokenize_non_sep(x, keep_capital=True)
+
+
+def _raw_text(rng, n_words):
+    """Raw prose: dictionary words in case variants and non-ASCII words,
+    glued by runs of separator and C-space chars (or by nothing)."""
+    words = ["hash", "join", "Hash", "JOIN", "jOIN", "sort", "merge",
+             "SHUFFLE", "Shuffle", "table", "scan", "big", "Ada",
+             "Lovelace", "ADA", "the", "THE", "zz", "caf\u00e9",
+             "STRA\u00dfE", "\u00c9cole", "\u4e2d\u6587", "na\u00efve"]
+    glue = list(" \t\v\f\r\n/.,-()!?~@#$%^&*[]")
+    parts = []
+    for _ in range(n_words):
+        parts.append(rng.choice(words))
+        parts.append("".join(rng.choice(glue)
+                             for _ in range(rng.choice((0, 1, 1, 1, 2, 3)))))
+    return "".join(parts)
+
+
+@pytest.mark.parametrize("weight", [1.0, 0.7])
+def test_parity_charclass(weight):
+    """The Arrow charclass tokenizer tags raw text exactly as the scalar
+    tagger over ``simple_tokenize_non_sep(keep_capital=True)``: short
+    turns, empty and NULL text, and one turn of over 20k tokens among
+    them."""
+    comp = compile_trie(build_trie(synth.dict_spec()))
+    vec = compile_vec(comp)
+    rng = random.Random(13)
+    rows = [{"conv_id": "c", "turn_idx": i,
+             "text": _raw_text(rng, rng.randrange(0, 25))}
+            for i in range(3000)]
+    rows[10]["text"] = ""
+    rows[20]["text"] = None
+    rows.insert(1500, {"conv_id": "long", "turn_idx": 0,
+                       "text": _raw_text(rng, 24_000)})
+    assert len(_charclass_tokenize(rows[1500]["text"])) >= 20_000
+    got = vec_tag(rows, vec, weight, "charclass")
+    assert got == scalar_tag(rows, comp, weight, _charclass_tokenize)
+    assert any(m[0] == "long" for m in got)
+
+
+def test_unknown_tokenizer_raises():
+    vec = compile_vec(compile_trie(build_trie(synth.dict_spec())))
+    with pytest.raises(ValueError, match="tokenizer"):
+        vec_tag([], vec, 1.0, "unicode")
 
 
 # ---------------------------------------------------------------------------
