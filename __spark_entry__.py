@@ -7,9 +7,10 @@ entity-link, key each entity by its normalized surface, and return the
 (subj, pred, obj) triples DataFrame.
 
 ``queries()`` / ``oracle_sql()`` expose each implemented operator with its
-DuckDB oracle where SQL-expressible; the DP tagger chain has no SQL twin and
-is instead pinned to the compiled C++ reference binary byte-for-byte in
-pytest (tests/test_reference_binary.py -> tests/test_tagger_spark.py).
+DuckDB oracle. The DP tagger chain's twins read golden parquet written by the
+Python oracle; pytest also pins that chain to the compiled C++ reference
+binary byte-for-byte (tests/test_reference_binary.py ->
+tests/test_tagger_spark.py).
 """
 
 from __future__ import annotations
@@ -36,6 +37,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twins (omitted for non-SQL-expressible ops,
-    which the driver records as rows-only checks)."""
+    """DuckDB-runnable ANSI SQL twin of every query in ``queries()``; the DP
+    chain's twins read golden parquet."""
     return dict(Q.ORACLE_SQL)

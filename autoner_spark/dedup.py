@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import pyworker
 from .money import half_up_scaled
 
 
@@ -747,6 +748,7 @@ def simhash_arrow(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
     ])
 
     def compute(batches):
+        pyworker.install()
         import hashlib
 
         import numpy as np

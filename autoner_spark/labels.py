@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import pyworker
 from .dictionary import TrieKB
 from .oracle import get_boundary, get_types, segment_dp
 from .textutil import tokenize_turn
@@ -53,6 +54,7 @@ def label_transcripts(
     bc = spark.sparkContext.broadcast(trie)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         kb = bc.value
         for pdf in batches:
             out = {k: [] for k in
@@ -119,12 +121,14 @@ def ck_lines(labels: DataFrame) -> DataFrame:
 
 
 def write_ck(labels: DataFrame, path: str) -> None:
-    """Distributed .ck export: blocks ordered by (conv_id, turn_idx) within
-    partitions after a range repartition on conv_id — at scale each output
-    file is one contiguous conversation range."""
+    """Distributed .ck export: one task per range of (conv_id, turn_idx),
+    the session's default parallelism of them (an explicit count, which AQE
+    does not coalesce), each sorted within. Part files concatenated in name
+    order are the whole .ck stream in (conv_id, turn_idx) order."""
+    n_parts = labels.sparkSession.sparkContext.defaultParallelism
     (
         ck_lines(labels)
-        .repartitionByRange(1, "conv_id", "turn_idx")
+        .repartitionByRange(n_parts, "conv_id", "turn_idx")
         .sortWithinPartitions("conv_id", "turn_idx")
         .select("ck")
         .write.mode("overwrite")

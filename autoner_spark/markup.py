@@ -28,6 +28,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import pyworker
 from .dictionary import TrieKB
 from .oracle import Segment, extract_mentions
 from .tagger import MENTIONS_SCHEMA
@@ -106,6 +107,7 @@ def tag_marked_transcripts(
     bc = spark.sparkContext.broadcast(trie)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         kb = bc.value
         for pdf in batches:
             out = {k: [] for k in

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pyworker
+
 MANIFEST_SCHEMA = (
     "item_id long, modality string, payload binary, width int, height int, "
     "n_frames int"
@@ -80,6 +82,7 @@ def decode_features(
     the shuffle tiny while the scan carries the weight."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             feats = []
             for payload, w, h in zip(pdf["payload"], pdf["width"], pdf["height"]):

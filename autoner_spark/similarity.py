@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import pyworker
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -370,6 +372,7 @@ def lsh_band_buckets_arrow(
     out_schema = StructType(fields)
 
     def compute(batches):
+        pyworker.install()
         import numpy as np
 
         pows = 2 ** np.arange(bits_per_band, dtype=np.int64)

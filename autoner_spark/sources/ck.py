@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import pyworker
+
 CK_DF_SCHEMA = (
     "file string, sentence_idx int, tokens array<string>, "
     "boundary array<int>, types array<string>, safe array<boolean>"
@@ -69,6 +71,7 @@ def read_ck_df(spark: SparkSession, path: str) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for pdf in batches:
             out = {k: [] for k in
                    ("file", "sentence_idx", "tokens", "boundary", "types", "safe")}

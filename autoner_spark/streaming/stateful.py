@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import pyworker
+
 OUTPUT_SCHEMA = (
     "conv_id string, n_mentions long, n_distinct_surfaces long, "
     "evicted boolean"
@@ -37,6 +39,7 @@ def _accumulate(
     state: GroupState,
     evict_after_ms: int | None = None,
 ) -> Iterator[pd.DataFrame]:
+    pyworker.install()
     (conv_id,) = key
 
     def row(surfaces, n, evicted):

@@ -25,6 +25,7 @@ from __future__ import annotations
 import hashlib
 from datetime import datetime, timedelta, timezone
 
+from . import pyworker
 from .dictionary import DictionarySpec
 
 DEFAULT_SEED = 42
@@ -185,6 +186,7 @@ def synth_transcripts(spark, n_convs: int, seed: int = DEFAULT_SEED,
     rng = spark.range(0, n_convs, 1, partitions or spark.sparkContext.defaultParallelism)
 
     def gen(batches):
+        pyworker.install()
         for pdf in batches:
             out = []
             for conv_idx in pdf["id"].values:

@@ -70,13 +70,27 @@ def test_ck_export_matches_reference_binary(spark, labels, tmp_path):
                    cwd=tmp_path, check=True, capture_output=True)
     ref = (tmp_path / "out.ck").read_text()
 
-    # distributed export, single range partition for a contiguous file
+    # distributed export: range partitions in part-file name order
     out_dir = str(tmp_path / "ck_out")
     write_ck(labels, out_dir)
     parts = sorted(glob.glob(out_dir + "/part-*"))
     ours = "".join(open(p).read() for p in parts)
     # generate.cpp's fprintf("%s\n") adds one extra trailing newline
     assert ours + "\n" == ref
+
+
+def test_write_ck_parts_concatenate_to_the_ordered_stream(labels, tmp_path):
+    """write_ck spreads the export over several tasks, and its part files
+    in name order are the .ck blocks in (conv_id, turn_idx) order (the text
+    writer ends each block with one newline)."""
+    assert labels.rdd.getNumPartitions() >= 3
+    out_dir = str(tmp_path / "ck_out")
+    write_ck(labels, out_dir)
+    parts = [open(p).read() for p in sorted(glob.glob(out_dir + "/part-*"))]
+    assert sum(1 for p in parts if p) >= 2
+    blocks = sorted(ck_lines(labels).collect(),
+                    key=lambda r: (r.conv_id, r.turn_idx))
+    assert "".join(parts) == "".join(r.ck + "\n" for r in blocks)
 
 
 def test_ck_lines_empty_turn(spark):

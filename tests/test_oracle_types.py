@@ -69,3 +69,25 @@ def test_no_oracle_outputs_hugeint_or_other_fetch_fragile_types(con):
         "oracle output columns with fetch-fragile types (cast integer "
         f"sums to BIGINT at the output projection): {offenders}"
     )
+
+
+def test_every_query_function_is_registered_with_a_twin():
+    """Each module-level ``q_*`` function in queries.py is one registry row,
+    named ``q_<registered name>``, with a non-empty twin: a query the gate
+    never sees cannot hide in the module."""
+    import inspect
+
+    from autoner_spark import queries as Q
+
+    defined = {
+        name: fn for name, fn in vars(Q).items()
+        if name.startswith("q_") and inspect.isfunction(fn)
+        and fn.__module__ == Q.__name__
+    }
+    registered = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    assert {f"q_{n}" for n in registered} == set(defined)
+    for name, fn in registered.items():
+        assert fn is defined[f"q_{name}"], name
+        assert isinstance(oracles.get(name), str) and oracles[name].strip(), name
+    assert set(oracles) == set(registered)

@@ -1,10 +1,13 @@
 """pyworker: Spark's per-task import-cache flush re-reads a zip archive only
-when the archive changed, and the tagger's Python workers carry the install.
+when the archive changed, and every package Python-UDF stage's workers carry
+the install.
 """
 
+import ast
 import importlib
 import importlib.util
 import os
+import pathlib
 import sys
 import uuid
 import zipfile
@@ -13,9 +16,62 @@ import zipimport
 import pytest
 from pyspark.sql import functions as F
 
-from autoner_spark import pyworker, synth
+from autoner_spark import dedup, pyworker, similarity, synth
 from autoner_spark.dictionary import build_trie
 from autoner_spark.tagger import tag_transcripts
+
+
+PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "autoner_spark"
+UDF_METHODS = {"mapInArrow", "mapInPandas", "applyInPandasWithState"}
+
+
+def _udf_functions(tree):
+    """(call, function def or None) for each function passed to a Python-UDF
+    DataFrame method, resolved in the innermost enclosing function first,
+    then at module level; ``partial(fn, ...)`` is unwrapped."""
+    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    module_defs = {n.name: n for n in tree.body
+                   if isinstance(n, ast.FunctionDef)}
+    for call in ast.walk(tree):
+        if not (isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr in UDF_METHODS):
+            continue
+        arg = call.args[0]
+        if isinstance(arg, ast.Call):  # partial(fn, ...)
+            arg = arg.args[0]
+        name = getattr(arg, "id", None)
+        scope = max((f for f in funcs
+                     if f.lineno <= call.lineno <= f.end_lineno),
+                    key=lambda f: f.lineno, default=None)
+        nested = {n.name: n for n in ast.walk(scope)
+                  if isinstance(n, ast.FunctionDef) and n is not scope
+                  } if scope else {}
+        yield call, nested.get(name) or module_defs.get(name)
+
+
+def test_every_python_udf_installs_the_flush_first():
+    """Static: every function handed to mapInArrow / mapInPandas /
+    applyInPandasWithState in the package calls ``pyworker.install()`` as
+    its first statement, so no Python-UDF stage pays the stock per-task
+    zip re-read."""
+    checked, missing = [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for call, fn in _udf_functions(ast.parse(path.read_text())):
+            where = f"{path.relative_to(PACKAGE)}:{call.lineno}"
+            checked.append(where)
+            if fn is None:
+                missing.append(f"{where}: {ast.unparse(call.args[0])} "
+                               "is not a def in scope")
+                continue
+            body = fn.body
+            if (isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)):
+                body = body[1:]  # docstring
+            if ast.unparse(body[0]) != "pyworker.install()":
+                missing.append(f"{where}: {fn.name}")
+    assert len(checked) >= 9, checked
+    assert not missing, missing
 
 
 @pytest.fixture
@@ -106,20 +162,27 @@ def test_install_is_idempotent(stock_flush):
     assert copy._invalidate_caches.__wrapped__ is stock
 
 
-@pytest.mark.parametrize("tokenizer,passthrough", [
-    ("whitespace", ()),       # pre-tokenized text, the hot path
-    ("charclass", ()),        # raw-text tokenizer
-    ("whitespace", ("ts",)),  # passthrough column (streaming)
-])
-def test_tagger_workers_carry_the_install(spark, tokenizer, passthrough):
-    """Every Python worker that ran a tagging task has the install. A
-    private environment variable gives the tagging and probe stages their
-    own worker pool (Spark keys Python worker pools by environment), so
-    the probe's first task runs in a worker that only ever ran tagging."""
+def _docs(spark):
+    return spark.range(64, numPartitions=8).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("w"), (F.col("id") % 7).cast("string"),
+                    F.lit("x y")).alias("text"))
+
+
+def _vectors(spark):
+    return spark.range(64, numPartitions=8).select(
+        F.col("id").alias("vec_id"),
+        F.array((F.col("id") % 5).cast("double") - 2.0,
+                F.lit(1.0)).alias("embedding"))
+
+
+def _assert_stage_workers_installed(spark, source, stage):
+    """Every Python worker that ran ``stage(source)`` has the install. A
+    private environment variable gives the stage and the probe their own
+    worker pool (Spark keys Python worker pools by environment, captured
+    when the stage is built), so the probe's first task runs in a worker
+    that only ever ran the stage; ``source`` is built outside that pool."""
     sc = spark.sparkContext
-    transcripts = synth.synth_transcripts(spark, 40, partitions=8).withColumn(
-        "ts", F.lit(0))
-    trie = build_trie(synth.dict_spec())
 
     def probe(batches):
         import pyarrow as pa
@@ -129,24 +192,42 @@ def test_tagger_workers_carry_the_install(spark, tokenizer, passthrough):
         flush = zipimport.zipimporter.invalidate_caches
         installed = getattr(sys.modules.get("autoner_spark.pyworker"),
                             "_invalidate_caches", None) is flush
-        tagged = any(m in sys.modules for m in
-                     ("autoner_spark.tagvec", "autoner_spark.tagger"))
+        ran = any(m.startswith("autoner_spark") for m in sys.modules)
         yield pa.RecordBatch.from_pydict(
-            {"pid": [os.getpid()], "tagged": [tagged],
-             "installed": [installed]})
+            {"pid": [os.getpid()], "ran": [ran], "installed": [installed]})
 
     key = "AUTONER_TEST_WORKER_POOL"
     sc.environment[key] = uuid.uuid4().hex
     try:
-        mentions = tag_transcripts(transcripts, trie, tokenizer=tokenizer,
-                                   passthrough=passthrough)
+        out = stage(source)
         probed = spark.range(8, numPartitions=8).mapInArrow(
-            probe, "pid long, tagged boolean, installed boolean")
+            probe, "pid long, ran boolean, installed boolean")
     finally:
         del sc.environment[key]
-    assert mentions.count() > 0
+    assert out.count() > 0
     rows = probed.collect()
-    tagging = {r.pid for r in rows if r.tagged}
-    assert tagging, rows
-    assert all(r.installed for r in rows if r.tagged), rows
+    assert any(r.ran for r in rows), rows
+    assert all(r.installed for r in rows if r.ran), rows
 
+
+@pytest.mark.parametrize("tokenizer,passthrough", [
+    ("whitespace", ()),       # pre-tokenized text, the hot path
+    ("charclass", ()),        # raw-text tokenizer
+    ("whitespace", ("ts",)),  # passthrough column (streaming)
+])
+def test_tagger_workers_carry_the_install(spark, tokenizer, passthrough):
+    transcripts = synth.synth_transcripts(spark, 40, partitions=8).withColumn(
+        "ts", F.lit(0))
+    trie = build_trie(synth.dict_spec())
+    _assert_stage_workers_installed(
+        spark, transcripts,
+        lambda t: tag_transcripts(t, trie, tokenizer=tokenizer,
+                                  passthrough=passthrough))
+
+
+@pytest.mark.parametrize("make_input,stage", [
+    (_docs, dedup.simhash_arrow),
+    (_vectors, lambda v: similarity.lsh_band_buckets_arrow(v, 4, 2)),
+], ids=["dedup_simhash", "similarity_lsh"])
+def test_arrow_stage_workers_carry_the_install(spark, make_input, stage):
+    _assert_stage_workers_installed(spark, make_input(spark), stage)

@@ -95,9 +95,6 @@ def main():
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(spark_rows)} rows)")
-            continue
         # golden-twin oracles read parquet materialized from the sf0.01
         # gate inputs; against any other sf_dir they'd mismatch spuriously
         from autoner_spark.queries import GOLDEN_DIR, GOLDEN_SF_DIR
