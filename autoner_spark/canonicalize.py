@@ -7,25 +7,22 @@ run it: ``triples.build_kg``'s entity id is ``'ent:' || surface_norm``,
 because every edge ``triples.link_mentions`` can produce (a mention's norm
 to the norm of the dictionary surface joined ON that norm) is a self-loop,
 so its components are single nodes (``triples.canonical_entities`` keeps
-the CC form as the reference). GraphFrames is not available in this
-environment, so CC is implemented as an iterative **hash-min label
-propagation** over DataFrames:
+the CC form as the reference).
 
-    label(v) <- min(label(v), min over neighbors u of label(u))
+``connected_components`` picks one of two executors from the distinct edge
+count it observes: driver-side union-find below ``driver_threshold``, else
+alternating large-star/small-star (Kiveris et al., SoCC'14,
+``connected_components_star``) over DataFrames. Both label a node with the
+string-min node of its component, so the output is deterministic and
+partition-count independent.
 
-repeated to fixpoint. Deterministic (labels are the node strings themselves,
-min is order-free), partition-count independent, and shuffle-efficient: each
-iteration is one shuffle on the node key; lineage is truncated with
-``localCheckpoint`` so plans don't grow unboundedly.
-
-Scale notes (10^12-edge graphs): label propagation converges in O(graph
-diameter) iterations; surface-equivalence graphs are star-shaped (diameter
-<= 4 through shared dictionary surfaces), so few iterations suffice. Hot
-components (a hot entity's surface connected to everything) make the
-groupBy(node) key skewed — AQE skew handling is on, and the combine is
+Scale notes (10^12-edge graphs): star converges in O(log n) rounds on any
+graph shape, so a chain cannot force O(diameter) rounds; each round's
+lineage is truncated with ``localCheckpoint`` so plans don't grow. Hot
+components (a hot entity's surface connected to everything) skew the
+per-node min aggregate — AQE skew handling is on, and the combine is
 algebraic (min), so map-side partial aggregation already collapses the hot
-key per partition before the shuffle. For general graphs swap in
-large-star/small-star (Kiveris et al.) — same DataFrame primitives.
+key per partition before the shuffle.
 """
 
 from __future__ import annotations
@@ -40,7 +37,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 20,
     driver_threshold: int = 100_000,
-    distributed: str = "star",
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id
     (string min) of the node's connected component.
@@ -53,18 +49,9 @@ def connected_components(
     mention stream is 10^12 rows, since it is bounded by distinct surface
     forms — is counted first; below ``driver_threshold`` edges the component
     labeling runs as driver-side union-find on the collected distinct edges
-    (one shuffle for distinct, no iteration). Above it, ``distributed``
-    selects the iterative path:
-
-    * ``"star"`` (default) — alternating large-star/small-star
-      (connected_components_star): O(log n) rounds on ANY graph shape, so
-      a non-surface-shaped edge set (a 10^6-long chain) cannot silently
-      run 10^6 rounds;
-    * ``"hashmin"`` — hash-min label propagation: O(diameter) rounds, one
-      shuffle per round — marginally cheaper per round on the star-shaped
-      surface graphs this module was built for, but unbounded on chains.
-
-    All paths produce identical labels.
+    (one shuffle for distinct, no iteration). Above it,
+    ``connected_components_star`` runs with ``max_iter`` rounds. Both paths
+    produce identical labels.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # undirected: symmetrize once
@@ -75,8 +62,8 @@ def connected_components(
     if driver_threshold:
         # ONE job decides the path AND fetches the edges: collect at most
         # threshold+1 distinct edges; only if the limit is hit do we pay for
-        # the distributed propagation. (A separate count() job would
-        # recompute the whole distinct-edge lineage a second time.)
+        # the distributed rounds. (A separate count() job would recompute
+        # the whole distinct-edge lineage a second time.)
         head = sym.limit(driver_threshold + 1).collect()
         if len(head) <= driver_threshold:
             labels = _union_find_labels([(r.src, r.dst) for r in head])
@@ -84,41 +71,7 @@ def connected_components(
                 sorted(labels.items()), "node string, comp string"
             )
 
-    if distributed == "star":
-        return connected_components_star(sym, "src", "dst", max_iter=max_iter)
-    if distributed != "hashmin":
-        raise ValueError(f"unknown distributed CC method: {distributed!r}")
-
-    sym = sym.localCheckpoint(eager=True)
-
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    ).localCheckpoint(eager=True)
-
-    for _ in range(max_iter):
-        # propagate each node's current label to its neighbors
-        propagated = (
-            sym.join(labels, sym["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), F.col("comp"))
-        )
-        new_labels = (
-            propagated.union(labels.select("node", "comp"))
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    return connected_components_star(sym, "src", "dst", max_iter=max_iter)
 
 
 def connected_components_star(
@@ -131,17 +84,18 @@ def connected_components_star(
     al., "Connected Components in MapReduce and Beyond", SoCC'14) —
     (node, comp) with comp = min node of the component.
 
-    The giant-component-safe distributed path: hash-min label propagation
-    converges in O(diameter) rounds (a 10^6-long chain needs 10^6 rounds);
-    the star operations converge in O(log n) rounds on any graph. Each
-    round is two aggregate+join passes over the edge list — per-node
+    The distributed path: O(log n) rounds on any graph, where label
+    propagation would need O(diameter) (a 10^6-long chain: 10^6 rounds).
+    Each round is two aggregate+join passes over the edge list — per-node
     neighbor minima only, never a collected neighbor list, so a hot node
     with 10^9 neighbors costs one min-aggregate (map-side combined), not a
     driver-sized array.
 
     large-star: every neighbor v > u re-attaches to m = min(Γ(u) ∪ {u});
     small-star: every neighbor v <= u (and u itself) attaches to m.
-    At the fixpoint the edge set is exactly {(child, root)}.
+    At the fixpoint the edge set is exactly {(child, root)}. Raises
+    ``RuntimeError`` if ``max_iter`` rounds end before the edge set repeats
+    (partial labels would split components without any sign).
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = e.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
@@ -207,6 +161,11 @@ def connected_components_star(
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixed point within "
+            f"max_iter={max_iter} rounds"
+        )
 
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
     return (

@@ -508,7 +508,6 @@ def simhash_hamming_pairs(
     max_bucket_size: int | None = 256,
     id_col: str = "doc_id",
     text_col: str = "text",
-    signature: str = "arrow",
 ) -> DataFrame:
     """(id_a, id_b, hamming): near-duplicate pairs whose SimHash signatures
     differ in at most ``max_hamming`` bits — the Manku/Jain/Sarma WWW'07
@@ -540,18 +539,10 @@ def simhash_hamming_pairs(
     from .caching import persist_tracked
 
     block_bits = bits // n_blocks
-    # signature="arrow": one zero-shuffle map stage (default; same pattern
-    # as embedding_lsh_pairs); "join": the relational vote pipeline
-    # (bit-identical, the DuckDB-twin reference path — pinned by pytest)
-    if signature == "arrow":
-        sig_df = simhash_arrow(docs, bits, id_col, text_col)
-    elif signature == "join":
-        sig_df = simhash(docs, bits, id_col, text_col)
-    else:
-        raise ValueError(f"unknown signature impl: {signature!r}")
-    # three consumers (block explosion + both verify join sides) — persist
-    # so the signature lineage runs once
-    sig = persist_tracked(sig_df)
+    # signatures: one zero-shuffle Arrow map stage (bit-identical to the
+    # relational ``simhash``, pinned by pytest); three consumers (block
+    # explosion + both verify join sides) — persist so it runs once
+    sig = persist_tracked(simhash_arrow(docs, bits, id_col, text_col))
     # exact integer bit extraction (shift + mask): the former floor(x /
     # pow(2, k)) went through double math, which silently loses bits for
     # signatures wider than 53 bits
@@ -800,8 +791,8 @@ def simhash(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
 
     Each token's 32-bit hash votes +1/-1 per bit position; the sign of each
     bit's vote sum sets that bit. Pure integer math -> bit-identical across
-    engines. ``simhash_arrow`` is the zero-shuffle map-stage twin (default
-    in the pair generator); this form is the DuckDB-twin reference path."""
+    engines. ``simhash_arrow`` is the zero-shuffle map-stage twin the pair
+    generator runs; this form is the DuckDB-twin reference path."""
     toks = docs.select(
         F.col(id_col).alias("id"), F.explode(_tokens(text_col)).alias("token")
     ).withColumn("hv", md5_int32(F.col("token")))

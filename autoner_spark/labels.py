@@ -24,7 +24,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import pyworker
@@ -38,9 +38,7 @@ LABELS_SCHEMA = (
 )
 
 
-def label_transcripts(
-    transcripts: DataFrame, trie: TrieKB, spark: SparkSession | None = None
-) -> DataFrame:
+def label_transcripts(transcripts: DataFrame, trie: TrieKB) -> DataFrame:
     """transcripts -> labels table (one narrow Arrow stage, broadcast trie).
 
     Reuses the oracle's readable implementations per turn — label
@@ -50,8 +48,7 @@ def label_transcripts(
     sentinel's label slots are dropped, mirroring the global-stream
     semantics exactly.
     """
-    spark = spark or transcripts.sparkSession
-    bc = spark.sparkContext.broadcast(trie)
+    bc = transcripts.sparkSession.sparkContext.broadcast(trie)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pyworker.install()

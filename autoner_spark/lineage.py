@@ -28,11 +28,11 @@ import os
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dictionary import TrieKB
-from .tagger import tag_transcripts
+from .tagger import MENTIONS_SCHEMA, tag_transcripts
 
 LINEAGE_SCHEMA = (
     "bucket int, n_turns long, n_mentions long, wall_ms long, finished_at string"
@@ -85,11 +85,13 @@ def tag_resumable(
     n_buckets: int,
 ) -> DataFrame:
     """Tag all incomplete buckets; skip completed ones; return the full
-    mentions DataFrame. Each bucket job is internally fully parallel; its
-    scan reads ONLY that bucket's partition directory."""
+    mentions DataFrame. Each bucket is ONE job (tag + write, internally
+    fully parallel) whose scan is partition-pruned to that bucket's
+    directory; its lineage counts are observed on that same job."""
     done = completed_buckets(out_dir)
     base = os.path.join(out_dir, "transcripts")
     mentions_dir = os.path.join(out_dir, "mentions")
+    transcripts = None  # opened (one schema-inference job) on first use
     for bucket in range(n_buckets):
         if bucket in done:
             continue
@@ -109,30 +111,33 @@ def tag_resumable(
                 },
             )
             continue
-        sub = spark.read.parquet(bucket_dir)
+        if transcripts is None:
+            transcripts = spark.read.parquet(base)
+        # both counts are observed on the bucket's one tag+write job
+        turns, found = Observation(), Observation()
+        sub = transcripts.filter(F.col("bucket") == bucket).observe(
+            turns, F.count(F.lit(1)).alias("n"))
         t0 = time.perf_counter()
-        mentions = tag_transcripts(sub, trie)
-        mentions.write.mode("overwrite").parquet(
+        tag_transcripts(sub, trie).observe(
+            found, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(
             os.path.join(mentions_dir, f"bucket={bucket}")
         )
         wall_ms = int((time.perf_counter() - t0) * 1000)
-        stats = spark.read.parquet(
-            os.path.join(mentions_dir, f"bucket={bucket}")
-        ).count()
-        n_turns = sub.count()
         _append_lineage(
             out_dir,
             {
                 "bucket": bucket,
-                "n_turns": n_turns,
-                "n_mentions": stats,
+                "n_turns": turns.get["n"],
+                "n_mentions": found.get["n"],
                 "wall_ms": wall_ms,
                 "finished_at": datetime.now(timezone.utc).isoformat(),
             },
         )
     # partition discovery over the bucket=N directories (no globs: literal
-    # base-path reads behave identically on local FS and object stores)
-    return spark.read.parquet(mentions_dir)
+    # base-path reads behave identically on local FS and object stores);
+    # the known schema spares a schema-inference job
+    return spark.read.schema(MENTIONS_SCHEMA).parquet(mentions_dir)
 
 
 def metrics_df(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from . import pyworker
 from .dictionary import TrieKB
@@ -98,13 +98,10 @@ def parse_marked_line(
     return raw, segs
 
 
-def tag_marked_transcripts(
-    transcripts: DataFrame, trie: TrieKB, spark: SparkSession | None = None
-) -> DataFrame:
+def tag_marked_transcripts(transcripts: DataFrame, trie: TrieKB) -> DataFrame:
     """Marked transcripts -> mentions: exact-lookup typing per marked
     phrase (no DP). Same output schema as the DP tagger."""
-    spark = spark or transcripts.sparkSession
-    bc = spark.sparkContext.broadcast(trie)
+    bc = transcripts.sparkSession.sparkContext.broadcast(trie)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pyworker.install()

@@ -656,7 +656,7 @@ FROM transcripts
 
 # ---------------------------------------------------------------------------
 # DP tagger + full KG over the derived transcripts (non-SQL-expressible:
-# covered by the pytest oracle chain; driver records rows-only)
+# the twins read golden parquet, see the DP-chain twin note below)
 # ---------------------------------------------------------------------------
 
 
@@ -694,7 +694,8 @@ def q_kg_triples_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_mentions_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M11 literal front-end over AutoPhrase-style marked transcripts:
     markup is injected for two dictionary surfaces, then the exact-lookup
-    phrase tagger runs (rows-only check; semantics pinned by test_markup)."""
+    phrase tagger runs (the golden twin replays the same markup parser,
+    see the DP-chain twin note below; semantics pinned by test_markup)."""
     from .markup import tag_marked_transcripts
 
     t = transcripts_df(spark, sf_dir)
@@ -707,17 +708,19 @@ def q_kg_mentions_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "table scan", "<phrase>table scan</phrase>",
         ),
     )
-    return tag_marked_transcripts(marked, build_trie(kg_dict_spec()), spark)
+    return tag_marked_transcripts(marked, build_trie(kg_dict_spec()))
 
 
 def q_kg_labels_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-or-Break labels table (D6) over the derived transcripts,
-    exploded to long form (rows-only; .ck serialization is pinned
-    byte-for-byte to the compiled reference binary in pytest)."""
+    exploded to long form; the gate compares every value with the golden
+    table (not an independent check, see the DP-chain twin note below;
+    .ck serialization is pinned byte-for-byte to the compiled reference
+    binary in pytest)."""
     from .labels import label_transcripts
 
     labels = label_transcripts(
-        transcripts_df(spark, sf_dir), build_trie(kg_dict_spec()), spark
+        transcripts_df(spark, sf_dir), build_trie(kg_dict_spec())
     )
     return labels.select(
         "conv_id", "turn_idx",
@@ -736,9 +739,14 @@ def q_kg_labels_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle side reads a GOLDEN parquet table materialized by the
 # single-node Python oracle (autoner_spark/golden.py) — the same oracle
 # code that is pinned byte-for-byte against the compiled C++ reference
-# binary in pytest. The driver gate therefore compares two independent
-# implementations: the distributed mapInArrow tagger vs the Python oracle
-# replay.
+# binary in pytest. For the mention and triple queries the gate compares
+# two independent implementations: the distributed tagvec mapInArrow
+# tagger vs the Python oracle replay. kg_labels_dp is NOT independent:
+# labels.label_transcripts and golden.golden_labels both run the same
+# oracle.segment_dp / get_boundary / get_types, so that gate only checks
+# the Spark plumbing around them (ROADMAP direction 4: labels through
+# tagvec). Likewise kg_mentions_markup: both sides run
+# markup.parse_marked_line.
 
 SQL_KG_TAG_MENTIONS_DP = f"""
 SELECT conv_id, turn_idx, begin_tok, end_tok, surface, entity_type

@@ -337,8 +337,7 @@ def lsh_band_buckets_arrow(
     (zero shuffles) computing sign(X @ W.T) per batch and packing band
     buckets in-register. The hyperplanes, the 6dp-rounded sign convention
     and the bucket packing are bit-compatible with the relational form and
-    the DuckDB twin (pinned by pytest); the join form remains available for
-    engines without Arrow. Requires fixed-dimension vectors (guarded).
+    the DuckDB twin (pinned by pytest). Requires fixed-dimension vectors (guarded).
     NULL vectors are dropped before the map stage — the same rows the join
     form's posexplode silently skips — and the id column passes through
     with its original type (numeric or string ids alike).
@@ -448,7 +447,6 @@ def embedding_lsh_pairs(
     max_bucket_size: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    signature: str = "arrow",
     dim: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, cosine): near-duplicate vectors via sign-LSH candidates
@@ -479,42 +477,34 @@ def embedding_lsh_pairs(
     base = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    # signature="arrow": one zero-shuffle NumPy-matmul map stage (default —
-    # measured ~2x faster, see BENCH.md); "join": the pure-relational form
-    # (bit-identical output, pinned by pytest)
-    if signature == "arrow":
-        if dim is None:
-            # cross-task raggedness guard: the per-task lazily-inferred
-            # width rides along as a column and every bucket must be
-            # width-uniform — which covers EVERY case that could emit a
-            # cross-width pair (different-width vectors are only harmful
-            # when they collide in a bucket; cosine across widths is
-            # undefined). The min/max window shares the (band, bucket)
-            # shuffle the skew-cap window in _bucket_pairs needs anyway,
-            # so the check adds no extra exchange; a mixed bucket fails
-            # the query instead of silently degrading recall.
-            raw = lsh_band_buckets_arrow(base, bits_per_band, n_bands,
-                                         dim=None, emit_dim=True)
-            w = Window.partitionBy("band", "bucket")
-            bucketed = (
-                raw.withColumn("_dmin", F.min("dim").over(w))
-                .withColumn("_dmax", F.max("dim").over(w))
-                .filter(
-                    F.assert_true(
-                        F.col("_dmin") == F.col("_dmax"),
-                        F.lit("mixed embedding widths collided in an LSH "
-                              "bucket — pass dim= explicitly"),
-                    ).isNull()
-                )
-                .select("vec_id", "band", "bucket")
+    # signatures: one zero-shuffle NumPy-matmul map stage (measured ~2x
+    # faster than the relational ``lsh_band_buckets``, see BENCH.md;
+    # bit-identical buckets, pinned by pytest)
+    bucketed = lsh_band_buckets_arrow(base, bits_per_band, n_bands,
+                                      dim=dim, emit_dim=dim is None)
+    if dim is None:
+        # cross-task raggedness guard: the per-task lazily-inferred
+        # width rides along as a column and every bucket must be
+        # width-uniform — which covers EVERY case that could emit a
+        # cross-width pair (different-width vectors are only harmful
+        # when they collide in a bucket; cosine across widths is
+        # undefined). The min/max window shares the (band, bucket)
+        # shuffle the skew-cap window in _bucket_pairs needs anyway,
+        # so the check adds no extra exchange; a mixed bucket fails
+        # the query instead of silently degrading recall.
+        w = Window.partitionBy("band", "bucket")
+        bucketed = (
+            bucketed.withColumn("_dmin", F.min("dim").over(w))
+            .withColumn("_dmax", F.max("dim").over(w))
+            .filter(
+                F.assert_true(
+                    F.col("_dmin") == F.col("_dmax"),
+                    F.lit("mixed embedding widths collided in an LSH "
+                          "bucket — pass dim= explicitly"),
+                ).isNull()
             )
-        else:
-            bucketed = lsh_band_buckets_arrow(base, bits_per_band, n_bands,
-                                              dim=dim)
-    elif signature == "join":
-        bucketed = lsh_band_buckets(base, bits_per_band, n_bands, dim=dim)
-    else:
-        raise ValueError(f"unknown signature impl: {signature!r}")
+            .select("vec_id", "band", "bucket")
+        )
     # shared LSH pair-explosion core (skew cap BEFORE collect_list;
     # lsh_drop_stats reports the discards)
     from .dedup import _bucket_pairs

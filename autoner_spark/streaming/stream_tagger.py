@@ -30,10 +30,9 @@ def read_transcripts_stream(
     return reader.parquet(input_dir)
 
 
-def tag_stream(stream: DataFrame, trie: TrieKB,
-               spark: SparkSession | None = None) -> DataFrame:
+def tag_stream(stream: DataFrame, trie: TrieKB) -> DataFrame:
     """Streaming mentions (with event-time ts carried for watermarking)."""
-    return tag_transcripts(stream, trie, spark=spark, passthrough=("ts",))
+    return tag_transcripts(stream, trie, passthrough=("ts",))
 
 
 def mention_rate(mentions_stream: DataFrame, window: str = "1 minute",

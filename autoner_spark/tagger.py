@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -195,7 +195,6 @@ def tag_transcripts(
     transcripts: DataFrame,
     trie: TrieKB,
     weight: float = 1.0,
-    spark: SparkSession | None = None,
     passthrough: tuple[str, ...] = (),
     tokenizer: str = "whitespace",
 ) -> DataFrame:
@@ -213,8 +212,7 @@ def tag_transcripts(
     """
     if tokenizer not in tagvec.TOKENIZER_NAMES:
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    spark = spark or transcripts.sparkSession
-    bc_vec = spark.sparkContext.broadcast(
+    bc_vec = transcripts.sparkSession.sparkContext.broadcast(
         tagvec.compile_vec(compile_trie(trie)))
     out_schema = StructType(
         list(MENTIONS_SCHEMA.fields)

@@ -21,8 +21,9 @@ def test_connected_components_basic(spark):
 
 
 def test_connected_components_random_graph_both_paths_agree(spark):
-    """3k-node random graph: the distributed hash-min path must produce
-    exactly the driver union-find labeling."""
+    """3k-node random graph: the distributed star path (forced by
+    ``driver_threshold=0``) must produce exactly the driver union-find
+    labeling."""
     import random
 
     rng = random.Random(7)
@@ -39,13 +40,8 @@ def test_connected_components_random_graph_both_paths_agree(spark):
         (r.node, r.comp)
         for r in connected_components(df, driver_threshold=0,
                                       max_iter=40).collect()
-    }  # distributed default = star
-    hashmin = {
-        (r.node, r.comp)
-        for r in connected_components(df, driver_threshold=0, max_iter=40,
-                                      distributed="hashmin").collect()
     }
-    assert fast == dist == hashmin
+    assert fast == dist
     comps = {}
     for node, comp in fast:
         comps.setdefault(comp, []).append(node)
@@ -55,7 +51,8 @@ def test_connected_components_random_graph_both_paths_agree(spark):
 def test_connected_components_star_agrees(spark):
     """Large-star/small-star (the giant-component path) must produce the
     identical min-label components as union-find, on a random graph, a hot
-    star, a long chain (hash-min's worst case), and isolated self-loops."""
+    star, a long chain (label propagation's worst case), and isolated
+    self-loops."""
     import random
 
     from autoner_spark.canonicalize import connected_components_star
@@ -73,7 +70,7 @@ def test_connected_components_star_agrees(spark):
     want = {(r.node, r.comp) for r in connected_components(df).collect()}
     assert star == want
     # the 121-node chain collapsed to its min label — in <= 12 rounds,
-    # where hash-min would need ~120
+    # where label propagation would need ~120
     assert ("c120", "c000") in star
 
 
@@ -81,7 +78,7 @@ def test_connected_components_long_chain_auto_selects_star(spark):
     """Public entry point, long-chain fixture: above the driver threshold
     the AUTOMATIC distributed path must be the O(log n) star algorithm —
     a 300-edge chain labels correctly in far fewer rounds than its
-    diameter (hash-min at the same max_iter would stop short)."""
+    diameter (label propagation at the same max_iter would stop short)."""
     rows = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(300)]
     df = spark.createDataFrame(rows, "src string, dst string").repartition(5)
     got = {(r.node, r.comp)
@@ -89,22 +86,23 @@ def test_connected_components_long_chain_auto_selects_star(spark):
                                          max_iter=20).collect()}
     assert len(got) == 301
     assert all(comp == "c000" for _, comp in got)
-    # the explicit hashmin selector at the same budget does NOT converge —
-    # the reason star is the default distributed path
-    part = {(r.node, r.comp)
-            for r in connected_components(df, driver_threshold=10,
-                                          max_iter=20,
-                                          distributed="hashmin").collect()}
-    assert part != got
+    # star is the only distributed path: there is no selector left
+    with pytest.raises(TypeError, match="distributed"):
+        connected_components(df, driver_threshold=0, distributed="hashmin")
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown distributed CC"):
-        connected_components(df, driver_threshold=0, distributed="bogus")
+
+def test_connected_components_star_raises_when_max_iter_exhausted(spark):
+    """A budget that ends before the star rounds reach their fixed point
+    must fail loudly, not return partial labels that split the chain."""
+    rows = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(300)]
+    df = spark.createDataFrame(rows, "src string, dst string").repartition(5)
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(df, driver_threshold=10, max_iter=1).collect()
 
 
 def test_connected_components_chain_and_determinism(spark):
-    # a long chain needs multiple propagation rounds; compare the
-    # driver-side union-find path against the distributed hash-min path
+    # a long chain needs multiple star rounds; compare the driver-side
+    # union-find path against the distributed star path
     n = 12
     rows = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)]
     e1 = spark.createDataFrame(rows, "src string, dst string").repartition(1)

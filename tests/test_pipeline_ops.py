@@ -474,12 +474,16 @@ def test_lsh_arrow_signatures_match_relational(spark, emb):
         F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
     )
     aug = base.unionByName(dup)
-    pj = {tuple(r) for r in embedding_lsh_pairs(aug, threshold=0.99,
-                                                signature="join").collect()}
-    pa_ = {tuple(r) for r in embedding_lsh_pairs(aug, threshold=0.99,
-                                                 signature="arrow").collect()}
-    assert pj == pa_
-    assert {(a_, b_) for a_, b_, _ in pj} >= {(i, i + 50000) for i in range(10)}
+    # end to end: the Arrow-stage pairs equal the pairs the RELATIONAL
+    # buckets imply (in-bucket pairs under the size cap, exact cosine)
+    vecs = {r.vec_id: r.embedding for r in aug.collect()}
+    want = _lsh_pairs_from_buckets(
+        lsh_band_buckets(aug, 16, 4).collect(), vecs, 0.99, 64)
+    pa_ = {(a_, b_): c for a_, b_, c in
+           embedding_lsh_pairs(aug, threshold=0.99).collect()}
+    assert pa_.keys() == want.keys()
+    assert all(abs(pa_[k] - want[k]) <= 2e-6 for k in want)
+    assert set(pa_) >= {(i, i + 50000) for i in range(10)}
 
     # ragged vectors are rejected, not silently mis-shaped: with lazy dim
     # inference the mismatch is caught when two widths meet inside one task
@@ -505,8 +509,31 @@ def test_lsh_arrow_signatures_match_relational(spark, emb):
     with pytest.raises(Exception):
         lsh_band_buckets_arrow(exploding, 4, 2).collect()
 
-    with pytest.raises(ValueError, match="signature"):
-        embedding_lsh_pairs(base, signature="bogus")
+    # the relational form is a reference only: no selector reaches it
+    with pytest.raises(TypeError, match="signature"):
+        embedding_lsh_pairs(base, signature="join")
+
+
+def _lsh_pairs_from_buckets(buckets, vecs, threshold, cap):
+    """{(id_a, id_b): cosine} for the in-bucket pairs of (vec_id, band,
+    bucket) rows whose bucket holds at most ``cap`` members, verified by
+    the exact cosine (same left-to-right double sums as with_cosine)."""
+    import math
+
+    groups: dict = {}
+    for vid, band, bucket in buckets:
+        groups.setdefault((band, bucket), set()).add(vid)
+    cand = {(a, b) for m in groups.values() if len(m) <= cap
+            for a in m for b in m if a < b}
+    out = {}
+    for a, b in cand:
+        va, vb = vecs[a], vecs[b]
+        dot = sum(x * y for x, y in zip(va, vb))
+        cos = dot / (math.sqrt(sum(x * x for x in va))
+                     * math.sqrt(sum(y * y for y in vb)))
+        if round(cos, 6) >= threshold:
+            out[(a, b)] = round(cos, 6)
+    return out
 
 
 def test_incremental_minhash_is_exactly_the_new_involving_pairs(spark, docs):
@@ -548,14 +575,16 @@ def test_simhash_arrow_matches_relational(spark, docs):
     eb = {tuple(r) for r in simhash_arrow(edge).collect()}
     assert ea == eb and {i for i, _ in ea} == {0, 1, 2, 4}
 
-    # end-to-end pairs agree between signature impls
-    pj = {tuple(r) for r in simhash_hamming_pairs(docs, signature="join").collect()}
-    pa_ = {tuple(r) for r in simhash_hamming_pairs(docs, signature="arrow").collect()}
-    assert pj == pa_ and pj
+    # end to end: the Arrow-stage pairs are exactly the pairs within 3
+    # bits under the RELATIONAL signatures (pigeonhole: exact recall)
+    want = {(i, j, bin(hi ^ hj).count("1")) for i, hi in a for j, hj in a
+            if i < j and bin(hi ^ hj).count("1") <= 3}
+    pa_ = {tuple(r) for r in simhash_hamming_pairs(docs).collect()}
+    assert pa_ == want and pa_
 
     import pytest as _pytest
-    with _pytest.raises(ValueError, match="signature"):
-        simhash_hamming_pairs(docs, signature="bogus")
+    with _pytest.raises(TypeError, match="signature"):
+        simhash_hamming_pairs(docs, signature="join")
     with _pytest.raises(ValueError, match="exceeds 63"):
         simhash_arrow(docs, bits=64)
 

@@ -65,20 +65,30 @@ def test_arrow_lsh_mixed_widths_fail_instead_of_silent_garbage(spark):
 
 
 def test_arrow_lsh_uniform_width_still_matches_join_form(spark):
-    # the width guard must not change results on a healthy corpus
-    from autoner_spark.similarity import embedding_lsh_pairs
+    # the width guard must not change results on a healthy corpus: the
+    # Arrow buckets equal the relational (join-form) buckets, and the
+    # guarded pairs (dim inferred) equal the unguarded ones (dim given)
+    from autoner_spark.similarity import (
+        embedding_lsh_pairs,
+        lsh_band_buckets,
+        lsh_band_buckets_arrow,
+    )
 
     vecs = spark.createDataFrame(
         [(i, [float(i % 3) - 1.0, 0.5, -0.25, float(i) / 10]) for i in
          range(12)],
         "vec_id long, embedding array<double>",
     )
-    arrow = {(r.id_a, r.id_b, r.cosine)
+    arrow_b = {tuple(r) for r in lsh_band_buckets_arrow(vecs, 4, 2).collect()}
+    join_b = {tuple(r) for r in lsh_band_buckets(vecs, 4, 2).collect()}
+    assert arrow_b == join_b and arrow_b
+
+    guarded = {(r.id_a, r.id_b, r.cosine)
+               for r in embedding_lsh_pairs(vecs, threshold=0.9,
+                                            bits_per_band=4,
+                                            n_bands=2).collect()}
+    given = {(r.id_a, r.id_b, r.cosine)
              for r in embedding_lsh_pairs(vecs, threshold=0.9,
-                                          bits_per_band=4,
-                                          n_bands=2).collect()}
-    join = {(r.id_a, r.id_b, r.cosine)
-            for r in embedding_lsh_pairs(vecs, threshold=0.9,
-                                         bits_per_band=4, n_bands=2,
-                                         signature="join").collect()}
-    assert arrow == join
+                                          bits_per_band=4, n_bands=2,
+                                          dim=4).collect()}
+    assert guarded == given and guarded

@@ -24,7 +24,7 @@ def test_stateful_conversation_totals(spark, tmp_path):
 
     # several micro-batches so state carries ACROSS batches
     stream = read_transcripts_stream(spark, path, max_files_per_trigger=1)
-    mentions = tag_stream(stream, trie, spark=spark)
+    mentions = tag_stream(stream, trie)
     totals = conversation_state(mentions.drop("ts"))
     run_available_now(
         totals, "conv_state", str(tmp_path / "ck"), output_mode="update"
@@ -95,7 +95,7 @@ def test_state_eviction_timeout(spark, tmp_path):
         write_one(c, f"f{i}")
 
     stream = read_transcripts_stream(spark, path, max_files_per_trigger=1)
-    mentions = tag_stream(stream, trie, spark=spark)
+    mentions = tag_stream(stream, trie)
     totals = conversation_state(mentions.drop("ts"), evict_after_ms=1)
     # a timeout-armed query never self-terminates under availableNow
     # (timeout-servicing batches keep it alive): poll the sink, then stop

@@ -25,7 +25,7 @@ def test_stream_tag_equals_batch(spark, tmp_path):
 
     stream = read_transcripts_stream(spark, path, max_files_per_trigger=1)
     assert stream.isStreaming
-    mentions = tag_stream(stream, trie, spark=spark)
+    mentions = tag_stream(stream, trie)
     run_available_now(mentions, "stream_mentions", str(tmp_path / "ck1"))
     got = {
         tuple(r)
@@ -42,7 +42,7 @@ def test_windowed_mention_rate_matches_batch(spark, tmp_path):
     trie = build_trie(synth.dict_spec())
 
     stream_counts = mention_rate(
-        tag_stream(read_transcripts_stream(spark, path), trie, spark=spark)
+        tag_stream(read_transcripts_stream(spark, path), trie)
     )
     run_available_now(
         stream_counts, "stream_rate", str(tmp_path / "ck2"), output_mode="append"

@@ -62,7 +62,7 @@ def test_streaming_dedup_tag_state_composed(spark, tmp_path):
                            horizon="1 hour").withColumn(
         "text", F.substring_index("text", "\x1f", -1)
     ).drop("text_hash")
-    mentions = tag_stream(deduped, trie, spark=spark)
+    mentions = tag_stream(deduped, trie)
     totals = conversation_state(mentions.drop("ts"), evict_after_ms=1)
 
     q = run_available_now(
