@@ -45,19 +45,24 @@ def connected_components(
     self-loops or be unioned by the caller.
 
     Scale-adaptive (the CC analogue of a broadcast-join threshold): the
-    DISTINCT edge set — tiny for surface-equivalence graphs even when the
+    DISTINCT undirected edge set — each edge oriented once, so (a, b) and
+    (b, a) count as one; tiny for surface-equivalence graphs even when the
     mention stream is 10^12 rows, since it is bounded by distinct surface
-    forms — is counted first; below ``driver_threshold`` edges the component
-    labeling runs as driver-side union-find on the collected distinct edges
-    (one shuffle for distinct, no iteration). Above it,
-    ``connected_components_star`` runs with ``max_iter`` rounds. Both paths
-    produce identical labels.
+    forms — is counted first; at most ``driver_threshold`` undirected
+    edges, the component labeling runs as driver-side union-find on the
+    collected distinct edges (one shuffle for distinct, no iteration).
+    Above it, ``connected_components_star`` runs with ``max_iter`` rounds.
+    Both paths produce identical labels.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # undirected: symmetrize once
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    sym = sym.distinct()
+    # undirected: orient each edge once (greatest -> least, the form the
+    # star rounds work on); self-loops stay, they carry isolated nodes
+    sym = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .select(F.greatest("src", "dst").alias("src"),
+                F.least("src", "dst").alias("dst"))
+        .distinct()
+    )
 
     if driver_threshold:
         # ONE job decides the path AND fetches the edges: collect at most
@@ -175,7 +180,8 @@ def connected_components_star(
 
 
 def _union_find_labels(pairs: list[tuple[str, str]]) -> dict[str, str]:
-    """Min-label union-find over symmetrized edge pairs (driver-side path)."""
+    """Min-label union-find over undirected edge pairs, each in either
+    orientation (driver-side path)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:

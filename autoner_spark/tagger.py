@@ -12,7 +12,12 @@ Iceberg/parquet transcripts table, Spark-first:
   structural), so it runs as ONE narrow `mapInArrow` stage — Arrow batches
   in, Arrow batches out, no shuffle, no per-row Python UDF — whose one
   executor is the vectorized ``autoner_spark.tagvec`` engine, for every
-  tokenizer and passthrough column;
+  tokenizer and passthrough column. ``tag_stage`` is that stage for any
+  tagvec emitter: ``triples.build_kg`` runs it for the mentions, the
+  linked mentions and the triples over one broadcast;
+* conv_id and turn_idx are copied from the source row, so the output
+  declares them as nullable as the input does (a NULL id on a matching
+  turn is carried, not a JVM NullPointerException);
 * ``tag_tokens_compiled`` is the scalar reference that engine is pinned to:
   a from-scratch DP, deliberately independent from the readable oracle in
   ``autoner_spark.oracle`` so the pytest parity suite cross-checks the
@@ -36,7 +41,9 @@ from __future__ import annotations
 
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -58,6 +65,9 @@ MENTIONS_SCHEMA = StructType(
         StructField("entity_type", StringType(), False),
     ]
 )
+
+# the source-row ids every tagvec emitter copies onto its rows
+_ID_COLS = ("conv_id", "turn_idx")
 
 # Compiled automaton node layout: (children: dict[int, node] | None,
 # kind: 0 none / 1 entity / 2 filtered, type_str: comma-joined sorted types).
@@ -214,17 +224,37 @@ def tag_transcripts(
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
     bc_vec = transcripts.sparkSession.sparkContext.broadcast(
         tagvec.compile_vec(compile_trie(trie)))
+    return tag_stage(
+        transcripts.select("conv_id", "turn_idx", "text", *passthrough),
+        bc_vec, tagvec.tag_record_batch, tagvec.OUT_SCHEMA, weight, tokenizer)
+
+
+def tag_stage(
+    src: DataFrame,
+    bc_vec,
+    emit,
+    schema: pa.Schema,
+    weight: float = 1.0,
+    tokenizer: str = "whitespace",
+) -> DataFrame:
+    """One narrow ``mapInArrow`` over ``src`` (conv_id, turn_idx, text,
+    *passthrough) running ``emit`` (a ``tagvec`` emitter, output
+    ``schema`` then the passthrough columns) with the broadcast compiled
+    automaton ``bc_vec``. conv_id and turn_idx are copied from the source
+    row, so they are as nullable as ``src`` declares them."""
+    cols = src.schema
     out_schema = StructType(
-        list(MENTIONS_SCHEMA.fields)
-        + [transcripts.schema[c] for c in passthrough]
+        [StructField(f.name, f.dataType,
+                     cols[f.name].nullable if f.name in _ID_COLS
+                     else f.nullable)
+         for f in from_arrow_schema(schema)]
+        + cols.fields[3:]
     )
 
     def tag_arrow(batches):
         pyworker.install()
         vec = bc_vec.value
         for batch in batches:
-            yield tagvec.tag_record_batch(batch, vec, weight, tokenizer)
+            yield emit(batch, vec, weight, tokenizer)
 
-    return transcripts.select(
-        "conv_id", "turn_idx", "text", *passthrough
-    ).mapInArrow(tag_arrow, out_schema)
+    return src.mapInArrow(tag_arrow, out_schema)

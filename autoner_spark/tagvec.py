@@ -27,10 +27,19 @@ Python token at a time:
   ``tag_tokens_compiled``'s; cutting at runs keeps that only when every
   score delta is an integer (e.g. the default weight=1.0), so any other
   weight cuts at turn boundaries alone — one row per turn with a match;
-* traceback runs as vectorized pointer-chasing rounds; surfaces are
-  re-assembled with ``pyarrow.compute.binary_join`` over token slices (no
-  per-mention Python string work), and passthrough columns are copied
-  onto each mention with one ``take`` by its source row.
+* traceback runs as vectorized pointer-chasing rounds and yields each
+  segment's terminal trie state. Every mention column but the source-row
+  ones is a ``take`` by that state from arrays ``compile_vec`` built once:
+  token ids are a bijection with the vocabulary strings (the remapped
+  "\\n" edge is unreachable), so a state's path fixes the surface, its
+  ``ascii_lower`` norm, the dictionary surfaces sharing that norm and
+  the type list. Passthrough columns are copied onto each mention with
+  one ``take`` by its source row;
+* three sibling emitters run over the same segments: mentions
+  (``tag_record_batch``), linked mentions (``link_record_batch``, the
+  left join to the dictionary's surfaces with its multiplicity) and
+  ``(subj, pred, obj)`` triples (``triple_record_batch``), so
+  ``triples.build_kg`` links and assembles inside the batch.
 
 Parity with the scalar path is pinned by tests/test_tagvec_parity.py (and
 transitively by the oracle/binary parity suite, which runs the Spark tagger
@@ -44,13 +53,14 @@ is the compiled transition table (built once per broadcast value).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from typing import Any
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .textutil import SEPARATORS
+from .textutil import SEPARATORS, ascii_lower
 
 _KIND_ENTITY = 1
 
@@ -68,19 +78,45 @@ TOKENIZER_NAMES = ("whitespace", "charclass")
 _CHARCLASS_SEP_RE = "[" + "".join(
     "\\" + c if c in "[]\\^-" else c for c in _SKIP_CHARS) + "]"
 
+# conv_id and turn_idx are copied from the source row and may be NULL;
+# every other column is a function of the segment and never is
 OUT_SCHEMA = pa.schema(
     [
         pa.field("conv_id", pa.string()),
         pa.field("turn_idx", pa.int32()),
-        pa.field("begin_tok", pa.int32()),
-        pa.field("end_tok", pa.int32()),
-        pa.field("surface", pa.string()),
-        pa.field("entity_type", pa.string()),
+        pa.field("begin_tok", pa.int32(), False),
+        pa.field("end_tok", pa.int32(), False),
+        pa.field("surface", pa.string(), False),
+        pa.field("entity_type", pa.string(), False),
     ]
 )
 
+# ``triples.link_mentions``'s columns: the mention, its norm and score,
+# and one dictionary surface sharing the norm (NULL when none does)
+LINKED_SCHEMA = pa.schema(
+    [
+        pa.field("surface_norm", pa.string(), False),
+        *OUT_SCHEMA,
+        pa.field("score", pa.float64(), False),
+        pa.field("dict_surface", pa.string()),
+    ]
+)
 
-def compile_vec(compiled: dict[str, Any]) -> dict[str, Any]:
+TRIPLES_SCHEMA = pa.schema(
+    [
+        pa.field("subj", pa.string(), False),
+        pa.field("pred", pa.string(), False),
+        pa.field("obj", pa.string(), False),
+        OUT_SCHEMA.field("conv_id"),
+        OUT_SCHEMA.field("turn_idx"),
+    ]
+)
+
+_PREDS = pa.array(["has_type", "mentioned_in"], pa.string())
+
+
+def compile_vec(compiled: dict[str, Any],
+                links: Iterable[tuple[str, str]] = ()) -> dict[str, Any]:
     """Flatten the nested-dict automaton from ``tagger.compile_trie`` into
     the array form the batch engine consumes.
 
@@ -89,11 +125,22 @@ def compile_vec(compiled: dict[str, Any]) -> dict[str, Any]:
     remap (vocab["\\n"] == NEWLINE_ID) is inherited via pos_to_id, so a
     pathological newline trie edge stays unreachable exactly as in the
     scalar walk.
+
+    Per state, the BFS also records its path's surface (the tokens joined
+    by spaces) and the surface's ``ascii_lower`` norm; then ``subj``
+    (``'ent:' || norm``) and the slice ``link_lo``/``link_n`` of
+    ``link_vals`` holding the dictionary surfaces of ``links`` ((norm,
+    dictionary surface) pairs, ``triples.dict_link_pairs``) that share
+    the norm. ``type_off``/``type_vals`` split each comma-joined type set
+    into its types (CSR).
     """
     vocab: dict[str, int] = compiled["vocab"]
     tokens = list(vocab.keys())
     pos_to_id = np.fromiter(vocab.values(), dtype=np.int64, count=len(vocab))
     V = int(pos_to_id.max(initial=-1)) + 1
+    # (token, ascii_lower(token)) by id; the one id without a token is
+    # the "\n" edge's, remapped away
+    tok_of = {i: (t, ascii_lower(t)) for t, i in vocab.items()}
 
     root = compiled["root"]
     kinds: list[int] = []
@@ -113,8 +160,11 @@ def compile_vec(compiled: dict[str, Any]) -> dict[str, Any]:
             type_strs.append(ts)
         return i
 
-    # BFS; state 0 == root (kind/tsid of the root are never consulted)
+    # BFS; state 0 == root (kind/tsid/surface of the root are never
+    # consulted)
     queue: list[tuple] = [root]
+    surfs: list[str] = [""]
+    norms: list[str] = [""]
     depth_of: list[int] = [0]
     max_depth = 0
     idx = 0
@@ -127,9 +177,14 @@ def compile_vec(compiled: dict[str, Any]) -> dict[str, Any]:
         d = depth_of[idx]
         max_depth = max(max_depth, d)
         if kids is not None:
+            prefix = surfs[idx] + " " if idx else ""
+            nprefix = norms[idx] + " " if idx else ""
             for tid, child in kids.items():
                 cidx = len(queue)
                 queue.append(child)
+                tok, low = tok_of.get(tid, ("\n", "\n"))
+                surfs.append(prefix + tok)
+                norms.append(nprefix + low)
                 depth_of.append(d + 1)
                 if idx == 0:
                     if 0 <= tid < V:
@@ -157,6 +212,20 @@ def compile_vec(compiled: dict[str, Any]) -> dict[str, Any]:
         trans_dense = np.full((nstates, max(V, 1)), -1, dtype=np.int32)
         if len(tkeys_a):
             trans_dense[tkeys_a // V, tkeys_a % V] = tvals_a
+
+    # links: the (norm, surface) pairs grouped by norm; a state's group is
+    # an exact-string lookup of its norm (ascii_lower distributes over
+    # the space join, so the norm is the path of lowered tokens)
+    pairs = sorted(set(links))
+    first: dict[str, int] = {}
+    for k, (norm, _) in enumerate(pairs):
+        first.setdefault(norm, k)
+    starts = np.fromiter(first.values(), dtype=np.int64, count=len(first))
+    sizes = np.diff(np.append(starts, len(pairs)))
+    norm_a = pa.array(norms, pa.string())
+    g = pc.fill_null(pc.index_in(norm_a, value_set=pa.array(
+        list(first), pa.string())), -1).to_numpy()
+    type_lists = [ts.split(",") for ts in type_strs]
     return {
         "value_set": pa.array(tokens, pa.string()),
         "pos_to_id": pos_to_id,
@@ -169,6 +238,16 @@ def compile_vec(compiled: dict[str, Any]) -> dict[str, Any]:
         "tsid": np.asarray(tsids, dtype=np.int64),
         "haskid": np.asarray(haskid, dtype=bool),
         "types": pa.array(type_strs, pa.string()),
+        "type_off": np.cumsum([0] + [len(t) for t in type_lists]),
+        "type_vals": pa.array([t for ts in type_lists for t in ts],
+                              pa.string()),
+        "surface": pa.array(surfs, pa.string()),
+        "norm": norm_a,
+        "subj": pc.binary_join_element_wise("ent:", norm_a, ""),
+        # g == -1 (no dictionary surface has the norm) picks the 0 appended
+        "link_lo": np.append(starts, 0)[g],
+        "link_n": np.append(sizes, 0)[g],
+        "link_vals": pa.array([x for _, x in pairs], pa.string()),
         "max_depth": max_depth,
         "skip_set": pa.array(_SKIP_CHARS, pa.string()),
     }
@@ -270,13 +349,14 @@ def _dp_segments(
     m_i: np.ndarray,
     m_d: np.ndarray,
     m_kind: np.ndarray,
-    m_ts: np.ndarray,
+    m_st: np.ndarray,
     order: np.ndarray,
     weight: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Lockstep DP + traceback over all DP rows (rows already sorted by
     descending length via ``order``). Returns ENTITY segments as
-    (sorted_row, begin, end, tsid) arrays (unordered).
+    (sorted_row, begin, end, state) arrays (unordered), state being
+    the terminal trie state of the segment's match.
 
     Column pass: cell c of every active row holds the max over its
     candidates — matches of depth d (value f[c-d] + delta_d) plus the
@@ -409,7 +489,7 @@ def _dp_segments(
     seg_r: list[np.ndarray] = []
     seg_b: list[np.ndarray] = []
     seg_e: list[np.ndarray] = []
-    seg_t: list[np.ndarray] = []
+    seg_s: list[np.ndarray] = []
     j = lens.astype(np.int64, copy=True)
     rows = np.flatnonzero(j > 0)
     while rows.size:
@@ -426,7 +506,7 @@ def _dp_segments(
                 seg_r.append(rows[em][ent])
                 seg_b.append(ii[em][ent])
                 seg_e.append(jr[em][ent])
-                seg_t.append(m_ts[idxs[ent]])
+                seg_s.append(m_st[idxs[ent]])
         j[rows] = ii
         rows = rows[ii > 0]
     if not seg_r:
@@ -436,26 +516,24 @@ def _dp_segments(
         np.concatenate(seg_r),
         np.concatenate(seg_b),
         np.concatenate(seg_e),
-        np.concatenate(seg_t),
+        np.concatenate(seg_s),
     )
 
 
-def tag_record_batch(
+def _segments(
     batch: pa.RecordBatch,
     vec: dict[str, Any],
-    weight: float = 1.0,
-    tokenizer: str = "whitespace",
-) -> pa.RecordBatch:
-    """(conv_id, turn_idx, text, *passthrough) record batch -> mentions
-    record batch (OUT_SCHEMA, then the passthrough columns).
+    weight: float,
+    tokenizer: str,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The entity segments of a (conv_id, turn_idx, text, ...) batch as
+    (source row, begin_tok, end_tok, terminal state) arrays, in the scalar
+    emission order: batch row order, then ascending begin.
 
     Tokenization (``tokenizer``, one of TOKENIZER_NAMES; empty tokens
     dropped), the full DP + extraction, all batch-at-a-time. NULL or empty
-    text tags nothing. Every column after ``text`` is copied onto each
-    mention from its source row.
+    text tags nothing.
     """
-    conv_col = batch.column(0)
-    turn_col = batch.column(1)
     text = pc.coalesce(batch.column(2), pa.scalar("", pa.string()))
     if tokenizer == "charclass":
         text = pc.replace_substring(
@@ -464,9 +542,7 @@ def tag_record_batch(
     elif tokenizer != "whitespace":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
     nrows = len(text)
-    schema = OUT_SCHEMA if batch.num_columns == 3 else pa.schema(
-        [*OUT_SCHEMA, *list(batch.schema)[3:]])
-    empty = _empty_batch(schema)
+    empty = (np.empty(0, dtype=np.int64),) * 4
     if nrows == 0:
         return empty
 
@@ -541,9 +617,8 @@ def tag_record_batch(
     row_of_run[order] = np.arange(r_len.size, dtype=np.int64)
 
     kindv = vec["kind"][m_st].astype(np.int8, copy=False)
-    tsv = vec["tsid"][m_st]
-    s_r, s_b, s_e, s_t = _dp_segments(
-        r_len, row_of_run[m_row], m_i, m_d, kindv, tsv, order, weight
+    s_r, s_b, s_e, s_st = _dp_segments(
+        r_len, row_of_run[m_row], m_i, m_d, kindv, m_st, order, weight
     )
     if s_r.size == 0:
         return empty
@@ -567,52 +642,139 @@ def tag_record_batch(
             t_orig = t_orig[keep_m]
             s_b = s_b[keep_m]
             s_e = s_e[keep_m]
-            s_t = s_t[keep_m]
+            s_st = s_st[keep_m]
             flat_start = flat_start[keep_m]
             if t_orig.size == 0:
                 return empty
 
-    # emit in the scalar order: batch row order, then ascending begin —
-    # the order of the (unique) flat start positions
+    # the scalar order is that of the (unique) flat start positions
     ordm = np.argsort(flat_start)
-    t_orig = t_orig[ordm]
-    s_b = s_b[ordm]
-    s_e = s_e[ordm]
-    s_t = s_t[ordm]
-    flat_start = flat_start[ordm]
+    return t_orig[ordm], s_b[ordm], s_e[ordm], s_st[ordm]
 
-    # surfaces: gather each mention's token range and space-join it
-    lengths = s_e - s_b
-    cum = np.concatenate(([0], np.cumsum(lengths)))
-    total = int(cum[-1])
-    gather = np.repeat(flat_start - cum[:-1], lengths) + np.arange(
-        total, dtype=np.int64
-    )
-    toks_m = flat.take(pa.array(gather, pa.int64()))
-    lists = pa.ListArray.from_arrays(
-        pa.array(cum, pa.int32()), toks_m
-    )
-    surface = pc.binary_join(lists, " ")
 
-    t_idx = pa.array(t_orig, pa.int64())
-    conv_out = conv_col.take(t_idx)
-    turn_out = pc.cast(turn_col.take(t_idx), pa.int32())
-    etype = vec["types"].take(pa.array(s_t, pa.int64()))
+def _mention_columns(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    t: np.ndarray,
+    b: np.ndarray,
+    e: np.ndarray,
+    st: np.ndarray,
+) -> list[pa.Array]:
+    """OUT_SCHEMA's columns for segments (source row, begin, end, state):
+    the ids by source row, the surface and type set by state."""
+    t_idx = pa.array(t, pa.int64())
+    return [
+        batch.column(0).take(t_idx),
+        pc.cast(batch.column(1).take(t_idx), pa.int32()),
+        pa.array(b.astype(np.int32), pa.int32()),
+        pa.array(e.astype(np.int32), pa.int32()),
+        vec["surface"].take(pa.array(st, pa.int64())),
+        vec["types"].take(pa.array(vec["tsid"][st], pa.int64())),
+    ]
+
+
+def _expand(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(owner, rank) of ``counts.sum()`` rows: ``counts[i]`` rows owned by
+    i, ranked 0, 1, ... within it."""
+    owner = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    return owner, np.arange(len(owner), dtype=np.int64) - np.repeat(
+        np.cumsum(counts) - counts, counts)
+
+
+def _link_rows(st: np.ndarray,
+               vec: dict[str, Any]) -> tuple[np.ndarray, np.ndarray]:
+    """Left join of segments (by terminal state) to the dictionary
+    surfaces sharing their norm: (segment, ``link_vals`` index or -1)
+    per joined row, one row per linked surface or one with -1."""
+    n = vec["link_n"][st]
+    seg, rank = _expand(np.maximum(n, 1))
+    return seg, np.where(n[seg] > 0, vec["link_lo"][st][seg] + rank, -1)
+
+
+def tag_record_batch(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    weight: float = 1.0,
+    tokenizer: str = "whitespace",
+) -> pa.RecordBatch:
+    """(conv_id, turn_idx, text, *passthrough) record batch -> mentions
+    record batch (OUT_SCHEMA, then the passthrough columns). Every column
+    after ``text`` is copied onto each mention from its source row."""
+    t, b, e, st = _segments(batch, vec, weight, tokenizer)
+    t_idx = pa.array(t, pa.int64())
     return pa.RecordBatch.from_arrays(
         [
-            conv_out,
-            turn_out,
-            pa.array(s_b.astype(np.int32), pa.int32()),
-            pa.array(s_e.astype(np.int32), pa.int32()),
-            surface,
-            etype,
+            *_mention_columns(batch, vec, t, b, e, st),
             *(batch.column(i).take(t_idx)
               for i in range(3, batch.num_columns)),
         ],
-        schema=schema,
+        schema=pa.schema([*OUT_SCHEMA, *list(batch.schema)[3:]]),
     )
 
 
-def _empty_batch(schema: pa.Schema) -> pa.RecordBatch:
+def link_record_batch(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    weight: float = 1.0,
+    tokenizer: str = "whitespace",
+) -> pa.RecordBatch:
+    """(conv_id, turn_idx, text) record batch -> linked mentions
+    (LINKED_SCHEMA): ``triples.link_mentions`` over this batch's mentions
+    and ``vec``'s links, computed by state."""
+    t, b, e, st = _segments(batch, vec, weight, tokenizer)
+    seg, link = _link_rows(st, vec)
+    t, b, e, st = t[seg], b[seg], e[seg], st[seg]
+    span = (e - b).astype(np.float64)
     return pa.RecordBatch.from_arrays(
-        [pa.array([], f.type) for f in schema], schema=schema)
+        [
+            vec["norm"].take(pa.array(st, pa.int64())),
+            *_mention_columns(batch, vec, t, b, e, st),
+            pa.array(span * span, pa.float64()),
+            vec["link_vals"].take(pa.array(link, pa.int64(), mask=link < 0)),
+        ],
+        schema=LINKED_SCHEMA,
+    )
+
+
+def triple_record_batch(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    weight: float = 1.0,
+    tokenizer: str = "whitespace",
+) -> pa.RecordBatch:
+    """(conv_id, turn_idx, text) record batch -> (subj, pred, obj,
+    conv_id, turn_idx) triples (TRIPLES_SCHEMA). Each linked mention of
+    ``link_record_batch`` gives one ``has_type`` triple per type of its
+    set, then one ``mentioned_in`` triple whose object is Spark's
+    ``concat_ws('#', conv_id, turn_idx)`` (NULLs skipped)."""
+    t, _, _, st = _segments(batch, vec, weight, tokenizer)
+    seg, _ = _link_rows(st, vec)
+    t, st = t[seg], st[seg]
+    type_off = vec["type_off"]
+    ts = vec["tsid"][st]
+    n_types = type_off[ts + 1] - type_off[ts]
+    row, rank = _expand(n_types + 1)
+    mentioned = rank == n_types[row]
+
+    # objects: the type strings, then each source row's conv_id#turn_idx.
+    # (binary_join_element_wise's "skip" null handling drops the rows
+    # where every input is NULL, so the NULL cases are coalesced instead.)
+    conv = batch.column(0)
+    turn = pc.cast(batch.column(1), pa.string())
+    where = pc.coalesce(pc.binary_join_element_wise(conv, turn, "#"), conv,
+                        turn, pa.scalar("", pa.string()))
+    types = vec["type_vals"]
+    obj_idx = np.where(mentioned, len(types) + t[row],
+                       type_off[ts[row]] + rank)
+    t_idx = pa.array(t[row], pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            vec["subj"].take(pa.array(st[row], pa.int64())),
+            _PREDS.take(pa.array(mentioned.astype(np.int8))),
+            pa.concat_arrays([types, where]).take(
+                pa.array(obj_idx, pa.int64())),
+            conv.take(t_idx),
+            pc.cast(batch.column(1).take(t_idx), pa.int32()),
+        ],
+        schema=TRIPLES_SCHEMA,
+    )

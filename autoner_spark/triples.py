@@ -6,8 +6,12 @@ Pipeline position (SURVEY.md §3.4): mentions (from the distributed tagger)
 (test_partial_ner.py:99-109) with graph tables.
 
 Spark-first choices:
-* the dictionary is tiny next to the corpus -> canonical-surface mapping is
-  a **broadcast** join (never a shuffle of the mention stream);
+* the dictionary is tiny next to the corpus -> it never costs a shuffle of
+  the mention stream. ``build_kg`` links inside the tagger's Arrow batches:
+  a match's terminal trie state fixes its surface, so the dictionary
+  surfaces sharing its norm are a lookup by state, compiled into the
+  automaton's one broadcast (``tagvec.compile_vec``). Mentions read from a
+  table go through ``link_mentions``, a **broadcast** join;
 * the entity id is ``'ent:' || surface_norm``, with no connected
   components: every edge ``link_mentions`` can produce is a self-loop (see
   ``kg_from_mentions``), so ``build_kg`` is one lazy pass with nothing
@@ -16,7 +20,9 @@ Spark-first choices:
 * ids are order-free, so results are independent of partitioning — no
   monotonically_increasing_id anywhere;
 * has_type triples follow the trie's type-SET semantics: one triple per
-  type in the comma-joined set (SURVEY.md §7.3 decision), exploded JVM-side.
+  type in the comma-joined set (SURVEY.md §7.3 decision), emitted in the
+  Arrow batch by ``build_kg`` (``tagvec.triple_record_batch``) and
+  exploded JVM-side by ``assemble_triples`` / ``kg_from_mentions``.
 """
 
 from __future__ import annotations
@@ -51,14 +57,19 @@ def dict_surfaces_df(spark, spec: DictionarySpec) -> DataFrame:
     )
 
 
+def dict_link_pairs(spec: DictionarySpec) -> list[tuple[str, str]]:
+    """The distinct (surface_norm, dict_surface) pairs of dict_core,
+    sorted: what ``link_mentions`` derives from ``dict_surfaces_df``."""
+    return sorted({(ascii_lower(s), s) for _, s in spec.core})
+
+
 def dict_links_df(spark, spec: DictionarySpec) -> DataFrame:
-    """The distinct (surface_norm, dict_surface) pairs of dict_core — what
-    ``link_mentions`` derives from ``dict_surfaces_df`` — deduplicated on
-    the driver and handed to Spark as a local relation (Arrow), so
-    broadcasting it runs no shuffle job."""
+    """``dict_link_pairs`` handed to Spark as a local relation (Arrow), so
+    broadcasting it runs no shuffle job — the linking dimension of
+    ``kg_from_mentions``."""
     import pyarrow as pa
 
-    pairs = sorted({(ascii_lower(s), s) for _, s in spec.core})
+    pairs = dict_link_pairs(spec)
     return spark.createDataFrame(pa.table({
         "surface_norm": pa.array([n for n, _ in pairs], pa.string()),
         "dict_surface": pa.array([s for _, s in pairs], pa.string()),
@@ -184,7 +195,9 @@ def assemble_triples(linked: DataFrame, entities: DataFrame) -> DataFrame:
 def kg_from_mentions(spark, mentions: DataFrame,
                      spec: DictionarySpec) -> dict[str, DataFrame]:
     """mentions -> linked -> entities, triples: one lazy pass, no job runs
-    here. Shared by ``build_kg`` and tools/run_job.py.
+    here. For mentions read from a table (tools/run_job.py's resumable
+    mentions, markup, ``.ck`` ingest); ``build_kg`` computes the same
+    outputs inside the tagger's Arrow batches.
 
     subj = ``'ent:' || surface_norm`` is what
     ``assemble_triples(linked, canonical_entities(linked))`` yields: every
@@ -209,11 +222,33 @@ def kg_from_mentions(spark, mentions: DataFrame,
 
 def build_kg(spark, transcripts: DataFrame, spec: DictionarySpec,
              trie=None) -> dict[str, DataFrame]:
-    """Full pipeline: transcripts -> mentions -> linked -> entities,
-    triples. All lazy: no job runs here, and draining ``triples`` tags
-    each turn once (nothing is cached)."""
-    from .dictionary import build_trie
-    from .tagger import tag_transcripts
+    """Full pipeline: transcripts -> mentions, linked, entities, triples.
+    All lazy: no job runs here, and nothing is cached.
 
-    mentions = tag_transcripts(transcripts, trie or build_trie(spec))
-    return {"mentions": mentions, **kg_from_mentions(spark, mentions, spec)}
+    The automaton is compiled with ``spec``'s link pairs and broadcast
+    once; mentions, linked mentions and triples are each one narrow
+    ``mapInArrow`` over the transcripts (``tagvec``'s three emitters), so
+    draining ``triples`` is one job that tags each turn once: linking is
+    a lookup by the match's trie state (the dictionary surfaces sharing
+    the ``ascii_lower`` of its path), not a join. Multiset-equal to
+    ``kg_from_mentions`` over ``tag_transcripts``' mentions
+    (tests/test_kg_streaming.py)."""
+    from . import tagvec
+    from .dictionary import build_trie
+    from .tagger import compile_trie, tag_stage
+
+    vec = tagvec.compile_vec(compile_trie(trie or build_trie(spec)),
+                             dict_link_pairs(spec))
+    bc_vec = spark.sparkContext.broadcast(vec)
+    src = transcripts.select("conv_id", "turn_idx", "text")
+    linked = tag_stage(src, bc_vec, tagvec.link_record_batch,
+                       tagvec.LINKED_SCHEMA)
+    return {
+        "mentions": tag_stage(src, bc_vec, tagvec.tag_record_batch,
+                              tagvec.OUT_SCHEMA),
+        "linked": linked,
+        "entities": linked.selectExpr(
+            "surface_norm", "'ent:' || surface_norm AS entity_id").distinct(),
+        "triples": tag_stage(src, bc_vec, tagvec.triple_record_batch,
+                             tagvec.TRIPLES_SCHEMA),
+    }

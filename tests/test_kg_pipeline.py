@@ -116,6 +116,27 @@ def test_connected_components_chain_and_determinism(spark):
     assert all(comp == "n00" for _, comp in c1)
 
 
+def test_connected_components_threshold_counts_undirected_edges(
+        spark, monkeypatch):
+    """An edge listed in both directions is one edge: a k-edge graph given
+    both ways (2k rows) stays on the driver path at ``driver_threshold=k``
+    and labels as the k-edge graph does."""
+    from autoner_spark import canonicalize
+
+    def no_star(*args, **kwargs):
+        raise AssertionError("took the distributed star path")
+
+    monkeypatch.setattr(canonicalize, "connected_components_star", no_star)
+    k = 6
+    rows = [(f"n{i}", f"n{i + 1}") for i in range(k)] + [("x", "y")]
+    rows += [(b, a) for a, b in rows]
+    df = spark.createDataFrame(rows, "src string, dst string").repartition(3)
+    got = {(r.node, r.comp)
+           for r in connected_components(df, driver_threshold=k + 1).collect()}
+    assert got == {(f"n{i}", "n0") for i in range(k + 1)} | {
+        ("x", "x"), ("y", "x")}
+
+
 # ---------------------------------------------------------------------------
 # pure-Python oracle for the full KG (union-find; independent of Spark path)
 # ---------------------------------------------------------------------------

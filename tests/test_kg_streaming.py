@@ -114,9 +114,9 @@ def _cache_empty(spark) -> bool:
 
 def test_build_kg_is_one_lazy_pass(spark):
     """Calling build_kg submits no Spark job; draining its triples reads
-    each transcript row once, submits one job more than the tagger alone
-    (the dictionary dimension's broadcast), as draining the bare linked
-    mention stream does, and caches nothing."""
+    each transcript row once, submits exactly the jobs of draining the
+    bare mention stream, as draining the linked mentions does, and caches
+    nothing."""
     from autoner_spark.caching import release_caches
 
     sc = spark.sparkContext
@@ -156,6 +156,103 @@ def test_build_kg_is_one_lazy_pass(spark):
     linked_jobs = jobs_of("kg-drain-linked", lambda: drain(kg["linked"]))
     mention_jobs = jobs_of("kg-drain-mentions",
                            lambda: drain(kg["mentions"]))
-    # the tagger's jobs plus one: the dictionary dimension's broadcast
-    # (no shuffle job to deduplicate it)
-    assert len(triple_jobs) == len(linked_jobs) == len(mention_jobs) + 1
+    # exactly the tagger's jobs: linking and the triples run inside its
+    # Arrow batches, with no dimension to broadcast
+    assert len(triple_jobs) == len(linked_jobs) == len(mention_jobs)
+
+
+def _kg_rows(kg):
+    return {k: Counter(map(tuple, kg[k].collect()))
+            for k in ("linked", "triples", "entities")}
+
+
+def _reference_kg(spark, transcripts, spec):
+    """The composition build_kg replaces: tagger mentions, the broadcast
+    join to the dictionary table, CC entities and the JVM triple
+    assembly."""
+    from autoner_spark.dictionary import build_trie
+    from autoner_spark.tagger import tag_transcripts
+
+    linked = link_mentions(tag_transcripts(transcripts, build_trie(spec)),
+                           dict_surfaces_df(spark, spec))
+    entities = canonical_entities(linked)
+    return {"linked": linked, "entities": entities,
+            "triples": assemble_triples(linked, entities)}
+
+
+def _assert_kg_matches_reference(spark, transcripts, spec):
+    kg = build_kg(spark, transcripts, spec)
+    ref = _reference_kg(spark, transcripts, spec)
+    ref["linked"] = ref["linked"].select(*kg["linked"].columns)
+    got, want = _kg_rows(kg), _kg_rows(ref)
+    for k in got:
+        assert got[k] == want[k], k
+    return got
+
+
+# core surfaces drawn from these: "Hash Join", "hash join" and "HASH join"
+# share a norm, "big  table" keeps a double space, "Élan Vital" and
+# "ÉLAN vital" differ only outside ASCII case folding; the full
+# dictionary adds FILTERED entries
+CORE_SURFACES = ["Hash Join", "hash join", "HASH join", "big  table",
+                 "Élan Vital", "ÉLAN vital", "élan vital", "stream",
+                 "Stream", "query plan"]
+TYPE_SETS = ["Operator", "Object", "Metric", "Object,Operator",
+             "Metric,Object,Operator"]
+FULL_SURFACES = ["query plan", "slow merge", "hash join", "big table",
+                 "the stream"]
+WORDS = ["hash", "Hash", "HASH", "join", "JOIN", "Join", "big", "BIG",
+         "table", "Élan", "ÉLAN", "élan", "vital", "Vital", "stream",
+         "Stream", "query", "plan", "slow", "merge", "the", ","]
+
+spec_st = st.builds(
+    lambda core, full: DictionarySpec(core=core, full=full, stopwords=[]),
+    st.lists(st.tuples(st.sampled_from(TYPE_SETS),
+                       st.sampled_from(CORE_SURFACES)),
+             min_size=1, max_size=8),
+    st.lists(st.sampled_from(FULL_SURFACES), max_size=4),
+)
+turn_st = st.tuples(
+    st.one_of(st.none(), st.sampled_from(["c0", "c1"])),
+    st.one_of(st.none(), st.integers(-2, 40)),
+    st.one_of(st.none(), st.lists(st.sampled_from(WORDS), max_size=14).map(
+        " ".join), st.sampled_from(["", "  hash  join  ", "BIG  TABLE"])),
+)
+
+
+@settings(max_examples=6, deadline=None)
+@given(spec=spec_st, turns=st.lists(turn_st, min_size=1, max_size=12))
+@example(spec=SPEC, turns=[(f"c{i % 3}", i, t) for i, t in enumerate(TEXTS)]
+         + [(None, 7, "Hash Join stream"), ("c9", None, "big table stream"),
+            (None, None, "stream")])
+def test_build_kg_matches_reference_composition(spark, spec, turns):
+    """build_kg's in-batch linked mentions, triples and entities are
+    multiset-equal to the reference composition
+    ``assemble_triples(link_mentions(tag_transcripts(...),
+    dict_surfaces_df(...)), canonical_entities(...))`` for any dictionary
+    over the shapes the state lookup must get right, NULL ids included."""
+    transcripts = spark.createDataFrame(
+        turns, "conv_id string, turn_idx int, text string").repartition(2)
+    _assert_kg_matches_reference(spark, transcripts, spec)
+
+
+def test_null_ids_are_carried_onto_mentions_and_triples(spark):
+    """A matching turn with a NULL conv_id or turn_idx is tagged, not a
+    crash: the NULL is carried onto its mentions, and the mentioned_in
+    object is Spark's concat_ws('#', conv_id, turn_idx), which skips
+    NULLs, as in the reference composition."""
+    from autoner_spark.dictionary import build_trie
+    from autoner_spark.tagger import tag_transcripts
+
+    turns = [(None, 1, "hash join"), ("c2", None, "stream"),
+             (None, None, "big table"), ("c3", 4, "Hash Join")]
+    transcripts = spark.createDataFrame(
+        turns, "conv_id string, turn_idx int, text string")
+    mentions = tag_transcripts(transcripts, build_trie(SPEC)).collect()
+    assert sorted(((r.conv_id or ""), r.turn_idx or -1, r.surface)
+                  for r in mentions) == [
+        ("", -1, "big table"), ("", 1, "hash join"), ("c2", -1, "stream"),
+        ("c3", 4, "Hash Join")]
+    got = _assert_kg_matches_reference(spark, transcripts, SPEC)
+    assert {t[2] for t in got["triples"] if t[1] == "mentioned_in"} == {
+        "1", "c2", "", "c3#4"}
