@@ -98,9 +98,14 @@ def connected_components_star(
 
     large-star: every neighbor v > u re-attaches to m = min(Γ(u) ∪ {u});
     small-star: every neighbor v <= u (and u itself) attaches to m.
-    At the fixpoint the edge set is exactly {(child, root)}. Raises
-    ``RuntimeError`` if ``max_iter`` rounds end before the edge set repeats
-    (partial labels would split components without any sign).
+    Every edge leaves a round as (u, v) with v < u. The rounds stop after
+    the first one whose edge set is a forest of stars: every u has exactly
+    one edge and no v is also a u. Such a set is a fixed point of both
+    steps, and each star's centre is the minimum of its component, so the
+    edge set is exactly {(child, root)}. Each round runs one Spark action
+    for that test. Raises ``RuntimeError`` if ``max_iter`` rounds end
+    before the edge set is a forest of stars (partial labels would split
+    components without any sign).
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = e.filter(F.col("u").isNotNull() & F.col("v").isNotNull())
@@ -129,16 +134,19 @@ def connected_components_star(
             .select("u", F.least("mv", "u").alias("m"))
         )
 
-    def _signature(ed: DataFrame) -> tuple:
-        row = ed.agg(
-            F.count("*").alias("n"),
-            # bit_xor: order-insensitive set signature, cannot overflow
-            # (ANSI mode makes a sum() of hashes throw on long overflow)
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
+    def _is_star_forest(ed: DataFrame) -> bool:
+        """No node has two edges as u, or one as u and any as v: per node,
+        (edges as u) + (1 if it is some edge's v) never exceeds 1."""
+        roles = ed.select(F.col("u").alias("node"), F.lit(1).alias("as_u"),
+                          F.lit(0).alias("as_v")).union(
+            ed.select("v", F.lit(0), F.lit(1)))
+        return (
+            roles.groupBy("node")
+            .agg((F.sum("as_u") + F.max("as_v")).alias("k"))
+            .filter(F.col("k") > 1)
+            .isEmpty()
+        )
 
-    sig = None
     for _ in range(max_iter):
         # LARGE-STAR: neighbors strictly greater than u attach to m(u)
         m = _min_link(e)
@@ -162,14 +170,12 @@ def connected_components_star(
             .localCheckpoint(eager=True)
         )
         e = small
-        new_sig = _signature(e)
-        if new_sig == sig:
+        if _is_star_forest(e):
             break
-        sig = new_sig
     else:
         raise RuntimeError(
-            f"connected_components_star: no fixed point within "
-            f"max_iter={max_iter} rounds"
+            f"connected_components_star: edge set not a forest of stars "
+            f"after max_iter={max_iter} rounds"
         )
 
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))

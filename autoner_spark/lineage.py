@@ -30,9 +30,11 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from . import tagvec
 from .dictionary import TrieKB
-from .tagger import MENTIONS_SCHEMA, tag_transcripts
+from .tagger import tag_transcripts
 
 LINEAGE_SCHEMA = (
     "bucket int, n_turns long, n_mentions long, wall_ms long, finished_at string"
@@ -137,7 +139,8 @@ def tag_resumable(
     # partition discovery over the bucket=N directories (no globs: literal
     # base-path reads behave identically on local FS and object stores);
     # the known schema spares a schema-inference job
-    return spark.read.schema(MENTIONS_SCHEMA).parquet(mentions_dir)
+    return spark.read.schema(
+        from_arrow_schema(tagvec.OUT_SCHEMA)).parquet(mentions_dir)
 
 
 def metrics_df(spark: SparkSession, out_dir: str) -> DataFrame:

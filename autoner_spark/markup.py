@@ -28,10 +28,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from . import pyworker
+from . import pyworker, tagvec
 from .dictionary import TrieKB
 from .oracle import Segment, extract_mentions
-from .tagger import MENTIONS_SCHEMA
+from .tagger import stage_schema
 from .textutil import split_by
 
 
@@ -100,8 +100,10 @@ def parse_marked_line(
 
 def tag_marked_transcripts(transcripts: DataFrame, trie: TrieKB) -> DataFrame:
     """Marked transcripts -> mentions: exact-lookup typing per marked
-    phrase (no DP). Same output schema as the DP tagger."""
+    phrase (no DP). Same output schema as the DP tagger: conv_id and
+    turn_idx are copied from the source row, NULLs included."""
     bc = transcripts.sparkSession.sparkContext.broadcast(trie)
+    src = transcripts.select("conv_id", "turn_idx", "text")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pyworker.install()
@@ -118,17 +120,16 @@ def tag_marked_transcripts(transcripts: DataFrame, trie: TrieKB) -> DataFrame:
                 raw, segs = parse_marked_line(text, kb)
                 for m in extract_mentions(raw, segs):
                     out["conv_id"].append(conv_id)
-                    out["turn_idx"].append(int(turn_idx))
+                    out["turn_idx"].append(turn_idx)
                     out["begin_tok"].append(m.begin_tok)
                     out["end_tok"].append(m.end_tok)
                     out["surface"].append(m.surface)
                     out["entity_type"].append(m.entity_type)
             pdf_out = pd.DataFrame(out)
-            pdf_out["turn_idx"] = pdf_out["turn_idx"].astype("int32")
+            # a NULL turn_idx arrives as NaN in a float column
+            pdf_out["turn_idx"] = pdf_out["turn_idx"].astype("Int32")
             pdf_out["begin_tok"] = pdf_out["begin_tok"].astype("int32")
             pdf_out["end_tok"] = pdf_out["end_tok"].astype("int32")
             yield pdf_out
 
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, MENTIONS_SCHEMA
-    )
+    return src.mapInPandas(run, stage_schema(src.schema, tagvec.OUT_SCHEMA))

@@ -4,6 +4,10 @@ Runs the reference's deterministic dictionary-match tagger
 (src/string_match.h:21-99 + src/annotation.h:267-317 span semantics) over an
 Iceberg/parquet transcripts table, Spark-first:
 
+* the DP runs at the full-dictionary weight ``bin/generate`` uses, 1.0
+  (generate.cpp:36): core and filtered matches both score len^2, and
+  there is no weight parameter (``oracle.segment_dp`` keeps the C++
+  signature's ``weight`` as the reference);
 * the KB trie is compiled to a nested-dict automaton on the driver and
   **broadcast** once per job (the Spark analogue of the reference's single
   shared in-memory trie, annotation.h:22);
@@ -16,8 +20,9 @@ Iceberg/parquet transcripts table, Spark-first:
   tagvec emitter: ``triples.build_kg`` runs it for the mentions, the
   linked mentions and the triples over one broadcast;
 * conv_id and turn_idx are copied from the source row, so the output
-  declares them as nullable as the input does (a NULL id on a matching
-  turn is carried, not a JVM NullPointerException);
+  declares them as nullable as the input does (``stage_schema``, which
+  ``markup`` shares; a NULL id on a matching turn is carried, not a JVM
+  NullPointerException);
 * ``tag_tokens_compiled`` is the scalar reference that engine is pinned to:
   a from-scratch DP, deliberately independent from the readable oracle in
   ``autoner_spark.oracle`` so the pytest parity suite cross-checks the
@@ -44,27 +49,11 @@ from typing import Any
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructField, StructType
 
 from . import pyworker, tagvec
 from .dictionary import TrieKB
 from .textutil import FILTERED_TYPE, is_separator_char
-
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("begin_tok", IntegerType(), False),
-        StructField("end_tok", IntegerType(), False),
-        StructField("surface", StringType(), False),
-        StructField("entity_type", StringType(), False),
-    ]
-)
 
 # the source-row ids every tagvec emitter copies onto its rows
 _ID_COLS = ("conv_id", "turn_idx")
@@ -119,15 +108,16 @@ def compile_trie(trie: TrieKB) -> dict[str, Any]:
 
 
 def tag_tokens_compiled(
-    tokens: list[str], compiled: dict[str, Any], weight: float = 1.0
+    tokens: list[str], compiled: dict[str, Any]
 ) -> list[tuple[int, int, str, str]]:
     """DP segmentation + mention extraction against a compiled trie.
 
     Exact semantics of segmentDP (string_match.h:21-89: strict-improvement
-    updates, len^2 core score, weight*len^2 filtered score, trie walk never
-    crossing "\\n") followed by the entity-span extraction rules of
-    annotation.h:267-317 (separator-skip; FILTERED/empty segments are not
-    mentions). Returns (begin_tok, end_tok, surface, entity_type) tuples.
+    updates, len^2 score for core and filtered matches alike at AutoNER's
+    full-dictionary weight 1.0, trie walk never crossing "\\n") followed
+    by the entity-span extraction rules of annotation.h:267-317
+    (separator-skip; FILTERED/empty segments are not mentions). Returns
+    (begin_tok, end_tok, surface, entity_type) tuples.
     """
     n = len(tokens)
     if n == 0:
@@ -171,7 +161,7 @@ def tag_tokens_compiled(
             kids, kind, ts = nxt
             if kind:
                 d = j - i + 1
-                score = fi + d * d if kind == _KIND_ENTITY else fi + weight * d * d
+                score = fi + d * d
                 if f[j + 1] < score:
                     f[j + 1] = score
                     tb_i[j + 1] = i
@@ -204,7 +194,6 @@ def tag_tokens_compiled(
 def tag_transcripts(
     transcripts: DataFrame,
     trie: TrieKB,
-    weight: float = 1.0,
     passthrough: tuple[str, ...] = (),
     tokenizer: str = "whitespace",
 ) -> DataFrame:
@@ -226,7 +215,7 @@ def tag_transcripts(
         tagvec.compile_vec(compile_trie(trie)))
     return tag_stage(
         transcripts.select("conv_id", "turn_idx", "text", *passthrough),
-        bc_vec, tagvec.tag_record_batch, tagvec.OUT_SCHEMA, weight, tokenizer)
+        bc_vec, tagvec.tag_record_batch, tagvec.OUT_SCHEMA, tokenizer)
 
 
 def tag_stage(
@@ -234,27 +223,31 @@ def tag_stage(
     bc_vec,
     emit,
     schema: pa.Schema,
-    weight: float = 1.0,
     tokenizer: str = "whitespace",
 ) -> DataFrame:
     """One narrow ``mapInArrow`` over ``src`` (conv_id, turn_idx, text,
     *passthrough) running ``emit`` (a ``tagvec`` emitter, output
     ``schema`` then the passthrough columns) with the broadcast compiled
-    automaton ``bc_vec``. conv_id and turn_idx are copied from the source
-    row, so they are as nullable as ``src`` declares them."""
-    cols = src.schema
-    out_schema = StructType(
+    automaton ``bc_vec``."""
+
+    def tag_arrow(batches):
+        pyworker.install()
+        vec = bc_vec.value
+        for batch in batches:
+            yield emit(batch, vec, tokenizer)
+
+    return src.mapInArrow(tag_arrow, stage_schema(src.schema, schema))
+
+
+def stage_schema(cols: StructType, schema: pa.Schema) -> StructType:
+    """The Spark schema of an emitter's ``schema`` over source columns
+    ``cols`` (conv_id, turn_idx, text, *passthrough): conv_id and
+    turn_idx are copied from the source row, so they are as nullable as
+    ``cols`` declares them; the passthrough columns follow."""
+    return StructType(
         [StructField(f.name, f.dataType,
                      cols[f.name].nullable if f.name in _ID_COLS
                      else f.nullable)
          for f in from_arrow_schema(schema)]
         + cols.fields[3:]
     )
-
-    def tag_arrow(batches):
-        pyworker.install()
-        vec = bc_vec.value
-        for batch in batches:
-            yield emit(batch, vec, weight, tokenizer)
-
-    return src.mapInArrow(tag_arrow, out_schema)

@@ -2,11 +2,11 @@
 
 The only executor of ``tagger.tag_transcripts``. It is semantics-identical
 to ``tagger.tag_tokens_compiled``, the scalar reference: the same segmentDP
-recurrence (string_match.h:21-89 strict-improvement updates, len^2 core
-score, weight*len^2 filtered score, "\\n" barrier checked before
-descending) and the same span-extraction rules (annotation.h:267-317
-separator-skip), executed over a whole Arrow batch at once instead of one
-Python token at a time:
+recurrence (string_match.h:21-89 strict-improvement updates at
+AutoNER's full-dictionary weight 1.0, so core and filtered matches both
+score len^2; "\\n" barrier checked before descending) and the same
+span-extraction rules (annotation.h:267-317 separator-skip), executed
+over a whole Arrow batch at once instead of one Python token at a time:
 
 * both tokenizers run as Arrow string kernels: ``whitespace`` splits on
   " " and ``charclass`` first rewrites every separator char to " " and
@@ -24,9 +24,8 @@ Python token at a time:
   still-active rows, and the tables are ragged (column c stores only the
   rows of length >= c). Scores are float64 with the exact operation order
   of the scalar loop, so f[] is bit-identical to
-  ``tag_tokens_compiled``'s; cutting at runs keeps that only when every
-  score delta is an integer (e.g. the default weight=1.0), so any other
-  weight cuts at turn boundaries alone — one row per turn with a match;
+  ``tag_tokens_compiled``'s: every score delta is an integer, so the
+  float sums across a cut are exact;
 * traceback runs as vectorized pointer-chasing rounds and yields each
   segment's terminal trie state. Every mention column but the source-row
   ones is a ``take`` by that state from arrays ``compile_vec`` built once:
@@ -351,7 +350,6 @@ def _dp_segments(
     m_kind: np.ndarray,
     m_st: np.ndarray,
     order: np.ndarray,
-    weight: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Lockstep DP + traceback over all DP rows (rows already sorted by
     descending length via ``order``). Returns ENTITY segments as
@@ -388,18 +386,6 @@ def _dp_segments(
     colstart = np.concatenate(([0], np.cumsum(width)))
 
     D = int(m_d.max()) if m_d.size else 1
-    if all(
-        (weight * d) * d == float(d * d) for d in range(1, D + 1)
-    ):
-        # entity and filtered deltas coincide (e.g. the default
-        # weight=1.0): skip the kind-dependent select entirely
-        deltas = (m_d * m_d).astype(np.float64)
-    else:
-        deltas = np.where(
-            m_kind == _KIND_ENTITY,
-            (m_d * m_d).astype(np.float64),
-            (weight * m_d) * m_d,
-        )
 
     # group matches by (end column, depth ASC) — one packed key argsort;
     # end and d are recovered from the key, and the traceback carries
@@ -418,7 +404,9 @@ def _dp_segments(
     g_key = key[g]
     g_d = (g_key & mask).astype(np.int64)
     g_row = m_row[g]
-    g_delta = deltas[g]
+    # entity and filtered matches score the same len^2; m_kind only
+    # decides at traceback which segments are mentions
+    g_delta = (g_d * g_d).astype(np.float64)
     nmatch = len(g)
     if nmatch:
         bounds = np.flatnonzero(np.diff(g_key)) + 1
@@ -523,7 +511,6 @@ def _dp_segments(
 def _segments(
     batch: pa.RecordBatch,
     vec: dict[str, Any],
-    weight: float,
     tokenizer: str,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """The entity segments of a (conv_id, turn_idx, text, ...) batch as
@@ -577,25 +564,14 @@ def _segments(
 
     t_of = np.repeat(np.arange(nrows, dtype=np.int64), counts)
 
-    # Cut the batch into DP rows. The DP looks back only through matches,
-    # so a boundary b that no match strictly crosses (sp < b < sp + d)
-    # splits it exactly: f[b + x] = f[b] + g[x], where g is the DP of the
-    # part after b alone — exact in float64 whenever every delta is an
-    # integer and every sum stays below 2**53 (|f| is at most
-    # D * P * max(1, |weight|)). Then the cut intervals are the matches,
-    # and each maximal match-connected run is one row ("\n" and turn
-    # ends are always cuts, gaps and unmatched turns take no cells).
-    # Otherwise (a non-integral filtered weight) they are the turns with
-    # a match: one row per such turn.
-    D = int(m_d.max())
-    if all(float((weight * d) * d).is_integer() for d in range(1, D + 1)) \
-            and P * D * max(1.0, abs(weight)) < 2.0 ** 53:
-        lo, hi = m_sp, m_sp + m_d
-    else:
-        has_match = np.zeros(nrows, dtype=bool)
-        has_match[t_of[m_sp]] = True
-        active = np.flatnonzero(has_match)
-        lo, hi = offs[active], offs[active + 1]
+    # Cut the batch into DP rows: each maximal match-connected run is one
+    # row ("\n" and turn ends are always cuts, gaps and unmatched turns
+    # take no cells). The DP looks back only through matches, so a
+    # boundary b that no match strictly crosses (sp < b < sp + d) splits
+    # it exactly: f[b + x] = f[b] + g[x], where g is the DP of the part
+    # after b alone. That holds bit for bit in float64 because every
+    # delta d*d is an integer and |f| <= D * P stays far below 2**53.
+    lo, hi = m_sp, m_sp + m_d
     # boundary t (before token t) is crossed when +1 over [lo + 1, hi)
     # covers it; a row starts where an interval starts at an uncrossed
     # boundary and stops where one ends at one
@@ -618,7 +594,7 @@ def _segments(
 
     kindv = vec["kind"][m_st].astype(np.int8, copy=False)
     s_r, s_b, s_e, s_st = _dp_segments(
-        r_len, row_of_run[m_row], m_i, m_d, kindv, m_st, order, weight
+        r_len, row_of_run[m_row], m_i, m_d, kindv, m_st, order
     )
     if s_r.size == 0:
         return empty
@@ -694,13 +670,12 @@ def _link_rows(st: np.ndarray,
 def tag_record_batch(
     batch: pa.RecordBatch,
     vec: dict[str, Any],
-    weight: float = 1.0,
     tokenizer: str = "whitespace",
 ) -> pa.RecordBatch:
     """(conv_id, turn_idx, text, *passthrough) record batch -> mentions
     record batch (OUT_SCHEMA, then the passthrough columns). Every column
     after ``text`` is copied onto each mention from its source row."""
-    t, b, e, st = _segments(batch, vec, weight, tokenizer)
+    t, b, e, st = _segments(batch, vec, tokenizer)
     t_idx = pa.array(t, pa.int64())
     return pa.RecordBatch.from_arrays(
         [
@@ -715,13 +690,12 @@ def tag_record_batch(
 def link_record_batch(
     batch: pa.RecordBatch,
     vec: dict[str, Any],
-    weight: float = 1.0,
     tokenizer: str = "whitespace",
 ) -> pa.RecordBatch:
     """(conv_id, turn_idx, text) record batch -> linked mentions
     (LINKED_SCHEMA): ``triples.link_mentions`` over this batch's mentions
     and ``vec``'s links, computed by state."""
-    t, b, e, st = _segments(batch, vec, weight, tokenizer)
+    t, b, e, st = _segments(batch, vec, tokenizer)
     seg, link = _link_rows(st, vec)
     t, b, e, st = t[seg], b[seg], e[seg], st[seg]
     span = (e - b).astype(np.float64)
@@ -739,7 +713,6 @@ def link_record_batch(
 def triple_record_batch(
     batch: pa.RecordBatch,
     vec: dict[str, Any],
-    weight: float = 1.0,
     tokenizer: str = "whitespace",
 ) -> pa.RecordBatch:
     """(conv_id, turn_idx, text) record batch -> (subj, pred, obj,
@@ -747,7 +720,7 @@ def triple_record_batch(
     ``link_record_batch`` gives one ``has_type`` triple per type of its
     set, then one ``mentioned_in`` triple whose object is Spark's
     ``concat_ws('#', conv_id, turn_idx)`` (NULLs skipped)."""
-    t, _, _, st = _segments(batch, vec, weight, tokenizer)
+    t, _, _, st = _segments(batch, vec, tokenizer)
     seg, _ = _link_rows(st, vec)
     t, st = t[seg], st[seg]
     type_off = vec["type_off"]

@@ -137,8 +137,8 @@ def triple_pair_array() -> "F.Column":
     has_type entry per comma-joined type plus one mentioned_in entry —
     shared by ``assemble_triples`` and the exact-match twin in
     queries.q_kg_triples_exact so the single-pass emission stays in one
-    place. Requires non-null conv_id/turn_idx columns (the mention
-    contract). A NULL entity_type yields no has_type entry but still its
+    place. conv_id/turn_idx may be NULL: ``concat_ws`` skips them in the
+    mentioned_in object. A NULL entity_type yields no has_type entry but still its
     mentioned_in entry (``F.concat`` with a NULL operand is NULL, which
     the explode would drop whole)."""
     return F.concat(

@@ -100,6 +100,20 @@ def test_connected_components_star_raises_when_max_iter_exhausted(spark):
         connected_components(df, driver_threshold=10, max_iter=1).collect()
 
 
+def test_connected_components_star_stops_at_first_star_forest(spark):
+    """The rounds end as soon as the edge set is a forest of stars, not
+    one round later when it repeats: the 300-edge chain converges within
+    9 rounds and labels as driver-side union-find does."""
+    from autoner_spark.canonicalize import _union_find_labels
+
+    rows = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(300)]
+    df = spark.createDataFrame(rows, "src string, dst string").repartition(5)
+    got = {(r.node, r.comp)
+           for r in connected_components(df, driver_threshold=10,
+                                         max_iter=9).collect()}
+    assert got == set(_union_find_labels(rows).items())
+
+
 def test_connected_components_chain_and_determinism(spark):
     # a long chain needs multiple star rounds; compare the driver-side
     # union-find path against the distributed star path

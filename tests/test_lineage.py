@@ -1,9 +1,13 @@
-"""Resumable runs: kill a bucket, rerun, only that bucket recomputes."""
+"""Resumable runs: kill a bucket, rerun, only that bucket recomputes; the
+deploy job (tools/run_job.py) end to end on the shared session."""
 
+import importlib.util
 import os
 import shutil
+from collections import Counter
 
 from autoner_spark import synth
+from autoner_spark.catalog import TableCatalog
 from autoner_spark.dictionary import build_trie
 from autoner_spark.lineage import (
     bucketize_transcripts,
@@ -13,6 +17,7 @@ from autoner_spark.lineage import (
     tag_resumable,
 )
 from autoner_spark.tagger import tag_transcripts
+from autoner_spark.triples import build_kg
 
 N_BUCKETS = 4
 
@@ -110,3 +115,39 @@ def test_metrics_table(spark, tmp_path):
     rows = m.collect()
     assert {r.bucket for r in rows} == {0, 1}
     assert all(r.wall_ms >= 0 and r.n_turns > 0 for r in rows)
+
+
+def _run_job_module():
+    spec = importlib.util.spec_from_file_location(
+        "run_job",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "run_job.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_run_job_writes_build_kg_triples_and_resumes(spark, tmp_path):
+    """The deploy job (tools/run_job.py) on the shared session: its
+    catalog's triples equal build_kg's over the same corpus, and a rerun
+    skips every bucket and leaves the same triples."""
+    run_job = _run_job_module()
+    out = str(tmp_path / "job")
+    args = run_job.parse_args(
+        ["--out", out, "--n-convs", "60", "--buckets", str(N_BUCKETS)])
+    want = Counter(tuple(r) for r in build_kg(
+        spark, synth.synth_transcripts(spark, 60),
+        synth.dict_spec())["triples"].collect())
+
+    def triples():
+        return Counter(tuple(r) for r in TableCatalog(spark, out).read(
+            "triples").select("subj", "pred", "obj", "conv_id",
+                              "turn_idx").collect())
+
+    first = run_job.run(spark, args)
+    assert first["buckets_skipped"] == []
+    assert first["n_triples"] == sum(want.values())
+    assert triples() == want
+
+    second = run_job.run(spark, args)
+    assert second["buckets_skipped"] == list(range(N_BUCKETS))
+    assert triples() == want

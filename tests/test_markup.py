@@ -92,3 +92,24 @@ def test_spark_marked_tagger(spark, trie):
         ("c", 0, 1, 3, "hash join", "Operator"),
         ("c", 1, 0, 1, "stream", "Object,Operator"),
     }
+
+
+@pytest.mark.parametrize("null_col", ["conv_id", "turn_idx"])
+def test_spark_marked_tagger_carries_null_ids(spark, null_col):
+    """A marked turn with a NULL conv_id or turn_idx is tagged like any
+    other: the NULL is carried onto its mentions, and the other row's
+    mentions are unchanged."""
+    kb = build_trie(synth.dict_spec())
+    ids = {"conv_id": "c", "turn_idx": 1, null_col: None}
+    rows = [
+        ("c", 0, "u", "see <phrase>hash join</phrase> here", None, None),
+        (ids["conv_id"], ids["turn_idx"], "u",
+         "<phrase>big table</phrase> x", None, None),
+    ]
+    df = spark.createDataFrame(rows, synth.TRANSCRIPTS_DDL)
+    got = sorted((tuple(r) for r in tag_marked_transcripts(df, kb).collect()),
+                 key=repr)
+    assert got == sorted([
+        ("c", 0, 1, 3, "hash join", "Operator"),
+        (ids["conv_id"], ids["turn_idx"], 0, 2, "big table", "Object"),
+    ], key=repr)

@@ -1,13 +1,16 @@
 """Vectorized batch tagger (tagvec) vs scalar tag_tokens_compiled.
 
 The batch engine must be output-identical — same spans, same types, same
-emission order — on the synthetic corpus (both dictionary profiles), on
-adversarial edge inputs, on random token soup, and on raw text through the
-charclass tokenizer, for entity and filtered weights. Spark-level parity
-vs the oracle is covered by tests/test_tagger_spark.py and
-tests/test_bc5cdr.py, which now route through this engine. Turns of 1k to 100k tokens, alone and inside a batch
-of short turns, are checked against ``oracle.tag_turn`` directly, and the
-batch memory they take is bounded."""
+emission order — on the synthetic corpus (both dictionary profiles, whose
+full dictionaries give FILTERED matches), on adversarial edge inputs, on
+random token soup, and on raw text through the charclass tokenizer. The
+engine runs AutoNER's one full-dictionary weight, 1.0; the tests whose id
+names it also check ``oracle.tag_turn``, which still takes the weight as
+the C++ signature does. Spark-level parity vs the oracle is covered by
+tests/test_tagger_spark.py and tests/test_bc5cdr.py, which route through
+this engine. Turns of 1k to 100k tokens, alone and inside a batch of short
+turns, are checked against ``oracle.tag_turn`` directly, and the batch
+memory they take is bounded."""
 
 import functools
 import random
@@ -37,18 +40,25 @@ EDGE_ROWS = [
 ]
 
 
-def scalar_tag(rows, comp, weight, tokenize=tokenize_turn):
+def scalar_tag(rows, comp, tokenize=tokenize_turn):
     out = []
     for r in rows:
         x = r["text"]
         if not x:
             continue
-        for b, e, surf, ts in tag_tokens_compiled(tokenize(x), comp, weight):
+        for b, e, surf, ts in tag_tokens_compiled(tokenize(x), comp):
             out.append((r["conv_id"], r["turn_idx"], b, e, surf, ts))
     return out
 
 
-def vec_tag(rows, vec, weight, tokenizer="whitespace"):
+def oracle_tag(rows, trie, weight, tokenize=tokenize_turn):
+    return [(r["conv_id"], r["turn_idx"], m.begin_tok, m.end_tok, m.surface,
+             m.entity_type)
+            for r in rows if r["text"]
+            for m in tag_turn(tokenize(r["text"]), trie, weight)]
+
+
+def vec_tag(rows, vec, tokenizer="whitespace"):
     batch = pa.RecordBatch.from_arrays(
         [
             pa.array([r["conv_id"] for r in rows], pa.string()),
@@ -57,7 +67,7 @@ def vec_tag(rows, vec, weight, tokenizer="whitespace"):
         ],
         names=["conv_id", "turn_idx", "text"],
     )
-    out = tag_record_batch(batch, vec, weight, tokenizer)
+    out = tag_record_batch(batch, vec, tokenizer)
     return list(
         zip(
             out.column(0).to_pylist(),
@@ -74,15 +84,18 @@ def vec_tag(rows, vec, weight, tokenizer="whitespace"):
     (synth.dict_spec, {}),
     (synth.bench_dict_spec, {"min_frags": 12, "rng_frags": 30}),
 ])
-@pytest.mark.parametrize("weight", [1.0, 0.5, 2.0, 0.0])
+@pytest.mark.parametrize("weight", [1.0])
 def test_parity_synth(spec_fn, kw, weight):
-    comp = compile_trie(build_trie(spec_fn()))
+    trie = build_trie(spec_fn())
+    comp = compile_trie(trie)
     vec = compile_vec(comp)
     rows = list(EDGE_ROWS)
     for c in range(120):
         for t in range(synth.turns_for_conv(c)):
             rows.append(synth.turn_row(c, t, **kw))
-    assert vec_tag(rows, vec, weight) == scalar_tag(rows, comp, weight)
+    got = vec_tag(rows, vec)
+    assert got == scalar_tag(rows, comp)
+    assert got == oracle_tag(rows, trie, weight)
 
 
 def test_parity_random_soup():
@@ -103,15 +116,15 @@ def test_parity_random_soup():
         }
         for i in range(3000)
     ]
-    a = scalar_tag(rows, comp, 1.0)
-    b = vec_tag(rows, vec, 1.0)
+    a = scalar_tag(rows, comp)
+    b = vec_tag(rows, vec)
     assert a == b
     assert a, "stress fixture must produce mentions"
 
 
 def test_empty_batch():
     vec = compile_vec(compile_trie(build_trie(synth.dict_spec())))
-    assert vec_tag([], vec, 1.0) == []
+    assert vec_tag([], vec) == []
 
 
 def test_newline_trie_edge_stays_unreachable():
@@ -135,7 +148,7 @@ def test_newline_trie_edge_stays_unreachable():
         {"conv_id": "p", "turn_idx": 2, "text": "9 6"},
         {"conv_id": "p", "turn_idx": 3, "text": "7 6"},
     ]
-    assert vec_tag(rows, vec, 1.0) == scalar_tag(rows, comp, 1.0)
+    assert vec_tag(rows, vec) == scalar_tag(rows, comp)
 
 
 def _deep_spec():
@@ -174,8 +187,8 @@ def test_parity_deep_surfaces(force_sparse):
     ]
     rows.append({"conv_id": "full", "turn_idx": 0,
                  "text": " ".join(words[:11]) + " zzz " + " ".join(words[:9])})
-    a = scalar_tag(rows, comp, 1.0)
-    b = vec_tag(rows, vec, 1.0)
+    a = scalar_tag(rows, comp)
+    b = vec_tag(rows, vec)
     assert a == b
     assert any(m[3] - m[2] >= 9 for m in a), "deep surfaces must match"
 
@@ -200,13 +213,14 @@ def _raw_text(rng, n_words):
     return "".join(parts)
 
 
-@pytest.mark.parametrize("weight", [1.0, 0.7])
+@pytest.mark.parametrize("weight", [1.0])
 def test_parity_charclass(weight):
     """The Arrow charclass tokenizer tags raw text exactly as the scalar
-    tagger over ``simple_tokenize_non_sep(keep_capital=True)``: short
-    turns, empty and NULL text, and one turn of over 20k tokens among
-    them."""
-    comp = compile_trie(build_trie(synth.dict_spec()))
+    tagger and the oracle over ``simple_tokenize_non_sep(keep_capital=
+    True)``: short turns, empty and NULL text, and one turn of over 20k
+    tokens among them."""
+    trie = build_trie(synth.dict_spec())
+    comp = compile_trie(trie)
     vec = compile_vec(comp)
     rng = random.Random(13)
     rows = [{"conv_id": "c", "turn_idx": i,
@@ -217,15 +231,20 @@ def test_parity_charclass(weight):
     rows.insert(1500, {"conv_id": "long", "turn_idx": 0,
                        "text": _raw_text(rng, 24_000)})
     assert len(_charclass_tokenize(rows[1500]["text"])) >= 20_000
-    got = vec_tag(rows, vec, weight, "charclass")
-    assert got == scalar_tag(rows, comp, weight, _charclass_tokenize)
+    got = vec_tag(rows, vec, "charclass")
+    assert got == scalar_tag(rows, comp, _charclass_tokenize)
+    assert got == oracle_tag(rows, trie, weight, _charclass_tokenize)
     assert any(m[0] == "long" for m in got)
 
 
 def test_unknown_tokenizer_raises():
     vec = compile_vec(compile_trie(build_trie(synth.dict_spec())))
     with pytest.raises(ValueError, match="tokenizer"):
-        vec_tag([], vec, 1.0, "unicode")
+        vec_tag([], vec, "unicode")
+    # a weight passed positionally, as before the engine had one weight,
+    # binds to ``tokenizer`` and fails loudly
+    with pytest.raises(ValueError, match="tokenizer"):
+        vec_tag([], vec, 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -261,32 +280,16 @@ def _mixed_rows(n_tok):
     return rows
 
 
-@functools.lru_cache(maxsize=None)
-def _oracle_row(conv_id, turn_idx, text, weight):
-    trie = _bench_kb()[0]
-    return tuple(
-        (conv_id, turn_idx, m.begin_tok, m.end_tok, m.surface, m.entity_type)
-        for m in tag_turn([t for t in text.split(" ") if t], trie, weight)
-    )
-
-
-def oracle_tag(rows, weight):
-    return [m for r in rows
-            for m in _oracle_row(r["conv_id"], r["turn_idx"], r["text"],
-                                 weight)]
-
-
 @pytest.mark.parametrize("mixed", [False, True], ids=["alone", "mixed"])
-@pytest.mark.parametrize("weight", [1.0, 0.7])
+@pytest.mark.parametrize("weight", [1.0])
 @pytest.mark.parametrize("n_tok", [1_000, 20_000, 100_000])
 def test_long_turn_parity_with_oracle(n_tok, weight, mixed):
     """A long turn, alone or inside 2,000 short turns, tags exactly as
-    ``oracle.tag_turn`` at the integral weight (DP rows are the
-    match-connected runs) and at a non-integral one (rows are whole
-    turns)."""
+    ``oracle.tag_turn`` (DP rows are the match-connected runs)."""
     rows = _mixed_rows(n_tok) if mixed else [_long_row(n_tok)]
-    got = vec_tag(rows, _bench_kb()[1], weight)
-    assert got == oracle_tag(rows, weight)
+    trie, vec = _bench_kb()
+    got = vec_tag(rows, vec)
+    assert got == oracle_tag(rows, trie, weight)
     assert any(m[0] == "long" for m in got)
 
 
@@ -298,7 +301,7 @@ def test_long_turn_batch_memory_is_bounded():
     vec = _bench_kb()[1]
     tracemalloc.start()
     try:
-        vec_tag(batch_rows, vec, 1.0)
+        vec_tag(batch_rows, vec)
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()

@@ -17,7 +17,7 @@ import argparse
 import json
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser()
     p.add_argument("--out", required=True)
     p.add_argument("--n-convs", type=int, default=1000)
@@ -31,13 +31,13 @@ def main() -> None:
                         "min id; minhash = LSH+verify near-dup pairs "
                         "closed into connected components, keep min id "
                         "per cluster). Requires --sf-dir.")
-    args = p.parse_args()
+    return p.parse_args(argv)
 
-    # spark-submit provides the session config (master, --py-files)
-    from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("autoner-kg-job").getOrCreate()
-
+def run(spark, args: argparse.Namespace) -> dict:
+    """The job on ``spark``: bucketize (first run only), tag the buckets
+    not yet done, write the triples table; returns the run report. Never
+    stops ``spark``."""
     from autoner_spark import synth
     from autoner_spark.dictionary import build_trie
     from autoner_spark.lineage import (
@@ -99,12 +99,22 @@ def main() -> None:
 
     n_triples = cat.read("triples").count()
     metrics = [r.asDict() for r in metrics_df(spark, args.out).collect()]
-    print(json.dumps({
+    return {
         "buckets_skipped": sorted(done_before),
         "n_triples": n_triples,
         "n_docs_dropped_by_dedup": n_docs_dropped,
         "lineage": metrics,
-    }))
+    }
+
+
+def main() -> None:
+    args = parse_args()
+
+    # spark-submit provides the session config (master, --py-files)
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.appName("autoner-kg-job").getOrCreate()
+    print(json.dumps(run(spark, args)))
     from autoner_spark.caching import release_caches
 
     release_caches()  # library calls persist via the tracked registry
