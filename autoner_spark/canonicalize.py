@@ -2,8 +2,9 @@
 
 CC serves the queries whose edges do merge nodes: the shared-token
 surface graph (``queries.surface_components_df``) and near-duplicate
-clustering (``dedup.cluster_victims_from_pairs``). The main chain does not
-run it: ``triples.build_kg``'s entity id is ``'ent:' || surface_norm``,
+clustering (``dedup.cluster_victims_from_pairs``). The main chain
+(``triples.build_kg``, whose triples tools/run_job.py's bucket jobs write)
+does not run it: its entity id is ``'ent:' || surface_norm``,
 because every edge ``triples.link_mentions`` can produce (a mention's norm
 to the norm of the dictionary surface joined ON that norm) is a self-loop,
 so its components are single nodes (``triples.canonical_entities`` keeps

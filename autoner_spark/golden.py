@@ -120,7 +120,7 @@ def golden_triples(turns, trie: TrieKB) -> list[tuple]:
     mentions = golden_tag_mentions(turns, trie)
 
     # dims: (surface_norm -> dict_surface), exploded-type table deduped —
-    # mirrors triples.dict_links_df (dict_surfaces_df + the distinct() in
+    # mirrors triples.dict_link_pairs (dict_surfaces_df + the distinct() in
     # link_mentions)
     dims: dict[str, set[str]] = {}
     for _type_field, surface in kg_dict_spec().core:

@@ -9,12 +9,20 @@ the pipeline is organized around **bucketed work units**:
    a hidden-partition table; here: parquet ``partitionBy`` — the layout, not
    the catalog, is what matters);
 2. each bucket is tagged by an independent, fully-parallel Spark job whose
-   scan is PARTITION-PRUNED to that bucket (no re-scan of the corpus);
+   scan is PARTITION-PRUNED to that bucket (no re-scan of the corpus): one
+   ``tagger.tag_stage`` of a tagvec emitter over one broadcast automaton,
+   writing ``<table>/bucket=N`` (``tag_resumable``: the mentions;
+   tools/run_job.py: ``build_kg``'s triples);
 3. a bucket's output commit is atomic (parquet job commit) and is recorded
-   in a lineage table row ``(bucket, n_turns, n_mentions, wall_ms,
-   finished_at)``;
+   in a lineage table row ``(bucket, n_turns, n_rows, wall_ms,
+   finished_at)``: the turns the bucket's scan read and the rows its write
+   committed, both observed on that one job;
 4. on restart, completed buckets are skipped by consulting the lineage
    table — idempotent, exactly-once per bucket.
+
+The lineage table names buckets, not tables, so one ``out_dir`` holds one
+bucketed output table: a run of ``tag_resumable`` and one of the deploy job
+must not share it.
 
 Bucket count trades recovery granularity against scheduling overhead: at
 cluster scale use O(10^3) buckets (each still thousands of tasks); locally
@@ -28,16 +36,17 @@ import os
 import time
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import tagvec
 from .dictionary import TrieKB
-from .tagger import tag_transcripts
+from .tagger import compile_trie, tag_stage
 
 LINEAGE_SCHEMA = (
-    "bucket int, n_turns long, n_mentions long, wall_ms long, finished_at string"
+    "bucket int, n_turns long, n_rows long, wall_ms long, finished_at string"
 )
 
 
@@ -80,6 +89,61 @@ def completed_buckets(out_dir: str) -> set[int]:
     return {r["bucket"] for r in read_lineage(out_dir)}
 
 
+def tag_buckets(
+    spark: SparkSession,
+    out_dir: str,
+    n_buckets: int,
+    table: str,
+    broadcast_vec,
+    emit,
+    schema: pa.Schema,
+) -> DataFrame:
+    """Run the tagvec emitter ``emit`` (output ``schema``) over every
+    bucket not done yet, each bucket ONE job (tag + write to
+    ``out_dir/<table>/bucket=N``, internally fully parallel) whose scan is
+    partition-pruned to that bucket's directory and whose lineage counts
+    are observed on that same job; return the whole table. The automaton
+    is compiled and broadcast once, by ``broadcast_vec()``, and only if a
+    bucket has turns to tag."""
+    done = completed_buckets(out_dir)
+    base = os.path.join(out_dir, "transcripts")
+    table_dir = os.path.join(out_dir, table)
+    transcripts = bc_vec = None  # opened on the first bucket with turns
+    for bucket in range(n_buckets):
+        if bucket in done:
+            continue
+        n_turns = n_rows = wall_ms = 0
+        # a hash bucket that received zero conversations writes no
+        # partition directory; it is recorded as completed-empty instead
+        # of aborting the whole resumable run on PATH_NOT_FOUND
+        if os.path.isdir(os.path.join(base, f"bucket={bucket}")):
+            if transcripts is None:
+                transcripts = spark.read.parquet(base)  # schema inference
+                bc_vec = broadcast_vec()
+            turns, rows = Observation(), Observation()
+            sub = transcripts.filter(F.col("bucket") == bucket).select(
+                "conv_id", "turn_idx", "text").observe(
+                    turns, F.count(F.lit(1)).alias("n"))
+            t0 = time.perf_counter()
+            tag_stage(sub, bc_vec, emit, schema).observe(
+                rows, F.count(F.lit(1)).alias("n")
+            ).write.mode("overwrite").parquet(
+                os.path.join(table_dir, f"bucket={bucket}"))
+            wall_ms = int((time.perf_counter() - t0) * 1000)
+            n_turns, n_rows = turns.get["n"], rows.get["n"]
+        _append_lineage(out_dir, {
+            "bucket": bucket,
+            "n_turns": n_turns,
+            "n_rows": n_rows,
+            "wall_ms": wall_ms,
+            "finished_at": datetime.now(timezone.utc).isoformat(),
+        })
+    # partition discovery over the bucket=N directories (no globs: literal
+    # base-path reads behave identically on local FS and object stores);
+    # the known schema spares a schema-inference job
+    return spark.read.schema(from_arrow_schema(schema)).parquet(table_dir)
+
+
 def tag_resumable(
     spark: SparkSession,
     trie: TrieKB,
@@ -87,60 +151,13 @@ def tag_resumable(
     n_buckets: int,
 ) -> DataFrame:
     """Tag all incomplete buckets; skip completed ones; return the full
-    mentions DataFrame. Each bucket is ONE job (tag + write, internally
-    fully parallel) whose scan is partition-pruned to that bucket's
-    directory; its lineage counts are observed on that same job."""
-    done = completed_buckets(out_dir)
-    base = os.path.join(out_dir, "transcripts")
-    mentions_dir = os.path.join(out_dir, "mentions")
-    transcripts = None  # opened (one schema-inference job) on first use
-    for bucket in range(n_buckets):
-        if bucket in done:
-            continue
-        bucket_dir = os.path.join(base, f"bucket={bucket}")
-        if not os.path.isdir(bucket_dir):
-            # a hash bucket that received zero conversations writes no
-            # partition directory; record it as completed-empty instead of
-            # aborting the whole resumable run on PATH_NOT_FOUND.
-            _append_lineage(
-                out_dir,
-                {
-                    "bucket": bucket,
-                    "n_turns": 0,
-                    "n_mentions": 0,
-                    "wall_ms": 0,
-                    "finished_at": datetime.now(timezone.utc).isoformat(),
-                },
-            )
-            continue
-        if transcripts is None:
-            transcripts = spark.read.parquet(base)
-        # both counts are observed on the bucket's one tag+write job
-        turns, found = Observation(), Observation()
-        sub = transcripts.filter(F.col("bucket") == bucket).observe(
-            turns, F.count(F.lit(1)).alias("n"))
-        t0 = time.perf_counter()
-        tag_transcripts(sub, trie).observe(
-            found, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(
-            os.path.join(mentions_dir, f"bucket={bucket}")
-        )
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        _append_lineage(
-            out_dir,
-            {
-                "bucket": bucket,
-                "n_turns": turns.get["n"],
-                "n_mentions": found.get["n"],
-                "wall_ms": wall_ms,
-                "finished_at": datetime.now(timezone.utc).isoformat(),
-            },
-        )
-    # partition discovery over the bucket=N directories (no globs: literal
-    # base-path reads behave identically on local FS and object stores);
-    # the known schema spares a schema-inference job
-    return spark.read.schema(
-        from_arrow_schema(tagvec.OUT_SCHEMA)).parquet(mentions_dir)
+    mentions DataFrame (``tag_buckets`` with ``tag_transcripts``'
+    emitter, table ``mentions``)."""
+    return tag_buckets(
+        spark, out_dir, n_buckets, "mentions",
+        lambda: spark.sparkContext.broadcast(
+            tagvec.compile_vec(compile_trie(trie))),
+        tagvec.tag_record_batch, tagvec.OUT_SCHEMA)
 
 
 def metrics_df(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -149,7 +166,7 @@ def metrics_df(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     return spark.createDataFrame(
         [
-            (r["bucket"], r["n_turns"], r["n_mentions"], r["wall_ms"],
+            (r["bucket"], r["n_turns"], r["n_rows"], r["wall_ms"],
              r["finished_at"])
             for r in rows
         ],

@@ -18,7 +18,8 @@ Iceberg/parquet transcripts table, Spark-first:
   executor is the vectorized ``autoner_spark.tagvec`` engine, for every
   tokenizer and passthrough column. ``tag_stage`` is that stage for any
   tagvec emitter: ``triples.build_kg`` runs it for the mentions, the
-  linked mentions and the triples over one broadcast;
+  linked mentions and the triples over one broadcast, and
+  ``lineage.tag_buckets`` once per bucket;
 * conv_id and turn_idx are copied from the source row, so the output
   declares them as nullable as the input does (``stage_schema``, which
   ``markup`` shares; a NULL id on a matching turn is carried, not a JVM

@@ -10,19 +10,23 @@ Spark-first choices:
   the mention stream. ``build_kg`` links inside the tagger's Arrow batches:
   a match's terminal trie state fixes its surface, so the dictionary
   surfaces sharing its norm are a lookup by state, compiled into the
-  automaton's one broadcast (``tagvec.compile_vec``). Mentions read from a
-  table go through ``link_mentions``, a **broadcast** join;
+  automaton's one broadcast (``broadcast_automaton``, which
+  tools/run_job.py's bucket jobs share). ``link_mentions``, a
+  **broadcast** join, links mentions read from a table: with
+  ``canonical_entities`` and ``assemble_triples`` it is the reference
+  composition ``build_kg`` is tested against;
 * the entity id is ``'ent:' || surface_norm``, with no connected
-  components: every edge ``link_mentions`` can produce is a self-loop (see
-  ``kg_from_mentions``), so ``build_kg`` is one lazy pass with nothing
-  cached. CC stays for queries whose edges merge nodes
+  components: every edge ``link_mentions`` can produce is a self-loop (it
+  joins the dictionary ON ``surface_norm``), so ``build_kg`` is one lazy
+  pass with nothing cached. CC stays for queries whose edges merge nodes
   (``queries.surface_components_df``, ``dedup.cluster_victims_from_pairs``);
 * ids are order-free, so results are independent of partitioning — no
   monotonically_increasing_id anywhere;
 * has_type triples follow the trie's type-SET semantics: one triple per
   type in the comma-joined set (SURVEY.md §7.3 decision), emitted in the
   Arrow batch by ``build_kg`` (``tagvec.triple_record_batch``) and
-  exploded JVM-side by ``assemble_triples`` / ``kg_from_mentions``.
+  exploded JVM-side by ``assemble_triples`` and
+  ``queries.q_kg_triples_exact``.
 """
 
 from __future__ import annotations
@@ -63,19 +67,6 @@ def dict_link_pairs(spec: DictionarySpec) -> list[tuple[str, str]]:
     return sorted({(ascii_lower(s), s) for _, s in spec.core})
 
 
-def dict_links_df(spark, spec: DictionarySpec) -> DataFrame:
-    """``dict_link_pairs`` handed to Spark as a local relation (Arrow), so
-    broadcasting it runs no shuffle job — the linking dimension of
-    ``kg_from_mentions``."""
-    import pyarrow as pa
-
-    pairs = dict_link_pairs(spec)
-    return spark.createDataFrame(pa.table({
-        "surface_norm": pa.array([n for n, _ in pairs], pa.string()),
-        "dict_surface": pa.array([s for _, s in pairs], pa.string()),
-    }))
-
-
 def link_mentions(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
     """Attach the dictionary's canonical surface to each mention.
 
@@ -84,13 +75,6 @@ def link_mentions(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
     case-variant path whose normalized form isn't a core surface — kept,
     since the trie type is already authoritative).
     """
-    return _join_dims(
-        mentions, dict_df.select("surface_norm", "dict_surface").distinct())
-
-
-def _join_dims(mentions: DataFrame, dims: DataFrame) -> DataFrame:
-    """``link_mentions`` over an already distinct (surface_norm,
-    dict_surface) dimension."""
     m = mentions.withColumn("surface_norm", surface_norm_col(F.col("surface")))
     # mention score = the DP objective's span contribution len^2
     # (string_match.h:45) — the "scored mentions" of the north star; a
@@ -100,6 +84,7 @@ def _join_dims(mentions: DataFrame, dims: DataFrame) -> DataFrame:
         ((F.col("end_tok") - F.col("begin_tok"))
          * (F.col("end_tok") - F.col("begin_tok"))).cast("double"),
     )
+    dims = dict_df.select("surface_norm", "dict_surface").distinct()
     return m.join(F.broadcast(dims), "surface_norm", "left")
 
 
@@ -192,32 +177,16 @@ def assemble_triples(linked: DataFrame, entities: DataFrame) -> DataFrame:
     return explode_triple_pairs(m)
 
 
-def kg_from_mentions(spark, mentions: DataFrame,
-                     spec: DictionarySpec) -> dict[str, DataFrame]:
-    """mentions -> linked -> entities, triples: one lazy pass, no job runs
-    here. For mentions read from a table (tools/run_job.py's resumable
-    mentions, markup, ``.ck`` ingest); ``build_kg`` computes the same
-    outputs inside the tagger's Arrow batches.
+def broadcast_automaton(spark, spec: DictionarySpec, trie=None):
+    """``trie`` (else ``spec``'s) compiled with ``spec``'s link pairs
+    (``dict_link_pairs``) and broadcast: the one automaton every tagvec
+    emitter of the chain runs on."""
+    from . import tagvec
+    from .dictionary import build_trie
+    from .tagger import compile_trie
 
-    subj = ``'ent:' || surface_norm`` is what
-    ``assemble_triples(linked, canonical_entities(linked))`` yields: every
-    CC edge ``link_mentions`` can produce is a self-loop (it joins the
-    dictionary ON ``surface_norm``). An edge source that can join two
-    different norms (an alias dictionary, say) must bring the CC back.
-
-    ``linked`` is ``link_mentions`` over ``dict_links_df``, so draining
-    the triples runs two jobs: the dimension's broadcast and the one pass
-    over the mentions."""
-    linked = _join_dims(mentions, dict_links_df(spark, spec))
-    keyed = linked.withColumn(
-        "subj", F.concat(F.lit("ent:"), F.col("surface_norm")))
-    entities = (
-        keyed.where(F.col("surface_norm").isNotNull())
-        .select("surface_norm", F.col("subj").alias("entity_id"))
-        .distinct()
-    )
-    return {"linked": linked, "entities": entities,
-            "triples": explode_triple_pairs(keyed)}
+    return spark.sparkContext.broadcast(tagvec.compile_vec(
+        compile_trie(trie or build_trie(spec)), dict_link_pairs(spec)))
 
 
 def build_kg(spark, transcripts: DataFrame, spec: DictionarySpec,
@@ -225,21 +194,19 @@ def build_kg(spark, transcripts: DataFrame, spec: DictionarySpec,
     """Full pipeline: transcripts -> mentions, linked, entities, triples.
     All lazy: no job runs here, and nothing is cached.
 
-    The automaton is compiled with ``spec``'s link pairs and broadcast
-    once; mentions, linked mentions and triples are each one narrow
-    ``mapInArrow`` over the transcripts (``tagvec``'s three emitters), so
-    draining ``triples`` is one job that tags each turn once: linking is
-    a lookup by the match's trie state (the dictionary surfaces sharing
-    the ``ascii_lower`` of its path), not a join. Multiset-equal to
-    ``kg_from_mentions`` over ``tag_transcripts``' mentions
+    The automaton is compiled and broadcast once
+    (``broadcast_automaton``); mentions, linked mentions and triples are
+    each one narrow ``mapInArrow`` over the transcripts (``tagvec``'s
+    three emitters), so draining ``triples`` is one job that tags each
+    turn once: linking is a lookup by the match's trie state (the
+    dictionary surfaces sharing the ``ascii_lower`` of its path), not a
+    join. Multiset-equal to ``assemble_triples(link_mentions(...),
+    canonical_entities(...))`` over ``tag_transcripts``' mentions
     (tests/test_kg_streaming.py)."""
     from . import tagvec
-    from .dictionary import build_trie
-    from .tagger import compile_trie, tag_stage
+    from .tagger import tag_stage
 
-    vec = tagvec.compile_vec(compile_trie(trie or build_trie(spec)),
-                             dict_link_pairs(spec))
-    bc_vec = spark.sparkContext.broadcast(vec)
+    bc_vec = broadcast_automaton(spark, spec, trie)
     src = transcripts.select("conv_id", "turn_idx", "text")
     linked = tag_stage(src, bc_vec, tagvec.link_record_batch,
                        tagvec.LINKED_SCHEMA)

@@ -2,6 +2,7 @@
 deploy job (tools/run_job.py) end to end on the shared session."""
 
 import importlib.util
+import json
 import os
 import shutil
 from collections import Counter
@@ -20,6 +21,27 @@ from autoner_spark.tagger import tag_transcripts
 from autoner_spark.triples import build_kg
 
 N_BUCKETS = 4
+
+
+def _kill_bucket(out, table, bucket):
+    """Undo one finished bucket as a failure before its lineage commit
+    would leave it: its output directory and lineage row are gone."""
+    shutil.rmtree(os.path.join(out, table, f"bucket={bucket}"))
+    rows = [r for r in read_lineage(out) if r["bucket"] != bucket]
+    with open(os.path.join(out, "lineage.jsonl"), "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+
+
+def _jobs_of(spark, group, fn):
+    """The ids of the Spark jobs ``fn()`` submits."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_resume_skips_completed_buckets(spark, tmp_path):
@@ -43,13 +65,7 @@ def test_resume_skips_completed_buckets(spark, tmp_path):
 
     # simulate a failed bucket: delete its output and lineage row
     victim = 2
-    shutil.rmtree(os.path.join(out, "mentions", f"bucket={victim}"))
-    rows = [r for r in read_lineage(out) if r["bucket"] != victim]
-    with open(os.path.join(out, "lineage.jsonl"), "w") as f:
-        import json
-
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
+    _kill_bucket(out, "mentions", victim)
 
     # record mtimes of surviving bucket outputs
     def mtimes():
@@ -92,7 +108,7 @@ def test_resume_tolerates_empty_buckets(spark, tmp_path):
     lineage = read_lineage(out)
     empties = [r for r in lineage if r["n_turns"] == 0]
     assert empties, "fixture should produce at least one empty bucket"
-    assert all(r["n_mentions"] == 0 for r in empties)
+    assert all(r["n_rows"] == 0 for r in empties)
     assert sum(r["n_turns"] for r in lineage) == transcripts.count()
 
     direct = {tuple(r) for r in tag_transcripts(transcripts, trie).collect()}
@@ -151,3 +167,64 @@ def test_run_job_writes_build_kg_triples_and_resumes(spark, tmp_path):
     second = run_job.run(spark, args)
     assert second["buckets_skipped"] == list(range(N_BUCKETS))
     assert triples() == want
+
+
+def test_run_job_rerun_submits_no_spark_job(spark, tmp_path):
+    """A rerun of a finished deploy job tags, links and rewrites nothing:
+    it submits no Spark job, and its n_triples is the lineage rows'
+    n_rows summed, which is the triples table's row count."""
+    run_job = _run_job_module()
+    out = str(tmp_path / "job")
+    args = run_job.parse_args(
+        ["--out", out, "--n-convs", "30", "--buckets", str(N_BUCKETS)])
+    first = run_job.run(spark, args)
+
+    report = {}
+    assert _jobs_of(spark, "run-job-rerun",
+                    lambda: report.update(run_job.run(spark, args))) == []
+    assert report["buckets_skipped"] == list(range(N_BUCKETS))
+    n_rows = sum(r["n_rows"] for r in read_lineage(out))
+    assert n_rows > 0
+    assert n_rows == report["n_triples"] == first["n_triples"] == (
+        TableCatalog(spark, out).read("triples").count())
+
+
+def test_run_job_redoes_only_a_killed_bucket(spark, tmp_path):
+    """Kill one bucket of a finished deploy job (its triples directory
+    and lineage row): the rerun runs that bucket's job alone, rewrites
+    no other bucket's files, records every bucket once, and the table
+    still holds build_kg's triples."""
+    run_job = _run_job_module()
+    out = str(tmp_path / "job")
+    args = run_job.parse_args(
+        ["--out", out, "--n-convs", "60", "--buckets", str(N_BUCKETS)])
+    run_job.run(spark, args)
+    victim = max(read_lineage(out), key=lambda r: r["n_rows"])["bucket"]
+    _kill_bucket(out, "triples", victim)
+
+    def mtimes():
+        root = os.path.join(out, "triples")
+        return {(d, f): os.path.getmtime(os.path.join(root, d, f))
+                for d in os.listdir(root)
+                if os.path.isdir(os.path.join(root, d))
+                for f in os.listdir(os.path.join(root, d))}
+
+    before = mtimes()
+    jobs = _jobs_of(spark, "run-job-kill", lambda: run_job.run(spark, args))
+    after = mtimes()
+
+    # the bucketed transcripts' schema inference and the victim's job
+    assert len(jobs) == 2, jobs
+    redone = {k: t for k, t in after.items() if k not in before}
+    assert redone and {d for d, _ in redone} == {f"bucket={victim}"}
+    assert {k: after[k] for k in before} == before
+    buckets = [r["bucket"] for r in read_lineage(out)]
+    assert sorted(buckets) == list(range(N_BUCKETS))
+
+    want = Counter(tuple(r) for r in build_kg(
+        spark, synth.synth_transcripts(spark, 60),
+        synth.dict_spec())["triples"].collect())
+    got = Counter(tuple(r) for r in TableCatalog(spark, out).read(
+        "triples").select("subj", "pred", "obj", "conv_id",
+                          "turn_idx").collect())
+    assert got == want

@@ -44,7 +44,7 @@ def test_tag_resumable_one_job_per_bucket_with_direct_counts(spark, tmp_path):
     assert 0 < len(turns) < n_buckets, "fixture needs empty buckets too"
     assert {b: r["n_turns"] for b, r in lineage.items()} == {
         b: turns[b] for b in range(n_buckets)}
-    assert {b: r["n_mentions"] for b, r in lineage.items()} == {
+    assert {b: r["n_rows"] for b, r in lineage.items()} == {
         b: mentions[b] for b in range(n_buckets)}
 
     # one tag+write job per non-empty bucket, plus the one schema

@@ -7,8 +7,10 @@ Usage (the north_rule's deployment shape):
         --py-files dist/autoner_spark.zip \
         tools/run_job.py --out /tmp/kg_run --n-convs 2000 --buckets 8
 
-Reruns skip completed buckets (per-partition lineage); pass --sf-dir to tag
-documents-derived transcripts instead of synthetic ones.
+Each bucket is one Spark job that writes build_kg's triples to
+<out>/triples/bucket=N, the catalog's triples table; reruns skip completed
+buckets (per-partition lineage). Pass --sf-dir to tag documents-derived
+transcripts instead of synthetic ones.
 """
 
 from __future__ import annotations
@@ -34,76 +36,77 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
-def run(spark, args: argparse.Namespace) -> dict:
-    """The job on ``spark``: bucketize (first run only), tag the buckets
-    not yet done, write the triples table; returns the run report. Never
-    stops ``spark``."""
+def _transcripts(spark, args: argparse.Namespace):
+    """The corpus to bucketize, and the number of documents its dedup
+    pre-stage dropped."""
     from autoner_spark import synth
-    from autoner_spark.dictionary import build_trie
+
+    if not args.sf_dir:
+        return synth.synth_transcripts(spark, args.n_convs), 0
+    from autoner_spark.queries import load_parallel, transcripts_df
+
+    docs, n_dropped = None, 0
+    if args.dedup:
+        # pre-stage: corpus dedup BEFORE tagging, the standard
+        # training-pipeline composition; it broadcasts only the victim
+        # ids, so the corpus never shuffles (dedup.apply_corpus_dedup)
+        from autoner_spark.dedup import apply_corpus_dedup
+
+        docs = load_parallel(spark, args.sf_dir, "documents")
+        deduped = apply_corpus_dedup(docs, args.dedup)
+        n_dropped = docs.count() - deduped.count()
+        docs = deduped
+    return transcripts_df(spark, args.sf_dir, docs=docs), n_dropped
+
+
+def run(spark, args: argparse.Namespace) -> dict:
+    """The job on ``spark``: bucketize (first run only), then tag the
+    buckets not yet done, each bucket one job writing ``build_kg``'s
+    triples to ``<out>/triples/bucket=N``; returns the run report. A rerun
+    with every bucket done submits no Spark job. Never stops ``spark``."""
+    from autoner_spark import synth, tagvec
+    from autoner_spark.catalog import TableCatalog
     from autoner_spark.lineage import (
         bucketize_transcripts,
         completed_buckets,
-        metrics_df,
-        tag_resumable,
+        read_lineage,
+        tag_buckets,
     )
-    from autoner_spark.triples import kg_from_mentions
+    from autoner_spark.triples import broadcast_automaton
 
-    n_docs_dropped = 0
+    if args.dedup and not args.sf_dir:
+        raise SystemExit("--dedup requires --sf-dir (documents corpus)")
     if args.sf_dir:
-        from autoner_spark.queries import (
-            kg_dict_spec,
-            load_parallel,
-            transcripts_df,
-        )
+        from autoner_spark.queries import kg_dict_spec
 
         spec = kg_dict_spec()
-        docs = None
-        if args.dedup:
-            # pre-stage: corpus dedup BEFORE tagging — the standard
-            # training-pipeline composition. Both branches broadcast only
-            # the VICTIM ids (family-bounded, far below corpus size) in a
-            # left_anti join, so the corpus never shuffles; the former
-            # exact branch broadcast the SURVIVOR set (~corpus-sized on a
-            # mostly-unique corpus — driver OOM at scale) and the former
-            # minhash rule dropped id_b's only (kept two representatives
-            # for clusters shaped (a,c),(b,c)). See dedup.apply_corpus_dedup.
-            from autoner_spark.dedup import apply_corpus_dedup
-
-            docs = load_parallel(spark, args.sf_dir, "documents")
-            deduped = apply_corpus_dedup(docs, args.dedup)
-            n_docs_dropped = docs.count() - deduped.count()
-            docs = deduped
-        transcripts = transcripts_df(spark, args.sf_dir, docs=docs)
-    elif args.dedup:
-        raise SystemExit("--dedup requires --sf-dir (documents corpus)")
     else:
         spec = synth.dict_spec()
-        transcripts = synth.synth_transcripts(spark, args.n_convs)
-
-    trie = build_trie(spec)
-
+    n_docs_dropped = 0
     done_before = completed_buckets(args.out)
     if not done_before:
+        # a resumed run tags from the bucketed copy: the corpus is read
+        # (and deduplicated) by the first run only
+        transcripts, n_docs_dropped = _transcripts(spark, args)
         bucketize_transcripts(transcripts, args.out, args.buckets)
-    mentions = tag_resumable(spark, trie, args.out, args.buckets)
 
-    # build_kg's composition over the resumable mentions: one lazy pass
-    triples = kg_from_mentions(spark, mentions, spec)["triples"]
-    # triples sink goes through the catalog layer: Iceberg writeTo when the
-    # runtime jar is on the classpath (--packages org.apache.iceberg:...),
-    # the partitioned-parquet layout otherwise
-    from autoner_spark.catalog import TableCatalog
-
+    # build_kg's triples, bucket by bucket: out/triples/bucket=N is the
+    # parquet catalog's triples table, so the committed buckets are the
+    # table. Iceberg (runtime jar on the classpath) copies them into its
+    # own table once per run.
+    triples = tag_buckets(
+        spark, args.out, args.buckets, "triples",
+        lambda: broadcast_automaton(spark, spec),
+        tagvec.triple_record_batch, tagvec.TRIPLES_SCHEMA)
     cat = TableCatalog(spark, args.out)
-    cat.create_or_replace(triples, "triples")
-
-    n_triples = cat.read("triples").count()
-    metrics = [r.asDict() for r in metrics_df(spark, args.out).collect()]
+    if cat.use_iceberg:
+        cat.create_or_replace(triples, "triples", partition_by=("bucket",))
+    lineage = read_lineage(args.out)
     return {
         "buckets_skipped": sorted(done_before),
-        "n_triples": n_triples,
+        "n_triples": sum(r["n_rows"] for r in lineage),
         "n_docs_dropped_by_dedup": n_docs_dropped,
-        "lineage": metrics,
+        "lineage": lineage,
     }
 
 
