@@ -29,8 +29,14 @@ import pyarrow.parquet as pq
 
 from .canonicalize import _union_find_labels
 from .dictionary import TrieKB, build_trie
-from .markup import parse_marked_line
-from .oracle import extract_mentions, get_boundary, get_types, segment_dp, tag_turn
+from .oracle import (
+    extract_mentions,
+    get_boundary,
+    get_types,
+    parse_marked_line,
+    segment_dp,
+    tag_turn,
+)
 from .textutil import ascii_lower, tokenize_turn
 
 TURNS_PER_CONV = 8  # must match queries.TRANSCRIPTS_CTE

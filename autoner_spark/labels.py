@@ -11,6 +11,12 @@ boundary: 1 Break / -1 Tie / 0 Unknown (getBoundary, annotation.h:267-296);
 types: per-token comma-joined type or 'None' (getTypes, :298-317);
 safe: col-4 S/D of the .ck format (Unknown -> Dangerous).
 
+The table is one narrow ``mapInArrow`` of ``tagvec.label_record_batch``,
+which builds the three label arrays from the DP's ENTITY and FILTERED
+segments with ordered NumPy scatters; ``oracle.get_boundary`` /
+``get_types`` are the references it is pinned to
+(tests/test_tagvec_parity.py).
+
 ``ck_lines`` re-serializes a labels row into the exact reference file
 format (label INVERSION preserved: file 'I' = Break, 'O' = Tie) so the
 distributed export is byte-comparable to `bin/generate` output — the golden
@@ -20,61 +26,24 @@ engine itself always consumes the array form.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import pyworker
+from . import tagvec
 from .dictionary import TrieKB
-from .oracle import get_boundary, get_types, segment_dp
-from .textutil import tokenize_turn
-
-LABELS_SCHEMA = (
-    "conv_id string, turn_idx int, tokens array<string>, "
-    "boundary array<int>, types array<string>, safe array<boolean>"
-)
+from .tagger import broadcast_automaton, tag_stage
 
 
 def label_transcripts(transcripts: DataFrame, trie: TrieKB) -> DataFrame:
-    """transcripts -> labels table (one narrow Arrow stage, broadcast trie).
-
-    Reuses the oracle's readable implementations per turn — label
-    generation is not the throughput hot path (mention extraction is), and
-    sharing the code keeps the .ck serialization pinned to the golden
-    tests. A turn is processed with its trailing "\\n" sentinel and the
-    sentinel's label slots are dropped, mirroring the global-stream
-    semantics exactly.
-    """
-    bc = transcripts.sparkSession.sparkContext.broadcast(trie)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pyworker.install()
-        kb = bc.value
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("conv_id", "turn_idx", "tokens", "boundary", "types", "safe")}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                toks = tokenize_turn(text) if text else []
-                stream = toks + ["\n"]
-                segs = segment_dp(stream, kb)
-                boundary = get_boundary(stream, segs)[: len(toks)]
-                types = get_types(stream, segs)[: len(toks)]
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(int(turn_idx))
-                out["tokens"].append(toks)
-                out["boundary"].append(boundary)
-                out["types"].append(types)
-                out["safe"].append([b != 0 for b in boundary])
-            yield pd.DataFrame(out)
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, LABELS_SCHEMA
-    )
+    """transcripts -> labels table: one narrow ``mapInArrow`` of
+    ``tagvec.label_record_batch`` over the broadcast automaton. A turn is
+    labelled with its trailing "\\n" sentinel and the sentinel's slot is
+    dropped, mirroring the global-stream semantics exactly; conv_id and
+    turn_idx are copied from the source row, NULLs included."""
+    return tag_stage(
+        transcripts.select("conv_id", "turn_idx", "text"),
+        broadcast_automaton(transcripts.sparkSession, trie),
+        tagvec.label_record_batch, tagvec.LABELS_SCHEMA)
 
 
 def ck_lines(labels: DataFrame) -> DataFrame:

@@ -18,7 +18,9 @@ the pipeline is organized around **bucketed work units**:
    finished_at)``: the turns the bucket's scan read and the rows its write
    committed, both observed on that one job;
 4. on restart, completed buckets are skipped by consulting the lineage
-   table — idempotent, exactly-once per bucket.
+   table — idempotent, exactly-once per bucket. A run with fewer buckets
+   than the layout was cut into is refused, as it would never tag the
+   higher ones.
 
 The lineage table names buckets, not tables, so one ``out_dir`` holds one
 bucketed output table: a run of ``tag_resumable`` and one of the deploy job
@@ -43,7 +45,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import tagvec
 from .dictionary import TrieKB
-from .tagger import compile_trie, tag_stage
+from .tagger import broadcast_automaton, tag_stage
 
 LINEAGE_SCHEMA = (
     "bucket int, n_turns long, n_rows long, wall_ms long, finished_at string"
@@ -104,9 +106,18 @@ def tag_buckets(
     partition-pruned to that bucket's directory and whose lineage counts
     are observed on that same job; return the whole table. The automaton
     is compiled and broadcast once, by ``broadcast_vec()``, and only if a
-    bucket has turns to tag."""
+    bucket has turns to tag.
+
+    Raises ValueError, before any job, when the layout holds a bucket
+    numbered ``n_buckets`` or higher: this run would never tag it."""
     done = completed_buckets(out_dir)
     base = os.path.join(out_dir, "transcripts")
+    cut = [int(d.removeprefix("bucket="))
+           for d in (os.listdir(base) if os.path.isdir(base) else ())
+           if d.startswith("bucket=")]
+    if max(cut, default=-1) >= n_buckets:
+        raise ValueError(f"{base} holds bucket={max(cut)}, beyond the "
+                         f"run's {n_buckets} buckets")
     table_dir = os.path.join(out_dir, table)
     transcripts = bc_vec = None  # opened on the first bucket with turns
     for bucket in range(n_buckets):
@@ -155,8 +166,7 @@ def tag_resumable(
     emitter, table ``mentions``)."""
     return tag_buckets(
         spark, out_dir, n_buckets, "mentions",
-        lambda: spark.sparkContext.broadcast(
-            tagvec.compile_vec(compile_trie(trie))),
+        lambda: broadcast_automaton(spark, trie),
         tagvec.tag_record_batch, tagvec.OUT_SCHEMA)
 
 

@@ -7,15 +7,21 @@ distant-supervision pipeline:
 * ``get_boundary``  <- AnnotatedData::getBoundary  (src/annotation.h:267-296)
 * ``get_types``     <- AnnotatedData::getTypes     (src/annotation.h:298-317)
 * ``to_ck``         <- AnnotatedData::toCk         (src/annotation.h:319-351)
+* ``parse_marked_line`` <- the per-line body of
+  Annotation::getDistantSupervision(filename) (src/annotation.h:397-476),
+  the AutoPhrase ``<phrase>`` markup front-end
 * ``extract_mentions`` <- the typed-span emission semantics of
   test_partial_ner.py:99-109 (surface = ' '-joined span tokens) applied to
   the deterministic tagger's segments.
 
 This module is intentionally written single-node / per-token, mirroring the
-C++ control flow line-for-line, and is used ONLY as the test oracle. The
-distributed tagger (``autoner_spark.tagger``) is an independent, optimized
-implementation; pytest compares the two (plus the compiled reference binary
-when a C++ toolchain is available) for exact typed-span parity — the
+C++ control flow line-for-line, and is the home of these reference
+implementations: the tests and the golden tables (``golden``, the only
+package module that imports it) run them; no production path does. Every
+distributed path (mentions, linked mentions, triples, Tie-or-Break labels,
+phrase markup) is an independent, optimized ``autoner_spark.tagvec``
+emitter; pytest compares each with these references (plus the compiled
+reference binary when a C++ toolchain is available) for exact parity — the
 P/R >= 0.95 gate of BASELINE.json, met at 1.0 by construction.
 """
 
@@ -28,6 +34,7 @@ from .textutil import (
     FILTERED_TYPE,
     is_real_separator,
     is_separator_token,
+    split_by,
 )
 
 
@@ -225,6 +232,69 @@ def to_bioes(raw_tokens: list[str], segments: list[Segment]) -> str:
             else:
                 buf.append(prefix + f"E-{types[i]}\n")
     return "".join(buf)
+
+
+def _strip_marker(token: str, marker: str) -> tuple[str, bool]:
+    found = False
+    while marker in token:
+        i = token.find(marker)
+        token = token[:i] + token[i + len(marker):]
+        found = True
+    return token, found
+
+
+def parse_marked_line(
+    line: str, trie: TrieKB, base: int = 0
+) -> tuple[list[str], list[Segment]]:
+    """One marked line -> (raw_tokens, segments); offsets start at ``base``.
+
+    Mirrors the per-line body of annotation.h:402-468 (without the trailing
+    "\\n" push — the caller owns sentinel placement).
+    """
+    raw: list[str] = []
+    segs: list[Segment] = []
+    in_phrase = False
+    phrase: list[str] = []
+    for token in split_by(line, " "):
+        token, start = _strip_marker(token, "<phrase>")
+        token, end = _strip_marker(token, "</phrase>")
+        if start:
+            in_phrase = True
+            phrase = []
+        raw.append(token)
+        if in_phrase:
+            phrase.append(token)
+        else:
+            segs.append(
+                Segment(
+                    l=base + len(raw) - 1,
+                    r=base + len(raw),
+                    token=token,
+                    type="",
+                )
+            )
+        if end:
+            in_phrase = False
+            type_str = trie.get_type_from_kb(phrase)
+            if type_str != "":
+                segs.append(
+                    Segment(
+                        l=base + len(raw) - len(phrase),
+                        r=base + len(raw),
+                        token=" ".join(phrase),  # space-joined (:444-450)
+                        type=type_str,
+                    )
+                )
+            else:
+                for i, ptok in enumerate(phrase):
+                    l = base + len(raw) - len(phrase) + i
+                    segs.append(
+                        Segment(l=l, r=l + 1, token=ptok, type="__FILTERED__")
+                    )
+    # annotation.h:467 asserts the phrase closed by end of line
+    if in_phrase:
+        raise ValueError(f"unclosed <phrase> in line: {line!r}")
+    return raw, segs
 
 
 @dataclass(frozen=True)

@@ -694,8 +694,9 @@ def q_kg_triples_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_mentions_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M11 literal front-end over AutoPhrase-style marked transcripts:
     markup is injected for two dictionary surfaces, then the exact-lookup
-    phrase tagger runs (the golden twin replays the same markup parser,
-    see the DP-chain twin note below; semantics pinned by test_markup)."""
+    phrase tagger runs (the golden twin replays the oracle's markup
+    parser, see the DP-chain twin note below; semantics pinned by
+    test_markup and test_tagvec_parity)."""
     from .markup import tag_marked_transcripts
 
     t = transcripts_df(spark, sf_dir)
@@ -714,8 +715,8 @@ def q_kg_mentions_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_labels_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-or-Break labels table (D6) over the derived transcripts,
     exploded to long form; the gate compares every value with the golden
-    table (not an independent check, see the DP-chain twin note below;
-    .ck serialization is pinned byte-for-byte to the compiled reference
+    table (the oracle's labels, see the DP-chain twin note below; .ck
+    serialization is pinned byte-for-byte to the compiled reference
     binary in pytest)."""
     from .labels import label_transcripts
 
@@ -739,14 +740,12 @@ def q_kg_labels_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle side reads a GOLDEN parquet table materialized by the
 # single-node Python oracle (autoner_spark/golden.py) — the same oracle
 # code that is pinned byte-for-byte against the compiled C++ reference
-# binary in pytest. For the mention and triple queries the gate compares
-# two independent implementations: the distributed tagvec mapInArrow
-# tagger vs the Python oracle replay. kg_labels_dp is NOT independent:
-# labels.label_transcripts and golden.golden_labels both run the same
-# oracle.segment_dp / get_boundary / get_types, so that gate only checks
-# the Spark plumbing around them (ROADMAP direction 4: labels through
-# tagvec). Likewise kg_mentions_markup: both sides run
-# markup.parse_marked_line.
+# binary in pytest. For every query of the chain the gate compares two
+# independent implementations: a distributed tagvec emitter in one
+# mapInArrow vs the Python oracle replay. kg_labels_dp runs
+# tagvec.label_record_batch against golden.golden_labels (oracle.segment_dp
+# / get_boundary / get_types), and kg_mentions_markup runs
+# tagvec.markup_record_batch against oracle.parse_marked_line.
 
 SQL_KG_TAG_MENTIONS_DP = f"""
 SELECT conv_id, turn_idx, begin_tok, end_tok, surface, entity_type

@@ -17,13 +17,14 @@ Iceberg/parquet transcripts table, Spark-first:
   in, Arrow batches out, no shuffle, no per-row Python UDF — whose one
   executor is the vectorized ``autoner_spark.tagvec`` engine, for every
   tokenizer and passthrough column. ``tag_stage`` is that stage for any
-  tagvec emitter: ``triples.build_kg`` runs it for the mentions, the
-  linked mentions and the triples over one broadcast, and
-  ``lineage.tag_buckets`` once per bucket;
+  tagvec emitter, over the automaton ``broadcast_automaton`` compiles:
+  ``triples.build_kg`` runs it for the mentions, the linked mentions and
+  the triples over one broadcast, ``lineage.tag_buckets`` once per
+  bucket, and ``labels`` / ``markup`` for the Tie-or-Break labels and
+  the phrase-markup mentions;
 * conv_id and turn_idx are copied from the source row, so the output
-  declares them as nullable as the input does (``stage_schema``, which
-  ``markup`` shares; a NULL id on a matching turn is carried, not a JVM
-  NullPointerException);
+  declares them as nullable as the input does (``stage_schema``; a NULL
+  id on a matching turn is carried, not a JVM NullPointerException);
 * ``tag_tokens_compiled`` is the scalar reference that engine is pinned to:
   a from-scratch DP, deliberately independent from the readable oracle in
   ``autoner_spark.oracle`` so the pytest parity suite cross-checks the
@@ -45,6 +46,7 @@ reused worker re-reads only archives that changed.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from typing import Any
 
 import pyarrow as pa
@@ -212,11 +214,20 @@ def tag_transcripts(
     """
     if tokenizer not in tagvec.TOKENIZER_NAMES:
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    bc_vec = transcripts.sparkSession.sparkContext.broadcast(
-        tagvec.compile_vec(compile_trie(trie)))
     return tag_stage(
         transcripts.select("conv_id", "turn_idx", "text", *passthrough),
-        bc_vec, tagvec.tag_record_batch, tagvec.OUT_SCHEMA, tokenizer)
+        broadcast_automaton(transcripts.sparkSession, trie),
+        tagvec.tag_record_batch, tagvec.OUT_SCHEMA, tokenizer)
+
+
+def broadcast_automaton(spark, trie: TrieKB,
+                        links: Iterable[tuple[str, str]] = ()):
+    """``trie`` compiled (``compile_trie``, then ``tagvec.compile_vec``
+    with the (norm, dictionary surface) pairs ``links`` the link and
+    triple emitters read) and broadcast: the one automaton every tagvec
+    emitter runs on."""
+    return spark.sparkContext.broadcast(
+        tagvec.compile_vec(compile_trie(trie), links))
 
 
 def tag_stage(

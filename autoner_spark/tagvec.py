@@ -1,6 +1,7 @@
 """Vectorized (Arrow + NumPy) engine for the distributed DP tagger.
 
-The only executor of ``tagger.tag_transcripts``. It is semantics-identical
+The only executor of every tagging path, each an emitter that
+``tagger.tag_stage`` runs over Arrow batches. It is semantics-identical
 to ``tagger.tag_tokens_compiled``, the scalar reference: the same segmentDP
 recurrence (string_match.h:21-89 strict-improvement updates at
 AutoNER's full-dictionary weight 1.0, so core and filtered matches both
@@ -34,15 +35,20 @@ over a whole Arrow batch at once instead of one Python token at a time:
   ``ascii_lower`` norm, the dictionary surfaces sharing that norm and
   the type list. Passthrough columns are copied onto each mention with
   one ``take`` by its source row;
-* three sibling emitters run over the same segments: mentions
+* five emitters: three run over the same ENTITY segments, mentions
   (``tag_record_batch``), linked mentions (``link_record_batch``, the
   left join to the dictionary's surfaces with its multiplicity) and
   ``(subj, pred, obj)`` triples (``triple_record_batch``), so
-  ``triples.build_kg`` links and assembles inside the batch.
+  ``triples.build_kg`` links and assembles inside the batch; Tie-or-Break
+  labels (``label_record_batch``) scatter the ENTITY and FILTERED
+  segments into per-token arrays (``oracle.get_boundary`` /
+  ``get_types``); and AutoPhrase markup (``markup_record_batch``) skips
+  the DP, finding ``<phrase>`` markers with string kernels and looking
+  each phrase up as an exact trie path (``oracle.parse_marked_line``).
 
-Parity with the scalar path is pinned by tests/test_tagvec_parity.py (and
-transitively by the oracle/binary parity suite, which runs the Spark tagger
-through this engine).
+Parity with the scalar path and the oracle's references is pinned by
+tests/test_tagvec_parity.py (and transitively by the oracle/binary parity
+suite, which runs the Spark tagger through this engine).
 
 Scale note: everything here is per-batch and executor-side, and memory is
 O(tokens in the batch): the DP tables hold one cell per token of a DP row
@@ -108,6 +114,19 @@ TRIPLES_SCHEMA = pa.schema(
         pa.field("obj", pa.string(), False),
         OUT_SCHEMA.field("conv_id"),
         OUT_SCHEMA.field("turn_idx"),
+    ]
+)
+
+# ``labels.label_transcripts``' table: one row per source row, one list
+# element per token
+LABELS_SCHEMA = pa.schema(
+    [
+        OUT_SCHEMA.field("conv_id"),
+        OUT_SCHEMA.field("turn_idx"),
+        pa.field("tokens", pa.list_(pa.string()), False),
+        pa.field("boundary", pa.list_(pa.int32()), False),
+        pa.field("types", pa.list_(pa.string()), False),
+        pa.field("safe", pa.list_(pa.bool_()), False),
     ]
 )
 
@@ -260,6 +279,21 @@ def _token_ids(flat: pa.Array, vec: dict[str, Any]) -> np.ndarray:
     return np.where(idx_np >= 0, vec["pos_to_id"][safe], np.int64(-1))
 
 
+def _child(st: np.ndarray, tid: np.ndarray, vec: dict[str, Any]) -> np.ndarray:
+    """The child state of each non-root state ``st`` by known token id
+    ``tid``, -1 where the trie has no such edge (root edges are in
+    ``root_trans``)."""
+    dense = vec["trans_dense"]
+    if dense is not None:
+        return dense[st, tid]
+    tkeys = vec["trans_keys"]
+    if not len(tkeys):
+        return np.full(len(st), -1, dtype=np.int64)
+    key = st * vec["V"] + tid
+    pos = np.minimum(np.searchsorted(tkeys, key), len(tkeys) - 1)
+    return np.where(tkeys[pos] == key, vec["trans_vals"][pos], -1)
+
+
 def _walk_matches(
     ids: np.ndarray,
     turn_end: np.ndarray,
@@ -275,8 +309,6 @@ def _walk_matches(
     root_trans = vec["root_trans"]
     kind = vec["kind"]
     haskid = vec["haskid"]
-    tkeys = vec["trans_keys"]
-    tvals = vec["trans_vals"]
     max_depth = vec["max_depth"]
 
     m_sp: list[np.ndarray] = []
@@ -314,23 +346,10 @@ def _walk_matches(
         sp = sp[ok]
         st = st[ok]
         tid = tid[ok]
-        dense = vec.get("trans_dense")
-        if dense is not None:
-            nst = dense[st, tid]
-            found = nst >= 0
-            sp = sp[found]
-            st = nst[found].astype(np.int64, copy=False)
-        else:
-            key = st * V + tid
-            pos = np.searchsorted(tkeys, key)
-            pos = np.minimum(pos, max(len(tkeys) - 1, 0))
-            found = (
-                (tkeys[pos] == key)
-                if len(tkeys)
-                else np.zeros(len(key), bool)
-            )
-            sp = sp[found]
-            st = tvals[pos[found]]
+        nst = _child(st, tid, vec)
+        found = nst >= 0
+        sp = sp[found]
+        st = nst[found].astype(np.int64, copy=False)
         d += 1
     if not m_sp:
         e = np.empty(0, dtype=np.int64)
@@ -350,11 +369,12 @@ def _dp_segments(
     m_kind: np.ndarray,
     m_st: np.ndarray,
     order: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Lockstep DP + traceback over all DP rows (rows already sorted by
-    descending length via ``order``). Returns ENTITY segments as
-    (sorted_row, begin, end, state) arrays (unordered), state being
-    the terminal trie state of the segment's match.
+    descending length via ``order``). Returns the match segments, ENTITY
+    and FILTERED, as (sorted_row, begin, end, state, kind) arrays
+    (unordered), state being the terminal trie state of the segment's
+    match and kind its ``m_kind``.
 
     Column pass: cell c of every active row holds the max over its
     candidates — matches of depth d (value f[c-d] + delta_d) plus the
@@ -374,8 +394,7 @@ def _dp_segments(
     lens = counts[order]
     maxlen = int(lens[0]) if n else 0
     if maxlen == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e.copy(), e.copy(), e.copy()
+        return _no_segments()
 
     # rows stored in column c: lens >= c (sorted desc -> a prefix); all n
     # rows hold column 0
@@ -472,12 +491,13 @@ def _dp_segments(
                 selcol[ru] = d
                 tb_idx[base + ru] = g[gsl][m]
 
-    # vectorized traceback: pointer-chase c -> c - step, emitting ENTITY
-    # segments along the way
+    # vectorized traceback: pointer-chase c -> c - step, emitting the
+    # match segments along the way
     seg_r: list[np.ndarray] = []
     seg_b: list[np.ndarray] = []
     seg_e: list[np.ndarray] = []
     seg_s: list[np.ndarray] = []
+    seg_k: list[np.ndarray] = []
     j = lens.astype(np.int64, copy=True)
     rows = np.flatnonzero(j > 0)
     while rows.size:
@@ -489,38 +509,30 @@ def _dp_segments(
         em = np.flatnonzero(dsel > 0)
         if em.size:
             idxs = tb_idx[cell[em]]
-            ent = m_kind[idxs] == _KIND_ENTITY
-            if ent.any():
-                seg_r.append(rows[em][ent])
-                seg_b.append(ii[em][ent])
-                seg_e.append(jr[em][ent])
-                seg_s.append(m_st[idxs[ent]])
+            seg_r.append(rows[em])
+            seg_b.append(ii[em])
+            seg_e.append(jr[em])
+            seg_s.append(m_st[idxs])
+            seg_k.append(m_kind[idxs])
         j[rows] = ii
         rows = rows[ii > 0]
     if not seg_r:
-        e = np.empty(0, dtype=np.int64)
-        return e, e.copy(), e.copy(), e.copy()
-    return (
-        np.concatenate(seg_r),
-        np.concatenate(seg_b),
-        np.concatenate(seg_e),
-        np.concatenate(seg_s),
-    )
+        return _no_segments()
+    return tuple(np.concatenate(x) for x in (seg_r, seg_b, seg_e, seg_s,
+                                             seg_k))
 
 
-def _segments(
-    batch: pa.RecordBatch,
-    vec: dict[str, Any],
-    tokenizer: str,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """The entity segments of a (conv_id, turn_idx, text, ...) batch as
-    (source row, begin_tok, end_tok, terminal state) arrays, in the scalar
-    emission order: batch row order, then ascending begin.
+def _no_segments() -> tuple[np.ndarray, ...]:
+    e = np.empty(0, dtype=np.int64)
+    return e, e.copy(), e.copy(), e.copy(), e.copy()
 
-    Tokenization (``tokenizer``, one of TOKENIZER_NAMES; empty tokens
-    dropped), the full DP + extraction, all batch-at-a-time. NULL or empty
-    text tags nothing.
-    """
+
+def _tokens(batch: pa.RecordBatch,
+            tokenizer: str) -> tuple[pa.Array, np.ndarray]:
+    """The tokens of a (conv_id, turn_idx, text, ...) batch's turns: one
+    flat string array and each source row's offsets into it (``nrows + 1``
+    of them). ``tokenizer`` is one of TOKENIZER_NAMES; empty tokens are
+    dropped, and NULL or empty text has none."""
     text = pc.coalesce(batch.column(2), pa.scalar("", pa.string()))
     if tokenizer == "charclass":
         text = pc.replace_substring(
@@ -528,10 +540,6 @@ def _segments(
             "\n", " \n ")
     elif tokenizer != "whitespace":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    nrows = len(text)
-    empty = (np.empty(0, dtype=np.int64),) * 4
-    if nrows == 0:
-        return empty
 
     toks_list = pc.split_pattern(text, " ")
     counts_raw = pc.list_value_length(toks_list).to_numpy(
@@ -544,23 +552,33 @@ def _segments(
     keep = pc.not_equal(flat_raw, "")
     keep_np = keep.to_numpy(zero_copy_only=False)
     if keep_np.all():
-        flat = flat_raw
-        counts = counts_raw
-    else:
-        flat = pc.filter(flat_raw, keep)
-        cm = np.concatenate(([0], np.cumsum(keep_np.astype(np.int64))))
-        counts = cm[offsets_raw[1:]] - cm[offsets_raw[:-1]]
-    offs = np.concatenate(([0], np.cumsum(counts)))
+        return flat_raw, offsets_raw
+    cm = np.concatenate(([0], np.cumsum(keep_np.astype(np.int64))))
+    return pc.filter(flat_raw, keep), cm[offsets_raw]
+
+
+def _segments(
+    flat: pa.Array,
+    offs: np.ndarray,
+    vec: dict[str, Any],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The match segments, ENTITY and FILTERED, of the turns ``flat``
+    and ``offs`` (``_tokens``) as (source row, begin_tok, end_tok,
+    terminal state, kind) arrays, in the scalar emission order: batch row
+    order, then ascending begin. The full DP + extraction, all
+    batch-at-a-time; single-char separator segments are skipped."""
     P = int(offs[-1])
     if P == 0:
-        return empty
+        return _no_segments()
+    counts = np.diff(offs)
+    nrows = len(counts)
 
     ids = _token_ids(flat, vec)
     turn_end = np.repeat(offs[1:], counts)
 
     m_sp, m_d, m_st = _walk_matches(ids, turn_end, vec)
     if m_sp.size == 0:
-        return empty
+        return _no_segments()
 
     t_of = np.repeat(np.arange(nrows, dtype=np.int64), counts)
 
@@ -593,11 +611,11 @@ def _segments(
     row_of_run[order] = np.arange(r_len.size, dtype=np.int64)
 
     kindv = vec["kind"][m_st].astype(np.int8, copy=False)
-    s_r, s_b, s_e, s_st = _dp_segments(
+    s_r, s_b, s_e, s_st, s_k = _dp_segments(
         r_len, row_of_run[m_row], m_i, m_d, kindv, m_st, order
     )
     if s_r.size == 0:
-        return empty
+        return _no_segments()
 
     # back to original turns and turn-local positions; apply the
     # separator-skip rule
@@ -615,17 +633,25 @@ def _segments(
         drop = single & skip_flags[flat_start]
         if drop.any():
             keep_m = ~drop
-            t_orig = t_orig[keep_m]
-            s_b = s_b[keep_m]
-            s_e = s_e[keep_m]
-            s_st = s_st[keep_m]
-            flat_start = flat_start[keep_m]
-            if t_orig.size == 0:
-                return empty
+            t_orig, s_b, s_e, s_st, s_k, flat_start = (
+                x[keep_m] for x in (t_orig, s_b, s_e, s_st, s_k, flat_start))
 
     # the scalar order is that of the (unique) flat start positions
     ordm = np.argsort(flat_start)
-    return t_orig[ordm], s_b[ordm], s_e[ordm], s_st[ordm]
+    return t_orig[ordm], s_b[ordm], s_e[ordm], s_st[ordm], s_k[ordm]
+
+
+def _mentions(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    tokenizer: str,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The entity segments of a (conv_id, turn_idx, text, ...) batch as
+    (source row, begin_tok, end_tok, terminal state) arrays, in the
+    scalar emission order."""
+    t, b, e, st, kind = _segments(*_tokens(batch, tokenizer), vec)
+    ent = kind == _KIND_ENTITY
+    return t[ent], b[ent], e[ent], st[ent]
 
 
 def _mention_columns(
@@ -675,7 +701,7 @@ def tag_record_batch(
     """(conv_id, turn_idx, text, *passthrough) record batch -> mentions
     record batch (OUT_SCHEMA, then the passthrough columns). Every column
     after ``text`` is copied onto each mention from its source row."""
-    t, b, e, st = _segments(batch, vec, tokenizer)
+    t, b, e, st = _mentions(batch, vec, tokenizer)
     t_idx = pa.array(t, pa.int64())
     return pa.RecordBatch.from_arrays(
         [
@@ -695,7 +721,7 @@ def link_record_batch(
     """(conv_id, turn_idx, text) record batch -> linked mentions
     (LINKED_SCHEMA): ``triples.link_mentions`` over this batch's mentions
     and ``vec``'s links, computed by state."""
-    t, b, e, st = _segments(batch, vec, tokenizer)
+    t, b, e, st = _mentions(batch, vec, tokenizer)
     seg, link = _link_rows(st, vec)
     t, b, e, st = t[seg], b[seg], e[seg], st[seg]
     span = (e - b).astype(np.float64)
@@ -720,7 +746,7 @@ def triple_record_batch(
     ``link_record_batch`` gives one ``has_type`` triple per type of its
     set, then one ``mentioned_in`` triple whose object is Spark's
     ``concat_ws('#', conv_id, turn_idx)`` (NULLs skipped)."""
-    t, _, _, st = _segments(batch, vec, tokenizer)
+    t, _, _, st = _mentions(batch, vec, tokenizer)
     seg, _ = _link_rows(st, vec)
     t, st = t[seg], st[seg]
     type_off = vec["type_off"]
@@ -751,3 +777,147 @@ def triple_record_batch(
         ],
         schema=TRIPLES_SCHEMA,
     )
+
+
+def label_record_batch(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    tokenizer: str = "whitespace",
+) -> pa.RecordBatch:
+    """(conv_id, turn_idx, text) record batch -> Tie-or-Break labels
+    (LABELS_SCHEMA), one row per source row: ``oracle.get_boundary`` and
+    ``get_types`` of the turn's DP segments, the turn followed by its
+    "\\n" sentinel, whose slot is dropped.
+
+    Boundaries default to Break (1). A FILTERED segment [l, r) writes
+    Unknown (0) through r INCLUSIVE (annotation.h:278), except at turn
+    end, where slot r is the sentinel's; an entity segment then writes
+    1 at l and Tie (-1) over (l, r), overwriting the one slot where they
+    meet, a FILTERED slot r that is the next segment's l. Types default
+    to "None" and are the entity's type set over [l, r)."""
+    flat, offs = _tokens(batch, tokenizer)
+    t, b, e, st, kind = _segments(flat, offs, vec)
+    first = offs[t] + b
+    boundary = np.ones(int(offs[-1]), dtype=np.int32)
+    filt = kind != _KIND_ENTITY
+    inside = e[filt] < np.diff(offs)[t[filt]]
+    own, rank = _expand(e[filt] - b[filt] + inside)
+    boundary[first[filt][own] + rank] = 0
+    ent = ~filt
+    own, rank = _expand(e[ent] - b[ent])
+    pos = first[ent][own] + rank
+    boundary[pos] = np.where(rank == 0, 1, -1)
+    type_idx = np.zeros(len(boundary), dtype=np.int64)
+    type_idx[pos] = vec["tsid"][st[ent]][own] + 1
+
+    lists = pa.array(offs, pa.int32())
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column(0),
+            pc.cast(batch.column(1), pa.int32()),
+            pa.ListArray.from_arrays(lists, flat),
+            pa.ListArray.from_arrays(lists, pa.array(boundary)),
+            pa.ListArray.from_arrays(lists, pa.concat_arrays(
+                [pa.array(["None"]), vec["types"]]).take(type_idx)),
+            pa.ListArray.from_arrays(lists, pa.array(boundary != 0)),
+        ],
+        schema=LABELS_SCHEMA,
+    )
+
+
+def _strip_marker(tokens: pa.Array,
+                  marker: str) -> tuple[pa.Array, np.ndarray]:
+    """(``tokens`` with every ``marker`` removed, again until none is
+    left, as ``oracle._strip_marker``; whether each token held one)."""
+    held = pc.match_substring(tokens, marker)
+    left = held
+    while pc.any(left).as_py():
+        tokens = pc.replace_substring(tokens, marker, "")
+        left = pc.match_substring(tokens, marker)
+    return tokens, held.to_numpy(zero_copy_only=False)
+
+
+def _exact_paths(ids: np.ndarray, first: np.ndarray, n: np.ndarray,
+                 vec: dict[str, Any]) -> np.ndarray:
+    """The trie state of each token-id path ``ids[first:first + n]``
+    (``TrieKB.get_type_from_kb``'s walk), -1 where it leaves the trie."""
+    st = np.where(n > vec["max_depth"], -1, 0)
+    for d in range(min(int(n.max(initial=0)), vec["max_depth"])):
+        act = np.flatnonzero((n > d) & (st >= 0))
+        tid = ids[first[act] + d]
+        ok = tid >= 0
+        nxt = np.full(len(act), -1, dtype=np.int64)
+        nxt[ok] = (vec["root_trans"][tid[ok]] if d == 0
+                   else _child(st[act][ok], tid[ok], vec))
+        st[act] = nxt
+    return st
+
+
+def markup_record_batch(
+    batch: pa.RecordBatch,
+    vec: dict[str, Any],
+    tokenizer: str = "whitespace",
+) -> pa.RecordBatch:
+    """(conv_id, turn_idx, text) record batch of AutoPhrase-marked turns
+    -> mentions (OUT_SCHEMA): ``oracle.extract_mentions`` of
+    ``oracle.parse_marked_line`` per turn (annotation.h:397-476), with no
+    DP. Marked turns split on spaces, the "whitespace" tokenizer.
+
+    Markers are stripped from each token with Arrow string kernels; a
+    token's "<phrase>" opens a phrase (afresh if one is open) and its
+    "</phrase>" closes it, so the parser is inside a phrase after a token
+    that opens one and does not close it, and phrases are found by
+    running maxima over token positions. A close inside a phrase looks
+    the phrase up as an exact trie path; a close outside any looks the
+    turn's last closed phrase up again, over as many tokens ending at its
+    own. A known entity path is a mention unless it is one single-char
+    separator token; its surface is the space-joined tokens it spans.
+    Raises ValueError on a turn that leaves a phrase open."""
+    raw, offs = _tokens(batch, tokenizer)
+    raw, opens = _strip_marker(raw, "<phrase>")
+    raw, closes = _strip_marker(raw, "</phrase>")
+    pos = np.arange(len(raw), dtype=np.int64)
+    row_lo = np.repeat(offs[:-1], np.diff(offs))
+
+    def last(flags: np.ndarray) -> np.ndarray:
+        # the last flagged position at or before each token, -1 if none
+        # in its turn
+        at = np.maximum.accumulate(np.where(flags, pos, -1))
+        return np.where(at >= row_lo, at, -1)
+
+    # inside a phrase after each token: the turn's last marked token so
+    # far opened one and did not close it
+    marked = last(opens | closes)
+    inside = (marked >= 0) & (opens & ~closes)[marked]
+    rows = np.flatnonzero(np.diff(offs))
+    unclosed = rows[inside[offs[rows + 1] - 1]]
+    if unclosed.size:
+        line = batch.column(2)[int(unclosed[0])].as_py()
+        raise ValueError(f"unclosed <phrase> in line: {line!r}")
+    shut = closes & (opens | (np.roll(inside, 1) & (pos > row_lo)))
+
+    # the phrases closed inside one, and which are entity paths
+    real = np.flatnonzero(shut)
+    n = real - last(opens)[real] + 1
+    st = _exact_paths(_token_ids(raw, vec), real - n + 1, n, vec)
+    sep = (n == 1) & pc.is_in(raw.take(pa.array(real, pa.int64())),
+                              value_set=vec["skip_set"]).to_numpy(
+                                  zero_copy_only=False)
+    entity = (st >= 0) & (vec["kind"][st] == _KIND_ENTITY) & ~sep
+
+    # every close looks up its turn's last phrase closed inside one
+    ref = last(shut)[closes]
+    end = np.flatnonzero(closes)[ref >= 0] + 1
+    k = np.searchsorted(real, ref[ref >= 0])
+    end, k = end[entity[k]], k[entity[k]]
+    t = np.searchsorted(offs, end - 1, side="right") - 1
+    begin = end - n[k]
+    own, rank = _expand(n[k])
+    spans = pa.ListArray.from_arrays(
+        pa.array(np.concatenate(([0], np.cumsum(n[k]))), pa.int32()),
+        raw.take(pa.array(begin[own] + rank, pa.int64())))
+    cols = _mention_columns(batch, vec, t, begin - offs[t], end - offs[t],
+                            st[k])
+    # the spanned tokens: after a stray close they are not the phrase's
+    cols[4] = pc.binary_join(spans, " ")
+    return pa.RecordBatch.from_arrays(cols, schema=OUT_SCHEMA)

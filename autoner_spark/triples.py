@@ -10,11 +10,11 @@ Spark-first choices:
   the mention stream. ``build_kg`` links inside the tagger's Arrow batches:
   a match's terminal trie state fixes its surface, so the dictionary
   surfaces sharing its norm are a lookup by state, compiled into the
-  automaton's one broadcast (``broadcast_automaton``, which
-  tools/run_job.py's bucket jobs share). ``link_mentions``, a
-  **broadcast** join, links mentions read from a table: with
-  ``canonical_entities`` and ``assemble_triples`` it is the reference
-  composition ``build_kg`` is tested against;
+  automaton's one broadcast (``tagger.broadcast_automaton`` with
+  ``dict_link_pairs``, as tools/run_job.py's bucket jobs do).
+  ``link_mentions``, a **broadcast** join, links mentions read from a
+  table: with ``canonical_entities`` and ``assemble_triples`` it is the
+  reference composition ``build_kg`` is tested against;
 * the entity id is ``'ent:' || surface_norm``, with no connected
   components: every edge ``link_mentions`` can produce is a self-loop (it
   joins the dictionary ON ``surface_norm``), so ``build_kg`` is one lazy
@@ -177,26 +177,14 @@ def assemble_triples(linked: DataFrame, entities: DataFrame) -> DataFrame:
     return explode_triple_pairs(m)
 
 
-def broadcast_automaton(spark, spec: DictionarySpec, trie=None):
-    """``trie`` (else ``spec``'s) compiled with ``spec``'s link pairs
-    (``dict_link_pairs``) and broadcast: the one automaton every tagvec
-    emitter of the chain runs on."""
-    from . import tagvec
-    from .dictionary import build_trie
-    from .tagger import compile_trie
-
-    return spark.sparkContext.broadcast(tagvec.compile_vec(
-        compile_trie(trie or build_trie(spec)), dict_link_pairs(spec)))
-
-
 def build_kg(spark, transcripts: DataFrame, spec: DictionarySpec,
              trie=None) -> dict[str, DataFrame]:
     """Full pipeline: transcripts -> mentions, linked, entities, triples.
     All lazy: no job runs here, and nothing is cached.
 
-    The automaton is compiled and broadcast once
-    (``broadcast_automaton``); mentions, linked mentions and triples are
-    each one narrow ``mapInArrow`` over the transcripts (``tagvec``'s
+    The automaton is compiled and broadcast once, by
+    ``tagger.broadcast_automaton``; mentions, linked mentions and triples
+    are each one narrow ``mapInArrow`` over the transcripts (``tagvec``'s
     three emitters), so draining ``triples`` is one job that tags each
     turn once: linking is a lookup by the match's trie state (the
     dictionary surfaces sharing the ``ascii_lower`` of its path), not a
@@ -204,9 +192,11 @@ def build_kg(spark, transcripts: DataFrame, spec: DictionarySpec,
     canonical_entities(...))`` over ``tag_transcripts``' mentions
     (tests/test_kg_streaming.py)."""
     from . import tagvec
-    from .tagger import tag_stage
+    from .dictionary import build_trie
+    from .tagger import broadcast_automaton, tag_stage
 
-    bc_vec = broadcast_automaton(spark, spec, trie)
+    bc_vec = broadcast_automaton(spark, trie or build_trie(spec),
+                                 dict_link_pairs(spec))
     src = transcripts.select("conv_id", "turn_idx", "text")
     linked = tag_stage(src, bc_vec, tagvec.link_record_batch,
                        tagvec.LINKED_SCHEMA)

@@ -135,3 +135,28 @@ def test_spans_from_labels_to_span_semantics(spark):
         ("c", 0, 3, 5, "Object"),
         ("c", 1, 0, 3, "Object,Operator"),
     }
+
+
+@pytest.mark.parametrize("null_col", ["conv_id", "turn_idx"])
+def test_labels_carry_null_ids(spark, null_col):
+    """A turn with a NULL conv_id or turn_idx is labelled like any other:
+    the NULL is carried onto its labels row, and the other row's labels
+    are unchanged."""
+    trie = build_trie(synth.dict_spec())
+    ids = {"conv_id": "c", "turn_idx": 1, null_col: None}
+    rows = [
+        ("c", 0, "u", "see hash join here", None, None),
+        (ids["conv_id"], ids["turn_idx"], "u", "big table x", None, None),
+    ]
+    got = sorted(
+        (tuple(r) for r in label_transcripts(
+            spark.createDataFrame(rows, synth.TRANSCRIPTS_DDL), trie
+        ).collect()),
+        key=repr,
+    )
+    assert got == sorted([
+        ("c", 0, ["see", "hash", "join", "here"], [1, 1, -1, 1],
+         ["None", "Operator", "Operator", "None"], [True] * 4),
+        (ids["conv_id"], ids["turn_idx"], ["big", "table", "x"], [1, -1, 1],
+         ["Object", "Object", "None"], [True] * 3),
+    ], key=repr)

@@ -7,6 +7,8 @@ import os
 import shutil
 from collections import Counter
 
+import pytest
+
 from autoner_spark import synth
 from autoner_spark.catalog import TableCatalog
 from autoner_spark.dictionary import build_trie
@@ -120,6 +122,17 @@ def test_resume_tolerates_empty_buckets(spark, tmp_path):
     assert len(read_lineage(out)) == n_buckets
 
 
+def test_resume_refuses_fewer_buckets_than_the_layout(spark, tmp_path):
+    """Tagging a layout cut into more buckets than the run has is refused
+    before any job, as the higher buckets would never be tagged."""
+    out = str(tmp_path / "run")
+    bucketize_transcripts(synth.synth_transcripts(spark, 30, partitions=2),
+                          out, N_BUCKETS)
+    with pytest.raises(ValueError, match="beyond the run's 2 buckets"):
+        tag_resumable(spark, build_trie(synth.dict_spec()), out, 2)
+    assert read_lineage(out) == []
+
+
 def test_metrics_table(spark, tmp_path):
     out = str(tmp_path / "run")
     trie = build_trie(synth.dict_spec())
@@ -228,3 +241,26 @@ def test_run_job_redoes_only_a_killed_bucket(spark, tmp_path):
         "triples").select("subj", "pred", "obj", "conv_id",
                           "turn_idx").collect())
     assert got == want
+
+
+def test_run_job_refuses_fewer_buckets_on_resume(spark, tmp_path):
+    """A resumed deploy job run with fewer --buckets than its layout was
+    cut into is refused, and changes nothing: a rerun with the first
+    count redoes the killed bucket and the table holds every triple."""
+    run_job = _run_job_module()
+    out = str(tmp_path / "job")
+
+    def args(n):
+        return run_job.parse_args(
+            ["--out", out, "--n-convs", "60", "--buckets", str(n)])
+
+    first = run_job.run(spark, args(N_BUCKETS))
+    _kill_bucket(out, "triples", N_BUCKETS - 1)
+    with pytest.raises(ValueError, match="beyond the run's 2 buckets"):
+        run_job.run(spark, args(2))
+    assert len(read_lineage(out)) == N_BUCKETS - 1
+
+    again = run_job.run(spark, args(N_BUCKETS))
+    assert again["buckets_skipped"] == list(range(N_BUCKETS - 1))
+    assert again["n_triples"] == first["n_triples"] == (
+        TableCatalog(spark, out).read("triples").count())

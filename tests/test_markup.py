@@ -4,8 +4,12 @@ import pytest
 
 from autoner_spark import synth
 from autoner_spark.dictionary import DictionarySpec, build_trie
-from autoner_spark.markup import parse_marked_line, tag_marked_transcripts
-from autoner_spark.oracle import extract_mentions, get_boundary
+from autoner_spark.markup import tag_marked_transcripts
+from autoner_spark.oracle import (
+    extract_mentions,
+    get_boundary,
+    parse_marked_line,
+)
 
 
 @pytest.fixture(scope="module")

@@ -141,6 +141,41 @@ def test_one_arrow_executor_for_every_shape(spark, trie, tokenizer,
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, plan
 
 
+@pytest.mark.parametrize("stage", ["labels", "markup"])
+def test_one_arrow_executor_for_labels_and_markup(spark, trie, stage):
+    """Tie-or-Break labels and phrase markup run through the same one
+    MapInArrow as the tagger; no pandas or row-at-a-time Python stage."""
+    from autoner_spark.labels import label_transcripts
+    from autoner_spark.markup import tag_marked_transcripts
+
+    run = {"labels": label_transcripts, "markup": tag_marked_transcripts}
+    out = run[stage](_passthrough_transcripts(spark), trie)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_only_golden_imports_the_oracle():
+    """``oracle`` holds the reference implementations the tests and the
+    golden tables compare against; no production module runs them."""
+    import ast
+    import pathlib
+
+    import autoner_spark
+
+    root = pathlib.Path(autoner_spark.__file__).parent
+    importers = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = ([a.name for a in node.names]
+                     if isinstance(node, ast.Import) else
+                     [node.module or "", *(a.name for a in node.names)]
+                     if isinstance(node, ast.ImportFrom) else [])
+            if any(n == "oracle" or n.endswith(".oracle") for n in names):
+                importers.add(path.relative_to(root).as_posix())
+    assert importers == {"golden.py"}
+
+
 def test_unknown_tokenizer_fails_on_the_driver(spark, trie):
     sc = spark.sparkContext
     group = "unknown-tokenizer"

@@ -10,7 +10,9 @@ the C++ signature does. Spark-level parity vs the oracle is covered by
 tests/test_tagger_spark.py and tests/test_bc5cdr.py, which route through
 this engine. Turns of 1k to 100k tokens, alone and inside a batch of short
 turns, are checked against ``oracle.tag_turn`` directly, and the batch
-memory they take is bounded."""
+memory they take is bounded. The labels and markup emitters are checked
+against the oracle's readable references, on their quirks and on random
+input."""
 
 import functools
 import random
@@ -20,10 +22,21 @@ import pyarrow as pa
 import pytest
 
 from autoner_spark import synth
-from autoner_spark.dictionary import build_trie
-from autoner_spark.oracle import tag_turn
+from autoner_spark.dictionary import DictionarySpec, build_trie
+from autoner_spark.golden import golden_labels
+from autoner_spark.oracle import (
+    extract_mentions,
+    parse_marked_line,
+    segment_dp,
+    tag_turn,
+)
 from autoner_spark.tagger import compile_trie, tag_tokens_compiled
-from autoner_spark.tagvec import compile_vec, tag_record_batch
+from autoner_spark.tagvec import (
+    compile_vec,
+    label_record_batch,
+    markup_record_batch,
+    tag_record_batch,
+)
 from autoner_spark.textutil import simple_tokenize_non_sep, tokenize_turn
 
 EDGE_ROWS = [
@@ -58,8 +71,8 @@ def oracle_tag(rows, trie, weight, tokenize=tokenize_turn):
             for m in tag_turn(tokenize(r["text"]), trie, weight)]
 
 
-def vec_tag(rows, vec, tokenizer="whitespace"):
-    batch = pa.RecordBatch.from_arrays(
+def _batch(rows):
+    return pa.RecordBatch.from_arrays(
         [
             pa.array([r["conv_id"] for r in rows], pa.string()),
             pa.array([r["turn_idx"] for r in rows], pa.int32()),
@@ -67,7 +80,10 @@ def vec_tag(rows, vec, tokenizer="whitespace"):
         ],
         names=["conv_id", "turn_idx", "text"],
     )
-    out = tag_record_batch(batch, vec, tokenizer)
+
+
+def vec_tag(rows, vec, tokenizer="whitespace", emit=tag_record_batch):
+    out = emit(_batch(rows), vec, tokenizer)
     return list(
         zip(
             out.column(0).to_pylist(),
@@ -306,3 +322,164 @@ def test_long_turn_batch_memory_is_bounded():
     finally:
         tracemalloc.stop()
     assert peak < 32 * 2**20, f"peak traced memory {peak / 2**20:.0f} MiB"
+
+
+# ---------------------------------------------------------------------------
+# Tie-or-Break labels and phrase markup: the emitters vs the oracle
+# ---------------------------------------------------------------------------
+
+# synth's dictionary plus single-char separator surfaces, core and full,
+# whose segments the labels skip
+_SEP_SPEC = DictionarySpec(
+    core=synth.dict_spec().core + [("Sep", "-")],
+    full=synth.dict_spec().full + [",", "("],
+    stopwords=synth.dict_spec().stopwords,
+)
+_WORDS = ["hash", "join", "sort", "merge", "table", "scan", "window", "agg",
+          "shuffle", "filter", "big", "small", "row", "group", "the",
+          "vector", "stream", "count", "query", "plan", "fast", "by", "slow",
+          "batch", "clock", "HASH", "JOIN", "WINDOW", "zz", "\n", ",", "-",
+          "(", "."]
+
+
+def _soup(rng, n_tok):
+    return " ".join(rng.choice(_WORDS) for _ in range(n_tok))
+
+
+@functools.lru_cache(maxsize=None)
+def _sep_kb():
+    trie = build_trie(_SEP_SPEC)
+    return trie, compile_vec(compile_trie(trie))
+
+
+def _label_rows():
+    rng = random.Random(17)
+    rows = [{"conv_id": "s", "turn_idx": i,
+             "text": _soup(rng, rng.randrange(0, 40))} for i in range(2000)]
+    rows[5]["text"] = ""
+    rows[6]["text"] = None
+    rows[7]["text"] = "  \n "
+    for at, n_tok in ((700, 1_000), (1400, 20_000)):
+        rows.insert(at, {"conv_id": "long", "turn_idx": n_tok,
+                         "text": _soup(rng, n_tok)})
+    return rows
+
+
+def test_label_fixture_covers_the_quirks():
+    """The labels fixture holds every case the inclusive-r write and the
+    sentinel drop meet: FILTERED segments followed by an entity, by a
+    non-match and by the turn end, skipped separator segments, and "\\n"
+    tokens inside turns."""
+    trie = _sep_kb()[0]
+    seen = set()
+    for r in _label_rows():
+        toks = [t for t in (r["text"] or "").split(" ") if t]
+        segs = segment_dp(toks + ["\n"], trie)
+        for a, b in zip(segs, segs[1:]):
+            if a.type == "__FILTERED__" and b.type not in ("", "__FILTERED__"):
+                seen.add("filtered then entity")
+            if a.type == "__FILTERED__" and b.type == "" and b.r <= len(toks):
+                seen.add("filtered then non-match")
+            if a.type == "__FILTERED__" and a.r == len(toks):
+                seen.add("filtered at turn end")
+            if a.type and len(a.token) == 1 and a.token != "\n":
+                seen.add("separator segment")
+        if "\n" in toks:
+            seen.add("newline token")
+    assert seen == {"filtered then entity", "filtered then non-match",
+                    "filtered at turn end", "separator segment",
+                    "newline token"}
+
+
+def test_label_parity_with_oracle():
+    """``label_record_batch`` gives one row per source row whose labels
+    are ``golden_labels``' (``oracle.segment_dp``, ``get_boundary``,
+    ``get_types`` over the turn and its sentinel), for short and empty
+    turns and turns of 1k and 20k tokens in one batch."""
+    rows = _label_rows()
+    trie, vec = _sep_kb()
+    out = label_record_batch(_batch(rows), vec).to_pylist()
+    assert [(r["conv_id"], r["turn_idx"]) for r in out] == [
+        (r["conv_id"], r["turn_idx"]) for r in rows]
+    got = [(r["conv_id"], r["turn_idx"], i, tok, b, ty, s)
+           for r in out
+           for i, (tok, b, ty, s) in enumerate(zip(
+               r["tokens"], r["boundary"], r["types"], r["safe"]))]
+    assert got == golden_labels(
+        [(r["conv_id"], r["turn_idx"], r["text"]) for r in rows], trie)
+
+
+_MARKUP_QUIRKS = [
+    "run a <phrase>hash join</phrase> now",
+    # a stray close looks the last phrase up again, ending at itself
+    "a <phrase>hash join</phrase> b c</phrase>",
+    "</phrase> a <phrase>stream</phrase> </phrase> x </phrase>",
+    # markers stripped again until none is left
+    "<phr<phrase>ase>hash join</phrase>",
+    "<phrase>hash join</phr</phrase>ase>",
+    # markup-only tokens are empty tokens
+    "x <phrase> hash join </phrase> y",
+    "<phrase></phrase> <phrase>stream</phrase>",
+    # a phrase opened inside an open phrase restarts it
+    "<phrase>big <phrase>hash join</phrase>",
+    # full-dictionary phrases are known, as __FILTERED__; unknown ones
+    # and separators give no mention
+    "<phrase>fast scan</phrase> <phrase>mystery thing</phrase> "
+    "<phrase>-</phrase> <phrase>,</phrase>",
+    "<phrase>HASH JOIN</phrase> <phrase>Hash Join</phrase>",
+    "<phrase>window agg</phrase><phrase>shuffle</phrase>",
+    "", None, "   ",
+]
+
+
+def _marked(rng):
+    """A marked line: fragments (dictionary surfaces or words), each
+    perhaps wrapped in markers, with stray, nested and in-token markers;
+    an open phrase is closed at the end."""
+    surfaces = [s for _, s in _SEP_SPEC.core] + _SEP_SPEC.full
+    toks = []
+    for _ in range(rng.randrange(0, 12)):
+        frag = (rng.choice(surfaces) if rng.random() < 0.5
+                else rng.choice(_WORDS)).split(" ")
+        if rng.random() < 0.5:
+            frag[0] = "<phrase>" + frag[0]
+            frag[-1] += "</phrase>"
+        if rng.random() < 0.1:
+            frag.append(rng.choice(["</phrase>", "<phrase>", "b</phrase>",
+                                    "<phr<phrase>ase>", "<phrase>-"]))
+        toks += frag
+    line = " ".join(toks)
+    try:
+        parse_marked_line(line, _sep_kb()[0])
+    except ValueError:
+        line += " </phrase>"
+    return line
+
+
+def _markup_rows():
+    rng = random.Random(23)
+    texts = _MARKUP_QUIRKS + [_marked(rng) for _ in range(3000)]
+    return [{"conv_id": "m", "turn_idx": i, "text": x}
+            for i, x in enumerate(texts)]
+
+
+def test_markup_parity_with_oracle():
+    """``markup_record_batch`` emits ``extract_mentions`` of
+    ``parse_marked_line`` per turn, in order, on the quirk lines and on
+    random marked lines."""
+    rows = _markup_rows()
+    trie, vec = _sep_kb()
+    want = [(r["conv_id"], r["turn_idx"], m.begin_tok, m.end_tok, m.surface,
+             m.entity_type)
+            for r in rows if r["text"]
+            for m in extract_mentions(*parse_marked_line(r["text"], trie))]
+    assert vec_tag(rows, vec, emit=markup_record_batch) == want
+    assert ("m", 1, 3, 5, "b c", "Operator") in want
+    assert sum(m[0] == "m" and m[1] >= len(_MARKUP_QUIRKS) for m in want) > 500
+
+
+def test_markup_unclosed_phrase_raises():
+    rows = [{"conv_id": "m", "turn_idx": 0, "text": "a <phrase>b</phrase>"},
+            {"conv_id": "m", "turn_idx": 1, "text": "a <phrase>hash join"}]
+    with pytest.raises(ValueError, match="in line: 'a <phrase>hash join'"):
+        vec_tag(rows, _sep_kb()[1], emit=markup_record_batch)

@@ -66,13 +66,15 @@ def run(spark, args: argparse.Namespace) -> dict:
     with every bucket done submits no Spark job. Never stops ``spark``."""
     from autoner_spark import synth, tagvec
     from autoner_spark.catalog import TableCatalog
+    from autoner_spark.dictionary import build_trie
     from autoner_spark.lineage import (
         bucketize_transcripts,
         completed_buckets,
         read_lineage,
         tag_buckets,
     )
-    from autoner_spark.triples import broadcast_automaton
+    from autoner_spark.tagger import broadcast_automaton
+    from autoner_spark.triples import dict_link_pairs
 
     if args.dedup and not args.sf_dir:
         raise SystemExit("--dedup requires --sf-dir (documents corpus)")
@@ -96,7 +98,8 @@ def run(spark, args: argparse.Namespace) -> dict:
     # own table once per run.
     triples = tag_buckets(
         spark, args.out, args.buckets, "triples",
-        lambda: broadcast_automaton(spark, spec),
+        lambda: broadcast_automaton(spark, build_trie(spec),
+                                    dict_link_pairs(spec)),
         tagvec.triple_record_batch, tagvec.TRIPLES_SCHEMA)
     cat = TableCatalog(spark, args.out)
     if cat.use_iceberg:
