@@ -42,6 +42,13 @@ worker's path (~0.25 s of CPU per task with zipped PySpark 4.1 on CPython
 3.11, 4-vCPU x86-64 VM).
 The executor closure therefore calls ``pyworker.install()`` first, so the
 reused worker re-reads only archives that changed.
+A task's memory is bounded whatever the input's shape: ``tag_stage`` cuts
+each Arrow batch into row slices of at most ``SLICE_TEXT_BYTES`` of text,
+so one emitter call's NumPy tables stay within about 24 MB however many
+2k-token tool-output turns a batch holds, and the worker loads no pandas
+(tagvec crosses to NumPy over buffers). On the bench's chain corpus a
+tagging worker peaks at about 113 MB resident, a bare ``mapInArrow``
+worker at about 89 MB.
 """
 
 from __future__ import annotations
@@ -67,6 +74,13 @@ _ID_COLS = ("conv_id", "turn_idx")
 # hashed once per turn (vocab lookup); the DP walk then runs on small-int
 # dict lookups — less string hashing and less memory traffic in the hot loop.
 _KIND_NONE, _KIND_ENTITY, _KIND_FILTERED = 0, 1, 2
+
+# text bytes one emitter call takes at most: ``tag_stage`` cuts a longer
+# batch into row slices, since tagvec's memory grows with the tokens of
+# the batch (about 31 MiB of NumPy tables per MiB of 2k-token turns at the
+# bench dictionary) and a batch is otherwise bounded only by
+# ``maxRecordsPerBatch`` rows. Well above the bench's batches (< 0.45 MiB)
+SLICE_TEXT_BYTES = 768 * 1024
 
 NEWLINE_ID = -2  # sentinel id for "\n" (never a trie edge; breaks the walk)
 UNKNOWN_ID = -1  # token absent from the trie vocabulary
@@ -240,13 +254,15 @@ def tag_stage(
     """One narrow ``mapInArrow`` over ``src`` (conv_id, turn_idx, text,
     *passthrough) running ``emit`` (a ``tagvec`` emitter, output
     ``schema`` then the passthrough columns) with the broadcast compiled
-    automaton ``bc_vec``."""
+    automaton ``bc_vec``, on row slices of each batch of at most
+    ``SLICE_TEXT_BYTES`` of text (``tagvec.text_slices``)."""
 
     def tag_arrow(batches):
         pyworker.install()
         vec = bc_vec.value
         for batch in batches:
-            yield emit(batch, vec, tokenizer)
+            for part in tagvec.text_slices(batch, SLICE_TEXT_BYTES):
+                yield emit(part, vec, tokenizer)
 
     return src.mapInArrow(tag_arrow, stage_schema(src.schema, schema))
 

@@ -46,14 +46,28 @@ over a whole Arrow batch at once instead of one Python token at a time:
   the DP, finding ``<phrase>`` markers with string kernels and looking
   each phrase up as an exact trie path (``oracle.parse_marked_line``).
 
+Every emitter crosses between Arrow and NumPy only through ``_np`` (the
+array's buffers read at its offset) and ``_pa`` (``Array.from_buffers``),
+and passes Arrow kernels the string literals ``compile_vec`` built as
+1-element arrays: ``pa.array``, ``pa.scalar``, ``Array.to_numpy``, a
+Python literal as a kernel argument and an unpickled ``pa.Scalar`` all
+import pandas, which the tagger never uses
+(tests/test_tagvec_arrow.py).
+
 Parity with the scalar path and the oracle's references is pinned by
 tests/test_tagvec_parity.py (and transitively by the oracle/binary parity
 suite, which runs the Spark tagger through this engine).
 
 Scale note: everything here is per-batch and executor-side, and memory is
 O(tokens in the batch): the DP tables hold one cell per token of a DP row
-plus one per row, never rows x longest turn. The only task-lifetime state
-is the compiled transition table (built once per broadcast value).
+plus one per row, never rows x longest turn, and ``tagger.tag_stage``
+hands an emitter at most ``tagger.SLICE_TEXT_BYTES`` of text per call
+(``text_slices``). The only task-lifetime state is the compiled
+transition table (built once per broadcast value). A worker's resident
+set is mostly libraries: on the bench's chain corpus a bare
+``mapInArrow`` worker (pyarrow and NumPy) peaks at about 89 MB and a
+tagging worker at about 113 MB, where loading pandas cost another 32 MB
+(PySpark 4.1, pyarrow 16.1, CPython 3.11).
 """
 
 from __future__ import annotations
@@ -130,7 +144,48 @@ LABELS_SCHEMA = pa.schema(
     ]
 )
 
-_PREDS = pa.array(["has_type", "mentioned_in"], pa.string())
+# the NumPy dtype of each fixed-width Arrow type the emitters cross with
+# (``DataType.to_pandas_dtype`` imports pandas)
+_DTYPE = {pa.int8(): np.int8, pa.int32(): np.int32, pa.int64(): np.int64,
+          pa.float64(): np.float64}
+
+
+def _bits(buf: pa.Buffer, offset: int, n: int) -> np.ndarray:
+    """Bits ``offset`` to ``offset + n`` of an Arrow bitmap, as bools."""
+    return np.unpackbits(np.frombuffer(buf, np.uint8), count=offset + n,
+                         bitorder="little")[offset:].view(bool)
+
+
+def _np(arr: pa.Array, fill: Any) -> np.ndarray:
+    """``arr`` (a ``_DTYPE`` type or bool) as NumPy, read from its buffers
+    at its offset: booleans unpacked, NULL slots set to ``fill``. A view
+    of the values when they are fixed-width and have no NULL."""
+    boolean = arr.type == pa.bool_()
+    n, off = len(arr), arr.offset
+    if n == 0:
+        return np.empty(0, bool if boolean else _DTYPE[arr.type])
+    validity, data = arr.buffers()[:2]
+    out = (_bits(data, off, n) if boolean
+           else np.frombuffer(data, _DTYPE[arr.type], count=off + n)[off:])
+    if arr.null_count:
+        out = np.where(_bits(validity, off, n), out, out.dtype.type(fill))
+    return out
+
+
+def _pa(values: np.ndarray, type: pa.DataType,
+        mask: np.ndarray | None = None) -> pa.Array:
+    """``values`` as an Arrow array of ``type`` (a ``_DTYPE`` type or
+    bool), NULL where ``mask``; over the values' own memory when they are
+    contiguous and of ``type``'s dtype."""
+    if type == pa.bool_():
+        data = np.packbits(values, bitorder="little")
+    else:
+        data = np.ascontiguousarray(values, _DTYPE[type])
+    nulls = 0 if mask is None else int(np.count_nonzero(mask))
+    validity = (pa.py_buffer(np.packbits(~mask, bitorder="little"))
+                if nulls else None)
+    return pa.Array.from_buffers(type, len(values),
+                                 [validity, pa.py_buffer(data)], nulls)
 
 
 def compile_vec(compiled: dict[str, Any],
@@ -151,6 +206,10 @@ def compile_vec(compiled: dict[str, Any],
     dictionary surface) pairs, ``triples.dict_link_pairs``) that share
     the norm. ``type_off``/``type_vals`` split each comma-joined type set
     into its types (CSR).
+
+    The string literals the emitters pass to Arrow kernels are built here
+    too, as 1-element arrays that a worker indexes (``[0]``): building a
+    ``pa.Scalar`` or unpickling one imports pandas, as does ``pa.array``.
     """
     vocab: dict[str, int] = compiled["vocab"]
     tokens = list(vocab.keys())
@@ -244,6 +303,7 @@ def compile_vec(compiled: dict[str, Any],
     g = pc.fill_null(pc.index_in(norm_a, value_set=pa.array(
         list(first), pa.string())), -1).to_numpy()
     type_lists = [ts.split(",") for ts in type_strs]
+    types = pa.array(type_strs, pa.string())
     return {
         "value_set": pa.array(tokens, pa.string()),
         "pos_to_id": pos_to_id,
@@ -255,7 +315,9 @@ def compile_vec(compiled: dict[str, Any],
         "kind": np.asarray(kinds, dtype=np.int8),
         "tsid": np.asarray(tsids, dtype=np.int64),
         "haskid": np.asarray(haskid, dtype=bool),
-        "types": pa.array(type_strs, pa.string()),
+        "types": types,
+        # label types by ``tsid + 1``: 0 is "None", outside any entity
+        "label_types": pa.concat_arrays([pa.array(["None"]), types]),
         "type_off": np.cumsum([0] + [len(t) for t in type_lists]),
         "type_vals": pa.array([t for ts in type_lists for t in ts],
                               pa.string()),
@@ -268,13 +330,38 @@ def compile_vec(compiled: dict[str, Any],
         "link_vals": pa.array([x for _, x in pairs], pa.string()),
         "max_depth": max_depth,
         "skip_set": pa.array(_SKIP_CHARS, pa.string()),
+        "preds": pa.array(["has_type", "mentioned_in"], pa.string()),
+        "empty": pa.array([""], pa.string()),
+        "hash": pa.array(["#"], pa.string()),
+        "space": pa.array([" "], pa.string()),
     }
+
+
+def text_slices(batch: pa.RecordBatch,
+                max_bytes: int) -> Iterable[pa.RecordBatch]:
+    """``batch`` (conv_id, turn_idx, text, ...) cut into consecutive row
+    slices whose text sums to at most ``max_bytes`` bytes each, a longer
+    turn being a slice of its own. A turn never spans two slices and no
+    emitter looks across turns, so emitting slice by slice gives the
+    batch's output."""
+    ends = np.cumsum(_np(pc.binary_length(batch.column(2)), 0),
+                     dtype=np.int64)
+    if not len(ends) or ends[-1] <= max_bytes:
+        yield batch
+        return
+    cum = np.concatenate(([0], ends))
+    lo = 0
+    while lo < batch.num_rows:
+        hi = max(int(np.searchsorted(cum, cum[lo] + max_bytes,
+                                     side="right")) - 1, lo + 1)
+        yield batch.slice(lo, hi - lo)
+        lo = hi
 
 
 def _token_ids(flat: pa.Array, vec: dict[str, Any]) -> np.ndarray:
     """Map flat tokens to trie token ids (UNKNOWN -> -1, "\\n" -> -2)."""
-    idx = pc.fill_null(pc.index_in(flat, value_set=vec["value_set"]), -1)
-    idx_np = idx.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    idx_np = _np(pc.index_in(flat, value_set=vec["value_set"]),
+                 -1).astype(np.int64)
     safe = np.maximum(idx_np, 0)
     return np.where(idx_np >= 0, vec["pos_to_id"][safe], np.int64(-1))
 
@@ -533,7 +620,7 @@ def _tokens(batch: pa.RecordBatch,
     flat string array and each source row's offsets into it (``nrows + 1``
     of them). ``tokenizer`` is one of TOKENIZER_NAMES; empty tokens are
     dropped, and NULL or empty text has none."""
-    text = pc.coalesce(batch.column(2), pa.scalar("", pa.string()))
+    text = batch.column(2)
     if tokenizer == "charclass":
         text = pc.replace_substring(
             pc.replace_substring_regex(text, _CHARCLASS_SEP_RE, " "),
@@ -541,20 +628,18 @@ def _tokens(batch: pa.RecordBatch,
     elif tokenizer != "whitespace":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
 
+    # a NULL text splits into a NULL list: no tokens
     toks_list = pc.split_pattern(text, " ")
-    counts_raw = pc.list_value_length(toks_list).to_numpy(
-        zero_copy_only=False
-    ).astype(np.int64, copy=False)
+    counts_raw = _np(pc.list_value_length(toks_list), 0)
     flat_raw = pc.list_flatten(toks_list)
-    offsets_raw = np.concatenate(([0], np.cumsum(counts_raw)))
+    offsets_raw = np.concatenate(([0], np.cumsum(counts_raw, dtype=np.int64)))
 
     # drop empty tokens ("a  b".split(" ") -> ["a", "", "b"])
-    keep = pc.not_equal(flat_raw, "")
-    keep_np = keep.to_numpy(zero_copy_only=False)
-    if keep_np.all():
+    keep = _np(pc.binary_length(flat_raw), 0) > 0
+    if keep.all():
         return flat_raw, offsets_raw
-    cm = np.concatenate(([0], np.cumsum(keep_np.astype(np.int64))))
-    return pc.filter(flat_raw, keep), cm[offsets_raw]
+    cm = np.concatenate(([0], np.cumsum(keep, dtype=np.int64)))
+    return pc.filter(flat_raw, _pa(keep, pa.bool_())), cm[offsets_raw]
 
 
 def _segments(
@@ -627,9 +712,7 @@ def _segments(
     flat_start = offs[t_orig] + s_b
     single = (s_e - s_b) == 1
     if single.any():
-        skip_flags = pc.is_in(
-            flat, value_set=vec["skip_set"]
-        ).to_numpy(zero_copy_only=False)
+        skip_flags = _np(pc.is_in(flat, value_set=vec["skip_set"]), False)
         drop = single & skip_flags[flat_start]
         if drop.any():
             keep_m = ~drop
@@ -664,14 +747,14 @@ def _mention_columns(
 ) -> list[pa.Array]:
     """OUT_SCHEMA's columns for segments (source row, begin, end, state):
     the ids by source row, the surface and type set by state."""
-    t_idx = pa.array(t, pa.int64())
+    t_idx = _pa(t, pa.int64())
     return [
         batch.column(0).take(t_idx),
         pc.cast(batch.column(1).take(t_idx), pa.int32()),
-        pa.array(b.astype(np.int32), pa.int32()),
-        pa.array(e.astype(np.int32), pa.int32()),
-        vec["surface"].take(pa.array(st, pa.int64())),
-        vec["types"].take(pa.array(vec["tsid"][st], pa.int64())),
+        _pa(b, pa.int32()),
+        _pa(e, pa.int32()),
+        vec["surface"].take(_pa(st, pa.int64())),
+        vec["types"].take(_pa(vec["tsid"][st], pa.int64())),
     ]
 
 
@@ -702,7 +785,7 @@ def tag_record_batch(
     record batch (OUT_SCHEMA, then the passthrough columns). Every column
     after ``text`` is copied onto each mention from its source row."""
     t, b, e, st = _mentions(batch, vec, tokenizer)
-    t_idx = pa.array(t, pa.int64())
+    t_idx = _pa(t, pa.int64())
     return pa.RecordBatch.from_arrays(
         [
             *_mention_columns(batch, vec, t, b, e, st),
@@ -727,10 +810,10 @@ def link_record_batch(
     span = (e - b).astype(np.float64)
     return pa.RecordBatch.from_arrays(
         [
-            vec["norm"].take(pa.array(st, pa.int64())),
+            vec["norm"].take(_pa(st, pa.int64())),
             *_mention_columns(batch, vec, t, b, e, st),
-            pa.array(span * span, pa.float64()),
-            vec["link_vals"].take(pa.array(link, pa.int64(), mask=link < 0)),
+            _pa(span * span, pa.float64()),
+            vec["link_vals"].take(_pa(link, pa.int64(), mask=link < 0)),
         ],
         schema=LINKED_SCHEMA,
     )
@@ -760,18 +843,18 @@ def triple_record_batch(
     # where every input is NULL, so the NULL cases are coalesced instead.)
     conv = batch.column(0)
     turn = pc.cast(batch.column(1), pa.string())
-    where = pc.coalesce(pc.binary_join_element_wise(conv, turn, "#"), conv,
-                        turn, pa.scalar("", pa.string()))
+    where = pc.coalesce(pc.binary_join_element_wise(conv, turn,
+                                                    vec["hash"][0]),
+                        conv, turn, vec["empty"][0])
     types = vec["type_vals"]
     obj_idx = np.where(mentioned, len(types) + t[row],
                        type_off[ts[row]] + rank)
-    t_idx = pa.array(t[row], pa.int64())
+    t_idx = _pa(t[row], pa.int64())
     return pa.RecordBatch.from_arrays(
         [
-            vec["subj"].take(pa.array(st[row], pa.int64())),
-            _PREDS.take(pa.array(mentioned.astype(np.int8))),
-            pa.concat_arrays([types, where]).take(
-                pa.array(obj_idx, pa.int64())),
+            vec["subj"].take(_pa(st[row], pa.int64())),
+            vec["preds"].take(_pa(mentioned, pa.int8())),
+            pa.concat_arrays([types, where]).take(_pa(obj_idx, pa.int64())),
             conv.take(t_idx),
             pc.cast(batch.column(1).take(t_idx), pa.int32()),
         ],
@@ -810,16 +893,16 @@ def label_record_batch(
     type_idx = np.zeros(len(boundary), dtype=np.int64)
     type_idx[pos] = vec["tsid"][st[ent]][own] + 1
 
-    lists = pa.array(offs, pa.int32())
+    lists = _pa(offs, pa.int32())
     return pa.RecordBatch.from_arrays(
         [
             batch.column(0),
             pc.cast(batch.column(1), pa.int32()),
             pa.ListArray.from_arrays(lists, flat),
-            pa.ListArray.from_arrays(lists, pa.array(boundary)),
-            pa.ListArray.from_arrays(lists, pa.concat_arrays(
-                [pa.array(["None"]), vec["types"]]).take(type_idx)),
-            pa.ListArray.from_arrays(lists, pa.array(boundary != 0)),
+            pa.ListArray.from_arrays(lists, _pa(boundary, pa.int32())),
+            pa.ListArray.from_arrays(lists, vec["label_types"].take(
+                _pa(type_idx, pa.int64()))),
+            pa.ListArray.from_arrays(lists, _pa(boundary != 0, pa.bool_())),
         ],
         schema=LABELS_SCHEMA,
     )
@@ -834,7 +917,7 @@ def _strip_marker(tokens: pa.Array,
     while pc.any(left).as_py():
         tokens = pc.replace_substring(tokens, marker, "")
         left = pc.match_substring(tokens, marker)
-    return tokens, held.to_numpy(zero_copy_only=False)
+    return tokens, _np(held, False)
 
 
 def _exact_paths(ids: np.ndarray, first: np.ndarray, n: np.ndarray,
@@ -900,9 +983,8 @@ def markup_record_batch(
     real = np.flatnonzero(shut)
     n = real - last(opens)[real] + 1
     st = _exact_paths(_token_ids(raw, vec), real - n + 1, n, vec)
-    sep = (n == 1) & pc.is_in(raw.take(pa.array(real, pa.int64())),
-                              value_set=vec["skip_set"]).to_numpy(
-                                  zero_copy_only=False)
+    sep = (n == 1) & _np(pc.is_in(raw.take(_pa(real, pa.int64())),
+                                  value_set=vec["skip_set"]), False)
     entity = (st >= 0) & (vec["kind"][st] == _KIND_ENTITY) & ~sep
 
     # every close looks up its turn's last phrase closed inside one
@@ -914,10 +996,10 @@ def markup_record_batch(
     begin = end - n[k]
     own, rank = _expand(n[k])
     spans = pa.ListArray.from_arrays(
-        pa.array(np.concatenate(([0], np.cumsum(n[k]))), pa.int32()),
-        raw.take(pa.array(begin[own] + rank, pa.int64())))
+        _pa(np.concatenate(([0], np.cumsum(n[k]))), pa.int32()),
+        raw.take(_pa(begin[own] + rank, pa.int64())))
     cols = _mention_columns(batch, vec, t, begin - offs[t], end - offs[t],
                             st[k])
     # the spanned tokens: after a stray close they are not the phrase's
-    cols[4] = pc.binary_join(spans, " ")
+    cols[4] = pc.binary_join(spans, vec["space"][0])
     return pa.RecordBatch.from_arrays(cols, schema=OUT_SCHEMA)

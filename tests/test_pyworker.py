@@ -1,6 +1,6 @@
 """pyworker: Spark's per-task import-cache flush re-reads a zip archive only
 when the archive changed, and every package Python-UDF stage's workers carry
-the install.
+the install. The tagging stages' workers never load pandas.
 """
 
 import ast
@@ -18,7 +18,10 @@ from pyspark.sql import functions as F
 
 from autoner_spark import dedup, pyworker, similarity, synth
 from autoner_spark.dictionary import build_trie
+from autoner_spark.labels import label_transcripts
+from autoner_spark.markup import tag_marked_transcripts
 from autoner_spark.tagger import tag_transcripts
+from autoner_spark.triples import build_kg
 
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "autoner_spark"
@@ -176,38 +179,50 @@ def _vectors(spark):
                 F.lit(1.0)).alias("embedding"))
 
 
-def _assert_stage_workers_installed(spark, source, stage):
-    """Every Python worker that ran ``stage(source)`` has the install. A
-    private environment variable gives the stage and the probe their own
-    worker pool (Spark keys Python worker pools by environment, captured
-    when the stage is built), so the probe's first task runs in a worker
-    that only ever ran the stage; ``source`` is built outside that pool."""
+def _assert_stage_workers_installed(spark, source, stage,
+                                    pandas_free=False):
+    """Every Python worker that ran ``stage(source)`` has the install (and,
+    with ``pandas_free``, has not imported pandas). A private environment
+    variable gives the stage and the probe their own worker pool (Spark
+    keys Python worker pools by environment, captured when the stage is
+    built), so the probe's first task runs in a worker that only ever ran
+    the stage; ``source`` is built outside that pool. The probe builds its
+    row over Arrow buffers, as ``pa.array`` would import pandas itself."""
     sc = spark.sparkContext
 
     def probe(batches):
+        import numpy as np
         import pyarrow as pa
 
         for _ in batches:
             pass
         flush = zipimport.zipimporter.invalidate_caches
-        installed = getattr(sys.modules.get("autoner_spark.pyworker"),
-                            "_invalidate_caches", None) is flush
-        ran = any(m.startswith("autoner_spark") for m in sys.modules)
-        yield pa.RecordBatch.from_pydict(
-            {"pid": [os.getpid()], "ran": [ran], "installed": [installed]})
+        row = {
+            "pid": os.getpid(),
+            "ran": any(m.startswith("autoner_spark") for m in sys.modules),
+            "installed": getattr(sys.modules.get("autoner_spark.pyworker"),
+                                 "_invalidate_caches", None) is flush,
+            "pandas": "pandas" in sys.modules,
+        }
+        yield pa.RecordBatch.from_arrays(
+            [pa.Array.from_buffers(pa.int64(), 1, [None, pa.py_buffer(
+                np.array([v], np.int64))]) for v in row.values()],
+            names=list(row))
 
     key = "AUTONER_TEST_WORKER_POOL"
     sc.environment[key] = uuid.uuid4().hex
     try:
         out = stage(source)
         probed = spark.range(8, numPartitions=8).mapInArrow(
-            probe, "pid long, ran boolean, installed boolean")
+            probe, "pid long, ran long, installed long, pandas long")
     finally:
         del sc.environment[key]
     assert out.count() > 0
     rows = probed.collect()
     assert any(r.ran for r in rows), rows
     assert all(r.installed for r in rows if r.ran), rows
+    if pandas_free:
+        assert not any(r.pandas for r in rows if r.ran), rows
 
 
 @pytest.mark.parametrize("tokenizer,passthrough", [
@@ -216,13 +231,42 @@ def _assert_stage_workers_installed(spark, source, stage):
     ("whitespace", ("ts",)),  # passthrough column (streaming)
 ])
 def test_tagger_workers_carry_the_install(spark, tokenizer, passthrough):
+    """The tagger's workers carry the install and never import pandas."""
     transcripts = synth.synth_transcripts(spark, 40, partitions=8).withColumn(
         "ts", F.lit(0))
     trie = build_trie(synth.dict_spec())
     _assert_stage_workers_installed(
         spark, transcripts,
         lambda t: tag_transcripts(t, trie, tokenizer=tokenizer,
-                                  passthrough=passthrough))
+                                  passthrough=passthrough),
+        pandas_free=True)
+
+
+def _kg_triples(t):
+    return build_kg(t.sparkSession, t, synth.dict_spec())["triples"]
+
+
+def _marked(t):
+    """Each synth turn with its "hash join"s and "stream"s marked as
+    AutoPhrase phrases."""
+    return t.withColumn("text", F.regexp_replace(
+        "text", "(hash join|stream)", "<phrase>$1</phrase>"))
+
+
+@pytest.mark.parametrize("make_input,stage", [
+    (lambda t: t, _kg_triples),
+    (lambda t: t, lambda t: label_transcripts(
+        t, build_trie(synth.dict_spec()))),
+    (_marked, lambda t: tag_marked_transcripts(
+        t, build_trie(synth.dict_spec()))),
+], ids=["build_kg_triples", "labels", "markup"])
+def test_tagging_workers_never_import_pandas(spark, make_input, stage):
+    """The workers of every other tagvec emitter's stage carry the install
+    and load no pandas: tagvec crosses between Arrow and NumPy over
+    buffers."""
+    _assert_stage_workers_installed(
+        spark, make_input(synth.synth_transcripts(spark, 40, partitions=8)),
+        stage, pandas_free=True)
 
 
 @pytest.mark.parametrize("make_input,stage", [

@@ -30,12 +30,17 @@ from autoner_spark.oracle import (
     segment_dp,
     tag_turn,
 )
-from autoner_spark.tagger import compile_trie, tag_tokens_compiled
+from autoner_spark.tagger import (
+    SLICE_TEXT_BYTES,
+    compile_trie,
+    tag_tokens_compiled,
+)
 from autoner_spark.tagvec import (
     compile_vec,
     label_record_batch,
     markup_record_batch,
     tag_record_batch,
+    text_slices,
 )
 from autoner_spark.textutil import simple_tokenize_non_sep, tokenize_turn
 
@@ -322,6 +327,35 @@ def test_long_turn_batch_memory_is_bounded():
     finally:
         tracemalloc.stop()
     assert peak < 32 * 2**20, f"peak traced memory {peak / 2**20:.0f} MiB"
+
+
+def test_long_turn_batches_are_sliced_to_bounded_memory():
+    """2,000 turns of 2k tokens (21 MiB of text; one emitter call over
+    them all takes about 660 MB of tables) tagged slice by slice, as
+    ``tagger.tag_stage`` runs an emitter: each call stays within the same
+    32 MB of traced allocations as a 20k-token turn, and the mentions are
+    the unsliced call's."""
+    texts = [" ".join(synth.turn_row(90_000 + i, 0, min_frags=2_000,
+                                     rng_frags=1)["text"].split(" ")[:2_000])
+             for i in range(16)]
+    batch = _batch([{"conv_id": f"c{i % 16}", "turn_idx": i,
+                     "text": texts[i % 16]} for i in range(2_000)])
+    vec = _bench_kb()[1]
+    parts, peak = [], 0
+    tracemalloc.start()
+    try:
+        for part in text_slices(batch, SLICE_TEXT_BYTES):
+            # the worker sends each output on before the next call
+            base = tracemalloc.get_traced_memory()[0]
+            tracemalloc.reset_peak()
+            parts.append(tag_record_batch(part, vec))
+            peak = max(peak, tracemalloc.get_traced_memory()[1] - base)
+    finally:
+        tracemalloc.stop()
+    assert len(parts) > 20
+    assert peak < 32 * 2**20, f"peak traced memory {peak / 2**20:.0f} MiB"
+    assert pa.Table.from_batches(parts).equals(
+        pa.Table.from_batches([tag_record_batch(batch, vec)]))
 
 
 # ---------------------------------------------------------------------------
